@@ -72,15 +72,6 @@ def _shingle_expr(words: Column, n: int) -> Column:
     )
 
 
-def _md5_60_py(b: bytes) -> int:
-    """Leading 60 bits of md5 — python twin of :func:`md5_hash60`
-    (``digest()[:8]`` big-endian is the first 16 hex chars; ``>> 4``
-    drops the 16th, leaving exactly ``hexdigest()[:15]``)."""
-    import hashlib
-
-    return int.from_bytes(hashlib.md5(b).digest()[:8], "big") >> 4
-
-
 def _shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(id, sh_arr) — each document's distinct shingle set as ONE array row
     (zero-shuffle; the verification joins replicate arrays per candidate
@@ -117,6 +108,8 @@ def _sig_frame(
 
     from .text import _ID_PD_DTYPE, _shingle_rows, spread_partitions
 
+    if bands and not num_hashes:
+        raise ValueError("_sig_frame: bands requires num_hashes")
     id_type = df.schema[id_col].dataType.simpleString()
     id_dtype = _ID_PD_DTYPE.get(id_type, "object")
     if num_hashes:

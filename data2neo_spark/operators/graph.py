@@ -379,8 +379,8 @@ def khop_reachability(
     e = spread_partitions(e, "_s").persist()
     seed_nodes = seeds.select(F.col(seeds.columns[0]).alias("seed")).distinct()
 
-    from pyspark.sql import Observation
-
+    # ``reached`` is a lazy union of persisted layers (hop 0 = the seeds):
+    # each hop caches only its own new pairs, never a copy of the union
     reached = seed_nodes.select(
         "seed", F.col("seed").alias("node"), F.lit(0).cast("int").alias("min_hops")
     ).persist()
@@ -429,26 +429,15 @@ def khop_reachability(
             .distinct()
             .join(anti, ["seed", "node"], "left_anti")
             .withColumn("min_hops", F.lit(hop).cast("int"))
+            .persist()
         )
-        obs = Observation()
-        nxt = nxt.observe(obs, F.count(F.lit(1)).alias("n")).persist()
-        prev = reached
-        reached = reached.unionAll(nxt).persist()
-        reached.count()  # materialize before unpersisting parents
+        n = nxt.count()  # the layer's one job: materialize + frontier size
+        reached_n += n
+        reached = reached.unionAll(nxt)
         if checkpoint_dir is not None:
-            import os as _os
-
             reached.write.mode("overwrite").parquet(
                 _os.path.join(checkpoint_dir, f"khop_hop_{hop}")
             )
-        try:
-            n = obs.get["n"]  # frontier size observed for free on that job
-        except Exception:
-            # AQE empty-relation propagation can prune the CollectMetrics
-            # node (no metrics row); nxt is persisted, count is cheap
-            n = nxt.count()
-        reached_n += n
-        prev.unpersist()
         frontier = nxt.select("seed", "node")
     e.unpersist()
     return reached

@@ -1,8 +1,12 @@
-"""Compile all of the reference's own schema fixtures
-(/root/reference/tests/unit/core/resources/*.yaml) through our compiler —
-each must compile (or raise exactly like the reference)."""
+"""Compile the schema fixtures in tests/fixtures/*.yaml through our
+compiler — each must compile (or raise exactly like the reference). The
+fixtures are written from the DSL grammar and cover the cases the
+reference's own resources exercise: primary keys through nested wrappers,
+static and dynamic MATCH conditions, duplicated nodes and conflicting
+entity definitions."""
 
 import glob
+import os
 
 import pytest
 
@@ -13,7 +17,8 @@ from data2neo_spark import (
     Attribute,
 )
 
-FIXTURES = sorted(glob.glob("/root/reference/tests/unit/core/resources/*.yaml"))
+FIXTURE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
+FIXTURES = sorted(glob.glob(os.path.join(FIXTURE_DIR, "*.yaml")))
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -44,7 +49,7 @@ def test_compile_fixture(path):
 
 def test_primary_keys_fixture_details():
     compiled = compile_schema(
-        open("/root/reference/tests/unit/core/resources/primary_keys.yaml").read()
+        open(os.path.join(FIXTURE_DIR, "primary_keys.yaml")).read()
     )
     rules = {r.identifier: r for r in compiled["entity"].node_rules}
     assert rules["a"].primary_key is None
@@ -57,7 +62,7 @@ def test_primary_keys_fixture_details():
 
 def test_matcher_condition_fixture_details():
     compiled = compile_schema(
-        open("/root/reference/tests/unit/core/resources/matcher_condition.yaml").read()
+        open(os.path.join(FIXTURE_DIR, "matcher_condition.yaml")).read()
     )
     rels = compiled["entity"].rel_rules
     by_type = {}
@@ -74,7 +79,7 @@ def test_matcher_condition_fixture_details():
 
 def test_duplicated_nodes_fixture():
     compiled = compile_schema(
-        open("/root/reference/tests/unit/core/resources/duplicated_nodes.yaml").read()
+        open(os.path.join(FIXTURE_DIR, "duplicated_nodes.yaml")).read()
     )
     assert len(compiled["entity"].node_rules) == 3
     assert all(r.primary_key == "uid" for r in compiled["entity"].node_rules)

@@ -373,6 +373,11 @@ def test_minhash_affine_family_spread(spark, docs):
     assert len(set(sigs[0])) > 48   # the family produces spread values
 
 
+def test_sig_frame_bands_without_num_hashes_fails_at_plan_build(spark, docs):
+    with pytest.raises(ValueError, match="bands requires num_hashes"):
+        dedup._sig_frame(docs, "doc_id", "text", 3, bands=4)
+
+
 def test_tfidf_top_terms(spark, docs):
     from data2neo_spark.operators.text import tfidf_top_terms
 
