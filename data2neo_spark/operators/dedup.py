@@ -902,21 +902,23 @@ def duplicate_clusters(
     Kiveris et al. 2014 gives the same bound with a more intricate edge
     rewrite). Labels are persisted per round and the lineage is cut with
     localCheckpoint every 5 rounds so the plan can't grow unboundedly.
+    Raises ``RuntimeError`` when ``max_iter`` rounds pass without one that
+    changes no label: the labels would not be the components yet.
 
     The whole computation is expressible as a recursive min-reachability
     query, which is exactly how the DuckDB oracle replays it (WITH
     RECURSIVE), so even this iterative operator is value-hash verified.
 
-    ``checkpoint_dir`` makes a long run RESUMABLE (north-rule contract,
-    same spirit as the converter's store checkpoints): each round's label
-    table is written to ``<dir>/labels_round_<i>`` and a killed job
-    restarts from the highest complete round instead of round 0 — the
-    propagation is monotone (labels only decrease), so resuming from any
-    completed round is exact, and re-running a completed round is a no-op
-    merge. Disk writes replace the in-memory persist, which also bounds
-    lineage without localCheckpoint.
+    ``checkpoint_dir`` makes a long run RESUMABLE (operators/rounds.py):
+    each round's label table is written to ``<dir>/labels_round_<i>`` and
+    a killed job restarts from the highest complete round below
+    ``max_iter`` instead of round 0 — the propagation is monotone (labels
+    only decrease), so resuming from any completed round is exact. Disk
+    writes replace the in-memory persist, which also bounds lineage
+    without localCheckpoint.
     """
-    import os as _os
+    from . import rounds
+
     # symmetrize in ONE pass over the (possibly expensive) pairs plan: a
     # union of two selects would recompute the upstream dedup pipeline per
     # branch — the explode emits both directions from a single scan
@@ -933,26 +935,12 @@ def duplicate_clusters(
         .distinct()
         .persist()
     )
-    lab = edges.select(F.col("u").alias("v")).distinct().select(
+    done, lab = rounds.resume(
+        pairs.sparkSession, checkpoint_dir, "labels_round", max_iter
+    ) or (-1, edges.select(F.col("u").alias("v")).distinct().select(
         F.col("v"), F.col("v").alias("lab")
-    ).persist()
-    start_round = 0
-    if checkpoint_dir is not None:
-        spark = pairs.sparkSession
-        done = sorted(
-            int(d.rsplit("_", 1)[1])
-            for d in (_os.listdir(checkpoint_dir)
-                      if _os.path.isdir(checkpoint_dir) else [])
-            if d.startswith("labels_round_")
-            and _os.path.exists(_os.path.join(checkpoint_dir, d, "_SUCCESS"))
-        )
-        if done:
-            start_round = done[-1] + 1
-            lab.unpersist()
-            lab = spark.read.parquet(
-                _os.path.join(checkpoint_dir, f"labels_round_{done[-1]}")
-            )
-    for i in range(start_round, max_iter):
+    ).persist())
+    for i in range(done + 1, max_iter):
         flowed = edges.join(lab.withColumnRenamed("v", "u"), "u").select(
             F.col("v"), F.col("lab")
         )
@@ -987,15 +975,9 @@ def duplicate_clusters(
                 F.col("v"),
                 F.coalesce(F.col("_lab2"), F.col("lab")).alias("lab"),
             )
-        if checkpoint_dir is not None:
-            rdir = _os.path.join(checkpoint_dir, f"labels_round_{i}")
-            new_lab.write.mode("overwrite").parquet(rdir)
-            new_lab = pairs.sparkSession.read.parquet(rdir)
-        else:
-            new_lab = new_lab.persist()
-            if i > 0 and i % 5 == 0:
-                new_lab = new_lab.localCheckpoint(eager=False)
-            new_lab.count()
+        new_lab, _ = rounds.materialize(
+            new_lab, checkpoint_dir, "labels_round", i, cut=i > 0 and i % 5 == 0
+        )
         # non-blocking metric read (blocking Observation.get deadlocks for
         # CollectMetrics inside foreachBatch micro-batches — same guard as
         # core/converter._obs_value); metric unavailable → explicit count
@@ -1008,11 +990,17 @@ def duplicate_clusters(
                 .where(F.col("lab") != F.col("_old"))
                 .count()
             )
-        lab.unpersist()
+        rounds.release(lab)
         lab = new_lab
         if changed == 0:
             break
-    edges.unpersist()
+    else:
+        rounds.release(edges, lab)
+        raise RuntimeError(
+            f"duplicate_clusters did not converge within max_iter={max_iter}"
+            " rounds; raise max_iter (or keep jump=True)"
+        )
+    rounds.release(edges)
     return lab.select(F.col("v").alias("doc_id"), F.col("lab").alias("cluster_id"))
 
 

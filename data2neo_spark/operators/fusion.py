@@ -13,6 +13,8 @@ Algorithm (two-round weighted voting, deliberately the closed-form
 non-iterative variant so results are exactly replayable):
 
 1. claims are deduplicated to one vote per (subj, pred, obj, source);
+   a claim with a NULL source has no voter and is dropped, by both
+   :func:`source_accuracy` and :func:`fuse_claims`;
 2. round 0: the majority object per (subj, pred) wins (ties broken by
    the greater object string — deterministic);
 3. source accuracy = floor(scale · #claims-agreeing-with-round-0 /
@@ -43,8 +45,9 @@ __all__ = ["fuse_claims", "source_accuracy"]
 
 def _votes(claims: DataFrame, subj: str, pred: str, obj: str,
            source: str) -> DataFrame:
-    """One row per (subj, pred, obj, source) — a source votes once."""
-    return claims.select(
+    """One row per (subj, pred, obj, source) — a source votes once; NULL
+    sources do not vote."""
+    return claims.where(F.col(source).isNotNull()).select(
         F.col(subj).alias("subj"), F.col(pred).alias("pred"),
         F.col(obj).alias("obj"), F.col(source).alias("source"),
     ).distinct()
@@ -110,6 +113,7 @@ def fuse_claims(claims: DataFrame, subj: str = "subj", pred: str = "pred",
     # stages all probe it.
     spo = (
         spread_partitions(claims, subj)
+        .where(F.col(source).isNotNull())
         .select(
             F.col(subj).alias("subj"), F.col(pred).alias("pred"),
             F.col(obj).alias("obj"), F.col(source).alias("source"),

@@ -3,14 +3,17 @@
 The converter's output is a plain edge DataFrame — entity-importance
 signals (which entities dominate the corpus graph) are a standard
 post-construction step for KG pipelines. Everything here is expressed as
-joins + aggregations over the edge list; iterative algorithms persist per
-round and cut lineage, like operators/dedup.duplicate_clusters.
+joins + aggregations over the edge list; iterative algorithms commit,
+checkpoint and resume their rounds through operators/rounds.py, like
+operators/dedup.duplicate_clusters.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import rounds
 
 
 def pagerank(
@@ -50,14 +53,11 @@ def pagerank(
     skew-join or salting applies). Ranks persist per round; previous
     rounds unpersist.
 
-    ``checkpoint_dir`` makes a long run resumable (north-rule contract):
+    ``checkpoint_dir`` makes a long run resumable (operators/rounds.py):
     each round's rank table is written to ``<dir>/pr_round_<i>`` and a
-    killed job restarts from the highest complete round — the recurrence
-    is a pure function of the previous round, so resumption is exact.
+    killed job restarts from the highest complete round below ``iters``.
     Disk writes replace the in-memory persist per round.
     """
-    import os as _os
-
     from .text import spread_partitions
 
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -104,25 +104,9 @@ def pagerank(
     # re-execute every prior round inside each broadcast build (measured
     # 36 s vs 14 s on the bench graph): broadcast builds don't share work
     # with the probe side, so the barrier per round is load-bearing
-    pr = nodes.withColumn("pr", F.lit(scale // n).cast("long")).persist()
-    start_round = 0
-    if checkpoint_dir is not None:
-        done = sorted(
-            int(d.rsplit("_", 1)[1])
-            for d in (_os.listdir(checkpoint_dir)
-                      if _os.path.isdir(checkpoint_dir) else [])
-            if d.startswith("pr_round_")
-            and _os.path.exists(_os.path.join(checkpoint_dir, d, "_SUCCESS"))
-        )
-        # only completed rounds BELOW the requested count resume; a prior
-        # run with more iterations does not short-circuit this one
-        done = [r for r in done if r < iters]
-        if done:
-            start_round = done[-1] + 1
-            pr.unpersist()
-            pr = edges.sparkSession.read.parquet(
-                _os.path.join(checkpoint_dir, f"pr_round_{done[-1]}")
-            )
+    done, pr = rounds.resume(
+        edges.sparkSession, checkpoint_dir, "pr_round", iters
+    ) or (-1, nodes.withColumn("pr", F.lit(scale // n).cast("long")).persist())
     bcast = (lambda d: F.broadcast(d)) if n <= broadcast_nodes_max else (lambda d: d)
     # nodes with no incoming edge keep the constant rank `base` in every
     # round — that set falls out of the shared stats aggregate (a node
@@ -132,7 +116,7 @@ def pagerank(
         .select("v", F.lit(base).cast("long").alias("pr"))
         .persist()
     )
-    for i in range(start_round, iters):
+    for i in range(done + 1, iters):
         contrib = (
             ed.join(bcast(pr.withColumnRenamed("v", "src")), "src")
             .withColumn("c", F.expr("pr div deg"))
@@ -149,18 +133,10 @@ def pagerank(
             )
             .unionByName(no_in)
         )
-        if checkpoint_dir is not None:
-            rdir = _os.path.join(checkpoint_dir, f"pr_round_{i}")
-            new_pr.write.mode("overwrite").parquet(rdir)
-            new_pr = edges.sparkSession.read.parquet(rdir)
-        else:
-            new_pr = new_pr.persist()
-            new_pr.count()
-        pr.unpersist()
+        new_pr, _ = rounds.materialize(new_pr, checkpoint_dir, "pr_round", i)
+        rounds.release(pr)
         pr = new_pr
-    ed.unpersist()
-    no_in.unpersist()
-    stats.unpersist()
+    rounds.release(ed, no_in, stats)
     return pr
 
 
@@ -358,11 +334,9 @@ def khop_reachability(
     SQL oracle replays it with a recursive CTE (UNION-dedup on
     (seed, node, hops), then min(hops)).
 
-    ``checkpoint_dir`` makes a long BFS resumable (north-rule
-    contract, same layout as pagerank): each layer's reached table
-    writes to ``<dir>/khop_hop_<i>`` and a killed job restarts from the
-    highest complete layer — the layer recurrence is a pure function of
-    the previous layer, so resumption is exact.
+    ``checkpoint_dir`` makes a long BFS resumable (operators/rounds.py):
+    after each hop the reached table is written to ``<dir>/khop_hop_<i>``
+    and a killed job restarts from the highest complete hop ``<= k``.
     """
     if k < 0:
         raise ValueError("k must be >= 0")
@@ -381,36 +355,15 @@ def khop_reachability(
 
     # ``reached`` is a lazy union of persisted layers (hop 0 = the seeds):
     # each hop caches only its own new pairs, never a copy of the union
-    reached = seed_nodes.select(
+    done, reached = rounds.resume(
+        edges.sparkSession, checkpoint_dir, "khop_hop", k + 1
+    ) or (0, seed_nodes.select(
         "seed", F.col("seed").alias("node"), F.lit(0).cast("int").alias("min_hops")
-    ).persist()
-    start_hop = 1
-    if checkpoint_dir is not None:
-        # resume from the highest COMPLETE layer below k (pagerank's
-        # checkpoint contract, graph.py:82): the reached table after hop
-        # j is a pure function of the input, so resumption is exact
-        import os as _os
-
-        done = sorted(
-            int(d.rsplit("_", 1)[1])
-            for d in (_os.listdir(checkpoint_dir)
-                      if _os.path.isdir(checkpoint_dir) else [])
-            if d.startswith("khop_hop_")
-            and _os.path.exists(_os.path.join(checkpoint_dir, d, "_SUCCESS"))
-        )
-        done = [h for h in done if h <= k]
-        if done:
-            start_hop = done[-1] + 1
-            reached.unpersist()
-            reached = edges.sparkSession.read.parquet(
-                _os.path.join(checkpoint_dir, f"khop_hop_{done[-1]}")
-            ).persist()
-    frontier = reached.where(F.col("min_hops") == start_hop - 1).select(
-        "seed", "node"
-    )
+    ).persist())
+    frontier = reached.where(F.col("min_hops") == done).select("seed", "node")
     n = frontier.count()  # only the resume layer pays a standalone count;
-    reached_n = reached.count() if start_hop > 1 else n
-    for hop in range(start_hop, k + 1):
+    reached_n = reached.count() if done > 0 else n
+    for hop in range(done + 1, k + 1):
         if n == 0:
             break
         f = F.broadcast(frontier) if n <= broadcast_frontier_max else frontier
@@ -423,20 +376,19 @@ def khop_reachability(
             if reached_n <= broadcast_frontier_max
             else reached
         )
-        nxt = (
+        # the layer's one job: materialize + frontier size
+        nxt, n = rounds.materialize(
             f.join(e, f["node"] == e["_s"])
             .select("seed", F.col("_d").alias("node"))
             .distinct()
             .join(anti, ["seed", "node"], "left_anti")
             .withColumn("min_hops", F.lit(hop).cast("int"))
-            .persist()
         )
-        n = nxt.count()  # the layer's one job: materialize + frontier size
         reached_n += n
         reached = reached.unionAll(nxt)
         if checkpoint_dir is not None:
-            reached.write.mode("overwrite").parquet(
-                _os.path.join(checkpoint_dir, f"khop_hop_{hop}")
+            reached, _ = rounds.materialize(
+                reached, checkpoint_dir, "khop_hop", hop
             )
         frontier = nxt.select("seed", "node")
     e.unpersist()
@@ -466,10 +418,10 @@ def label_propagation(
     label frame — label frame broadcasts up to ``broadcast_nodes_max``
     rows so the adjacency never shuffles — then a (node, label) vote
     groupBy and a per-node top-1 window, both partial-agg friendly.
-    Labels persist per round, previous rounds unpersist (pagerank's
-    memory contract). ``checkpoint_dir`` writes each round's label table
-    to ``<dir>/lpa_round_<i>`` and resumes from the highest complete
-    round (pagerank's checkpoint contract)."""
+    Labels persist per round, previous rounds unpersist.
+    ``checkpoint_dir`` writes each round's label table to
+    ``<dir>/lpa_round_<i>`` in place of the persist and resumes from the
+    highest complete round below ``iters`` (operators/rounds.py)."""
     from .text import spread_partitions
 
     nb = edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr")).unionAll(
@@ -484,25 +436,12 @@ def label_propagation(
     nodes = nb.select("node").distinct()
     labels = nodes.select("node", F.col("node").alias("label")).persist()
     n_nodes = labels.count()
-    start_round = 0
-    if checkpoint_dir is not None:
-        import os as _os
-
-        done = sorted(
-            int(d.rsplit("_", 1)[1])
-            for d in (_os.listdir(checkpoint_dir)
-                      if _os.path.isdir(checkpoint_dir) else [])
-            if d.startswith("lpa_round_")
-            and _os.path.exists(_os.path.join(checkpoint_dir, d, "_SUCCESS"))
-        )
-        done = [r for r in done if r < iters]
-        if done:
-            start_round = done[-1] + 1
-            labels.unpersist()
-            labels = edges.sparkSession.read.parquet(
-                _os.path.join(checkpoint_dir, f"lpa_round_{done[-1]}")
-            ).persist()
-    for _round in range(start_round, iters):
+    resumed = rounds.resume(edges.sparkSession, checkpoint_dir, "lpa_round", iters)
+    done = -1
+    if resumed:
+        rounds.release(labels)
+        done, labels = resumed
+    for i in range(done + 1, iters):
         lbl = labels.select(F.col("node").alias("nbr"), F.col("label"))
         if n_nodes <= broadcast_nodes_max:
             lbl = F.broadcast(lbl)
@@ -521,20 +460,13 @@ def label_propagation(
             ).alias("_new")
         )
         prev = labels
-        labels = (
+        labels, _ = rounds.materialize(
             prev.join(top, "node", "left")
-            .select("node", F.coalesce("_new", "label").alias("label"))
-            .persist()
+            .select("node", F.coalesce("_new", "label").alias("label")),
+            checkpoint_dir, "lpa_round", i,
         )
-        labels.count()
-        if checkpoint_dir is not None:
-            import os as _os
-
-            labels.write.mode("overwrite").parquet(
-                _os.path.join(checkpoint_dir, f"lpa_round_{_round}")
-            )
-        prev.unpersist()
-    nb.unpersist()
+        rounds.release(prev)
+    rounds.release(nb)
     return labels
 
 

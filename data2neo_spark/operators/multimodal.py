@@ -26,7 +26,6 @@ unfilter/decode → stats end-to-end against independent SQL arithmetic.
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterator
 
 import pandas as pd
@@ -381,12 +380,6 @@ def parse_header(b: bytes) -> dict:
          out["duration_ms"]) = wav
         return out
     return out
-
-
-def _fake_feature(payload: bytes, dim: int = 8):
-    """Deterministic fake embedding: sha256-seeded byte statistics."""
-    digest = hashlib.sha256(payload or b"").digest()
-    return [b / 255.0 for b in digest[:dim]]
 
 
 def extract_features(

@@ -145,16 +145,11 @@ def extract_links(
     build: it runs inside the same scan as text extraction, so the link
     graph costs one extra projection, not a second pass over the corpus.
     """
-    from .text import spread_partitions
-
     hrefs = F.expr(
         f"regexp_extract_all(decode({html_col}, 'utf-8'), "
         "'<a href=\"([^\"]+)\"', 1)"
     )
     src = host_col(F.col(url_col))
-    # the per-row regex sweep over html is the heavy part — spread it
-    # (deterministic, no-op at real scale where the crawl has many splits)
-    pages = spread_partitions(pages, url_col)
     out = pages.select(
         src.alias("src_host"), F.explode(hrefs).alias("dst_url")
     )

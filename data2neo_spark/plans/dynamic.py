@@ -312,17 +312,6 @@ def dynamic_to_canonical(
     return nodes, edges
 
 
-def attach_identifier_columns_dynamic(df: DataFrame, rule: NodeRule) -> DataFrame:
-    """Identifier (supplies) columns for a dynamic-path rule: the rule's own
-    node is always local_idx 0, so its uid is row-derivable without running
-    the wrappers (wrapper-modified pks on the own node are not reflected —
-    documented divergence)."""
-    if rule.identifier is None:
-        return df
-    from .lowering import attach_identifier_columns
-    return attach_identifier_columns(df, rule)
-
-
 def apply_rel_postprocessors_dynamic(edges: DataFrame, rule: RelRule) -> DataFrame:
     """General subgraph postprocessors on a RELATIONSHIP rule: run per edge
     row over Arrow batches. The Relationship object carries stub endpoint

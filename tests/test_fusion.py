@@ -96,3 +96,18 @@ def test_no_extra_shuffle_for_accuracy_join(spark):
     c = _claims(spark, [("e", "p", "A", "s1"), ("e", "p", "B", "s2")])
     plan = fuse_claims(c)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" not in plan
+
+
+def test_null_source_casts_no_vote(spark):
+    # a NULL-source claim has no voter: without the rule, source_accuracy
+    # counted it (Y would win e1's round-0 tie, s1 acc 500000) while
+    # fuse_claims skipped it (X wins, s1 weighted at 1000000)
+    c = _claims(spark, [
+        ("e1", "brand", "X", "s1"),
+        ("e1", "brand", "Y", None),
+        ("e2", "brand", "Z", "s1"),
+    ])
+    acc = {r.source: (r.acc, r.n_claims) for r in source_accuracy(c).collect()}
+    assert acc == {"s1": (10 ** 6, 2)}
+    fused = {r.subj: (r.obj, r.n_sources, r.weight) for r in fuse_claims(c).collect()}
+    assert fused == {"e1": ("X", 1, 10 ** 6), "e2": ("Z", 1, 10 ** 6)}

@@ -740,6 +740,30 @@ def test_iterative_checkpoint_resume(spark, tmp_path):
     assert got2 == want
 
 
+def test_pagerank_ignores_rounds_of_a_longer_run(spark, tmp_path):
+    """Checkpoints at or past ``iters`` (left by a longer run) must not
+    short-circuit a shorter one, and a round without _SUCCESS is skipped."""
+    import os
+    from data2neo_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame(
+        pd.DataFrame({"src": [1, 1, 2, 3], "dst": [2, 3, 3, 1]})
+    )
+    want = {r["v"]: r["pr"] for r in pagerank(edges, iters=2).collect()}
+    ck = str(tmp_path / "pr")
+    longer = {r["v"]: r["pr"]
+              for r in pagerank(edges, iters=3, checkpoint_dir=ck).collect()}
+    assert longer != want
+    got = {r["v"]: r["pr"]
+           for r in pagerank(edges, iters=2, checkpoint_dir=ck).collect()}
+    assert got == want
+    # an interrupted round 1 resumes from round 0 instead
+    os.remove(os.path.join(ck, "pr_round_1", "_SUCCESS"))
+    got = {r["v"]: r["pr"]
+           for r in pagerank(edges, iters=2, checkpoint_dir=ck).collect()}
+    assert got == want
+
+
 def test_duplicate_clusters_chain_fast_convergence(spark):
     """Adversarial chain 1-2-...-12: pointer jumping converges in O(log d)
     rounds — max_iter=6 suffices where plain propagation would need ~11."""
@@ -751,9 +775,32 @@ def test_duplicate_clusters_chain_fast_convergence(spark):
            for r in dedup.duplicate_clusters(pairs, max_iter=6).collect()}
     assert got == {i: 1 for i in range(1, n + 1)}
     # and with jumping disabled the same budget is NOT enough
-    slow = {r["doc_id"]: r["cluster_id"]
-            for r in dedup.duplicate_clusters(pairs, max_iter=6, jump=False).collect()}
-    assert slow != got
+    with pytest.raises(RuntimeError, match="max_iter=6"):
+        dedup.duplicate_clusters(pairs, max_iter=6, jump=False)
+
+
+def test_duplicate_clusters_raises_at_max_iter(spark, tmp_path):
+    """A chain deeper than max_iter without pointer jumping does not
+    converge in time: the operator raises instead of returning partial
+    labels, and a run resumed from its checkpoints follows the same rule."""
+    n = 8
+    pairs = spark.createDataFrame(
+        pd.DataFrame({"id_a": list(range(1, n)), "id_b": list(range(2, n + 1))})
+    )
+    with pytest.raises(RuntimeError, match="max_iter=4"):
+        dedup.duplicate_clusters(pairs, max_iter=4, jump=False)
+    ck = str(tmp_path / "cc")
+    with pytest.raises(RuntimeError, match="max_iter=4"):
+        dedup.duplicate_clusters(pairs, max_iter=4, checkpoint_dir=ck, jump=False)
+    import os
+    assert os.path.exists(os.path.join(ck, "labels_round_3", "_SUCCESS"))
+    with pytest.raises(RuntimeError, match="max_iter=4"):
+        dedup.duplicate_clusters(pairs, max_iter=4, checkpoint_dir=ck, jump=False)
+    # a larger budget resumes from round 3 and finishes the chain
+    got = {r["doc_id"]: r["cluster_id"]
+           for r in dedup.duplicate_clusters(
+               pairs, max_iter=12, checkpoint_dir=ck, jump=False).collect()}
+    assert got == {i: 1 for i in range(1, n + 1)}
 
 
 def test_corpus_length_quantiles(spark):

@@ -221,9 +221,8 @@ def test_round5_second_wave_plan_shapes(spark):
                                 "n_chars", k=10))
     assert "Exchange" not in p and "TakeOrderedAndProject" in p
 
-    # link graph: ONE hash exchange (the host-pair groupBy) plus at most
-    # the deterministic parallelism-spread repartition (r6, a no-op at
-    # real scale) — still no UDF and no join-key shuffle of the corpus
+    # link graph: ONE hash exchange (the host-pair groupBy) — no UDF, no
+    # join-key shuffle and no repartition of the html payload
     from data2neo_spark.operators.web import link_graph
     pages = docs.selectExpr(
         "concat('https://h', doc_id % 5, '.example/p') AS url",
@@ -231,7 +230,7 @@ def test_round5_second_wave_plan_shapes(spark):
         " '.example/x\"></a>'), 'utf-8') AS html",
     )
     p = plan_of(link_graph(pages))
-    assert len(re.findall(r"\(\d+\) Exchange", p)) <= 2
+    assert len(re.findall(r"\(\d+\) Exchange", p)) == 1
     assert "hashpartitioning" in p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
