@@ -467,13 +467,7 @@ def _dedup_clusters(spark, sf_dir):
         _read(spark, sf_dir, "documents"), "doc_id", n=3, threshold=0.1,
         max_shingle_df=50,
     )
-    # jump=False: VERIFIED near-dup clusters are dense (similarity is
-    # near-transitive), so the component diameter is small by workload
-    # construction and the per-round pointer-jump join costs more than
-    # the rounds it saves (A/B-measured 2x). The fixpoint — and thus the
-    # oracle hash — is identical either way; the operator default stays
-    # jump=True for adversarial chain-shaped graphs.
-    return duplicate_clusters(pairs, jump=False)
+    return duplicate_clusters(pairs)
 
 
 def _dedup_minhash(spark, sf_dir):
@@ -1711,11 +1705,9 @@ def _graph_link_prediction(spark, sf_dir):
 
     li = _read(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 10 == 0)
     edges = cooccurrence_edges(li, "l_orderkey", "l_partkey", max_group_size=8)
-    # cooccurrence output holds each undirected edge once (canonical
-    # a < b), so the operator skips its provably-no-op dedup exchanges
     return link_prediction_jaccard(
         edges.select(F.col("a").alias("src"), F.col("b").alias("dst")),
-        max_pivot_degree=64, top_k=50, edges_distinct=True,
+        max_pivot_degree=64, top_k=50,
     )
 
 
@@ -1732,7 +1724,7 @@ def _graph_adamic_adar(spark, sf_dir):
     edges = cooccurrence_edges(li, "l_orderkey", "l_partkey", max_group_size=8)
     return link_prediction_adamic_adar(
         edges.select(F.col("a").alias("src"), F.col("b").alias("dst")),
-        max_pivot_degree=64, top_k=50, edges_distinct=True,
+        max_pivot_degree=64, top_k=50,
     )
 
 
@@ -4358,8 +4350,9 @@ FROM r GROUP BY 1
             "  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"
             "), sess AS ("
             "  SELECT user_id, ts,"
-            "    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id"
-            "      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq"
+            "    CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id"
+            "      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)"
+            "      AS session_seq"
             "  FROM flagged"
             ") SELECT user_id, session_seq,"
             "  strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS session_start,"

@@ -66,10 +66,6 @@ def get_wrapper(name: str) -> WrapperDef:
         )
 
 
-def has_wrapper(name: str) -> bool:
-    return name in _registry
-
-
 def _register(name: str, definition: WrapperDef) -> None:
     if name in _registry:
         logger.warning("The name '%s' is already registered. Overwriting it.", name)

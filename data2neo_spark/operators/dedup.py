@@ -884,7 +884,6 @@ def duplicate_clusters(
     id_b: str = "id_b",
     max_iter: int = 25,
     checkpoint_dir: Optional[str] = None,
-    jump: bool = True,
 ) -> DataFrame:
     """Connected components over a duplicate-pair list → (doc_id,
     cluster_id), cluster_id = the smallest doc id in the component. The
@@ -892,17 +891,17 @@ def duplicate_clusters(
     (pairs are not transitive: a~b, b~c must collapse a,b,c together).
 
     Algorithm: iterative min-label propagation (hash-to-min). Each round is
-    one equi join + one groupBy (both with partial aggregation), followed by
-    a single count action for the convergence check; rounds needed = graph
-    diameter. With ``jump=True`` (default) each round also POINTER-JUMPS
-    (lab ← lab[lab], one self-join): labels are monotone non-increasing
-    and stay inside their component, so the fixpoint is unchanged, but
-    convergence drops to O(log diameter) rounds — adversarial chain-shaped
-    graphs no longer degenerate (the alternating large-star/small-star of
-    Kiveris et al. 2014 gives the same bound with a more intricate edge
-    rewrite). Labels are persisted per round and the lineage is cut with
-    localCheckpoint every 5 rounds so the plan can't grow unboundedly.
-    Raises ``RuntimeError`` when ``max_iter`` rounds pass without one that
+    one equi join + one groupBy (both with partial aggregation), then a
+    POINTER JUMP (lab ← lab[lab], one self-join), then a single action
+    that also yields the convergence count. Labels are monotone
+    non-increasing and stay inside their component, so the jump leaves
+    the fixpoint unchanged but cuts the rounds from the graph diameter to
+    O(log diameter) — adversarial chain-shaped graphs do not degenerate
+    (the alternating large-star/small-star of Kiveris et al. 2014 gives
+    the same bound with a more intricate edge rewrite). A round reads the
+    previous labels twice, so each round's labels are materialized with
+    their lineage cut (operators/rounds.py): the plan stays one round
+    deep at any depth. Raises ``RuntimeError`` when ``max_iter`` rounds pass without one that
     changes no label: the labels would not be the components yet.
 
     The whole computation is expressible as a recursive min-reachability
@@ -913,9 +912,8 @@ def duplicate_clusters(
     each round's label table is written to ``<dir>/labels_round_<i>`` and
     a killed job restarts from the highest complete round below
     ``max_iter`` instead of round 0 — the propagation is monotone (labels
-    only decrease), so resuming from any completed round is exact. Disk
-    writes replace the in-memory persist, which also bounds lineage
-    without localCheckpoint.
+    only decrease), so resuming from any completed round is exact. The
+    disk write replaces the in-memory persist and cuts the lineage too.
     """
     from . import rounds
 
@@ -964,19 +962,18 @@ def duplicate_clusters(
             obs,
             F.sum((F.col("lab") != F.col("_old")).cast("long")).alias("changed"),
         ).select("v", "lab")
-        if jump:
-            # pointer jump: lab ← lab[lab]. Every label is itself a node id
-            # with an entry, lab(x) ≤ x, so the jumped label can only
-            # decrease and never leaves the component
-            targets = new_lab.select(
-                F.col("v").alias("lab"), F.col("lab").alias("_lab2")
-            )
-            new_lab = new_lab.join(targets, "lab", "left").select(
+        # pointer jump: lab ← lab[lab]. Every label is itself a node id
+        # with an entry, lab(x) ≤ x, so the jumped label can only
+        # decrease and never leaves the component
+        targets = new_lab.select(
+            F.col("v").alias("lab"), F.col("lab").alias("_lab2")
+        )
+        new_lab, _ = rounds.materialize(
+            new_lab.join(targets, "lab", "left").select(
                 F.col("v"),
                 F.coalesce(F.col("_lab2"), F.col("lab")).alias("lab"),
-            )
-        new_lab, _ = rounds.materialize(
-            new_lab, checkpoint_dir, "labels_round", i, cut=i > 0 and i % 5 == 0
+            ),
+            checkpoint_dir, "labels_round", i, cut=True,
         )
         # non-blocking metric read (blocking Observation.get deadlocks for
         # CollectMetrics inside foreachBatch micro-batches — same guard as
@@ -998,7 +995,7 @@ def duplicate_clusters(
         rounds.release(edges, lab)
         raise RuntimeError(
             f"duplicate_clusters did not converge within max_iter={max_iter}"
-            " rounds; raise max_iter (or keep jump=True)"
+            " rounds; raise max_iter"
         )
     rounds.release(edges)
     return lab.select(F.col("v").alias("doc_id"), F.col("lab").alias("cluster_id"))

@@ -10,6 +10,8 @@ operators/dedup.duplicate_clusters.
 
 from __future__ import annotations
 
+from typing import Tuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -417,8 +419,10 @@ def label_propagation(
     Shape per round: one join of the (node, nbr) adjacency with the
     label frame — label frame broadcasts up to ``broadcast_nodes_max``
     rows so the adjacency never shuffles — then a (node, label) vote
-    groupBy and a per-node top-1 window, both partial-agg friendly.
-    Labels persist per round, previous rounds unpersist.
+    groupBy and a per-node top-1 hash aggregate, both partial-agg friendly.
+    A round reads the previous labels twice (vote join and carry-over
+    join), so every round's labels are materialized with their lineage
+    cut (operators/rounds.py) and the previous round is released.
     ``checkpoint_dir`` writes each round's label table to
     ``<dir>/lpa_round_<i>`` in place of the persist and resumes from the
     highest complete round below ``iters`` (operators/rounds.py)."""
@@ -463,7 +467,7 @@ def label_propagation(
         labels, _ = rounds.materialize(
             prev.join(top, "node", "left")
             .select("node", F.coalesce("_new", "label").alias("label")),
-            checkpoint_dir, "lpa_round", i,
+            checkpoint_dir, "lpa_round", i, cut=True,
         )
         rounds.release(prev)
     rounds.release(nb)
@@ -650,6 +654,38 @@ def sample_neighbors(
     return out
 
 
+def _link_prediction_base(
+    edges: DataFrame, src: str, dst: str, max_pivot_degree: int
+) -> Tuple[DataFrame, DataFrame, DataFrame]:
+    """Shared link-prediction prep → ``(canon, deg, capped)``, all
+    derived from ONE distinct. ``canon`` holds each undirected edge once
+    as ``(a, b)`` with ``a ≤ b`` and is also the existing-edge set the
+    candidates anti-join against. The symmetric adjacency behind
+    ``deg (v, deg)`` and ``capped (v, u)`` emits each canonical edge in
+    both directions and a self-loop once, so it is distinct by
+    construction. Edges with a NULL endpoint are ignored."""
+    from pyspark.sql import Window
+
+    canon = (
+        edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
+        .select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
+        .distinct()
+    )
+    nb = canon.select(F.col("a").alias("v"), F.col("b").alias("u")).unionAll(
+        canon.where(F.col("a") != F.col("b")).select(
+            F.col("b").alias("v"), F.col("a").alias("u")
+        )
+    )
+    deg = nb.groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
+    w = Window.partitionBy("v").orderBy("u")
+    capped = (
+        nb.withColumn("_rk", F.row_number().over(w))
+        .where(F.col("_rk") <= max_pivot_degree)
+        .drop("_rk")
+    )
+    return canon, deg, capped
+
+
 def link_prediction_jaccard(
     edges: DataFrame,
     src: str = "src",
@@ -657,7 +693,6 @@ def link_prediction_jaccard(
     max_pivot_degree: int = 64,
     top_k: int = 50,
     scale: int = 1_000_000,
-    edges_distinct: bool = False,
 ) -> DataFrame:
     """Neighbor-Jaccard link prediction over the undirected graph:
     for node pairs sharing at least one neighbor and NOT already
@@ -668,38 +703,21 @@ def link_prediction_jaccard(
     pairs ``(a, b, common, deg_a, deg_b, jaccard_x…)`` ordered by
     (jaccard desc, a, b).
 
-    Scale shape: candidate pairs form at their SHARED neighbor (one
-    self-join of the adjacency keyed on the pivot node) — never
-    all-pairs; hub pivots are capped to their ``max_pivot_degree``
+    Scale shape: the edge list is deduplicated ONCE into canonical
+    ``(least, greatest)`` pairs (:func:`_link_prediction_base`; on
+    :func:`cooccurrence_edges` output Spark folds it into that
+    operator's own groupBy). Candidate pairs form at their SHARED
+    neighbor (one self-join of the adjacency keyed on the pivot node) —
+    never all-pairs; hub pivots are capped to their ``max_pivot_degree``
     LOWEST neighbors (sorted-prefix contract shared with
     cooccurrence_edges — documented recall loss on super-hubs, which
     at crawl scale are exactly the uninformative pivots: a neighbor
     shared by 10^6 nodes carries no signal). Then one (a,b) count
     groupBy with map-side partials, two broadcast-friendly degree
-    joins, one LEFT ANTI against the existing edge set, and a global
+    joins, one LEFT ANTI against the canonical edge set, and a global
     top-k (TakeOrderedAndProject, no full sort).
-
-    ``edges_distinct=True`` is the caller's promise that ``edges`` holds
-    each undirected edge exactly once in one canonical direction (e.g.
-    :func:`cooccurrence_edges` output) — the adjacency and existing-edge
-    dedups are then provably no-ops and their exchanges are skipped
-    (identical results, one fewer shuffle each).
     """
-    from pyspark.sql import Window
-
-    nb = (
-        edges.select(F.col(src).alias("v"), F.col(dst).alias("u"))
-        .unionAll(edges.select(F.col(dst).alias("v"), F.col(src).alias("u")))
-    )
-    if not edges_distinct:
-        nb = nb.distinct()
-    deg = nb.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    w = Window.partitionBy("v").orderBy("u")
-    capped = (
-        nb.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= max_pivot_degree)
-        .drop("_rk")
-    )
+    canon, deg, capped = _link_prediction_base(edges, src, dst, max_pivot_degree)
     a = capped.select("v", F.col("u").alias("a"))
     b = capped.select("v", F.col("u").alias("b"))
     common = (
@@ -708,15 +726,10 @@ def link_prediction_jaccard(
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    existing = nb.select(
-        F.least("v", "u").alias("a"), F.greatest("v", "u").alias("b")
-    )
-    if not edges_distinct:
-        existing = existing.distinct()
-    cand = common.join(existing, ["a", "b"], "left_anti")
+    cand = common.join(canon, ["a", "b"], "left_anti")
     out = (
-        cand.join(deg.select(F.col("u").alias("a"), F.col("deg").alias("deg_a")), "a")
-        .join(deg.select(F.col("u").alias("b"), F.col("deg").alias("deg_b")), "b")
+        cand.join(deg.select(F.col("v").alias("a"), F.col("deg").alias("deg_a")), "a")
+        .join(deg.select(F.col("v").alias("b"), F.col("deg").alias("deg_b")), "b")
         .withColumn(
             f"jaccard_x{int(scale)}",
             F.expr(f"(common * {int(scale)}L) div (deg_a + deg_b - common)"),
@@ -736,7 +749,6 @@ def link_prediction_adamic_adar(
     max_pivot_degree: int = 64,
     top_k: int = 50,
     scale: int = 1_000_000,
-    edges_distinct: bool = False,
 ) -> DataFrame:
     """Adamic–Adar link prediction, integer-quantized: each shared
     pivot ``v`` contributes ``scale div ilog2(deg_v)`` (ilog2 exact via
@@ -747,18 +759,9 @@ def link_prediction_adamic_adar(
     refinement over Jaccard for hub-heavy graphs. Same candidate
     machinery and caps as :func:`link_prediction_jaccard`; returns the
     top_k non-adjacent pairs ``(a, b, common, aa_x{scale})`` ordered by
-    (score desc, a, b). ``edges_distinct`` as in
-    :func:`link_prediction_jaccard`.
+    (score desc, a, b).
     """
-    from pyspark.sql import Window
-
-    nb = (
-        edges.select(F.col(src).alias("v"), F.col(dst).alias("u"))
-        .unionAll(edges.select(F.col(dst).alias("v"), F.col(src).alias("u")))
-    )
-    if not edges_distinct:
-        nb = nb.distinct()
-    deg = nb.groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
+    canon, deg, capped = _link_prediction_base(edges, src, dst, max_pivot_degree)
     # pivot weight: scale div max(1, ilog2(deg)) — exact integer
     pw = deg.select(
         "v",
@@ -766,13 +769,7 @@ def link_prediction_adamic_adar(
             f"{int(scale)}L div greatest(1L, length(bin(deg)) - 1)"
         ).alias("w"),
     )
-    wnd = Window.partitionBy("v").orderBy("u")
-    capped = (
-        nb.withColumn("_rk", F.row_number().over(wnd))
-        .where(F.col("_rk") <= max_pivot_degree)
-        .drop("_rk")
-        .join(pw, "v")
-    )
+    capped = capped.join(pw, "v")
     a = capped.select("v", "w", F.col("u").alias("a"))
     b = capped.select("v", F.col("u").alias("b"))
     scored = (
@@ -784,13 +781,8 @@ def link_prediction_adamic_adar(
             F.sum("w").alias(f"aa_x{int(scale)}"),
         )
     )
-    existing = nb.select(
-        F.least("v", "u").alias("a"), F.greatest("v", "u").alias("b")
-    )
-    if not edges_distinct:
-        existing = existing.distinct()
     return (
-        scored.join(existing, ["a", "b"], "left_anti")
+        scored.join(canon, ["a", "b"], "left_anti")
         .orderBy(F.desc(f"aa_x{int(scale)}"), "a", "b")
         .limit(top_k)
     )

@@ -187,14 +187,6 @@ def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("fingerprint", F.md5(norm))
 
 
-def tokens_with_positions(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """Explode text into (id, pos, word) rows — shared shingling primitive."""
-    return df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "word"),
-    )
-
-
 def word_shingles(
     df: DataFrame, id_col: str, text_col: str = "text", n: int = 3
 ) -> DataFrame:

@@ -774,33 +774,56 @@ def test_duplicate_clusters_chain_fast_convergence(spark):
     got = {r["doc_id"]: r["cluster_id"]
            for r in dedup.duplicate_clusters(pairs, max_iter=6).collect()}
     assert got == {i: 1 for i in range(1, n + 1)}
-    # and with jumping disabled the same budget is NOT enough
-    with pytest.raises(RuntimeError, match="max_iter=6"):
-        dedup.duplicate_clusters(pairs, max_iter=6, jump=False)
+    # the jumped chain needs 4 rounds (the last one changes nothing), so
+    # a budget of 3 is NOT enough
+    with pytest.raises(RuntimeError, match="max_iter=3"):
+        dedup.duplicate_clusters(pairs, max_iter=3)
 
 
 def test_duplicate_clusters_raises_at_max_iter(spark, tmp_path):
-    """A chain deeper than max_iter without pointer jumping does not
-    converge in time: the operator raises instead of returning partial
-    labels, and a run resumed from its checkpoints follows the same rule."""
+    """A chain deeper than max_iter allows (the 8-chain needs 4 jumped
+    rounds) does not converge in time: the operator raises instead of
+    returning partial labels, and a run resumed from its checkpoints
+    follows the same rule."""
     n = 8
     pairs = spark.createDataFrame(
         pd.DataFrame({"id_a": list(range(1, n)), "id_b": list(range(2, n + 1))})
     )
-    with pytest.raises(RuntimeError, match="max_iter=4"):
-        dedup.duplicate_clusters(pairs, max_iter=4, jump=False)
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        dedup.duplicate_clusters(pairs, max_iter=2)
     ck = str(tmp_path / "cc")
-    with pytest.raises(RuntimeError, match="max_iter=4"):
-        dedup.duplicate_clusters(pairs, max_iter=4, checkpoint_dir=ck, jump=False)
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        dedup.duplicate_clusters(pairs, max_iter=2, checkpoint_dir=ck)
     import os
-    assert os.path.exists(os.path.join(ck, "labels_round_3", "_SUCCESS"))
-    with pytest.raises(RuntimeError, match="max_iter=4"):
-        dedup.duplicate_clusters(pairs, max_iter=4, checkpoint_dir=ck, jump=False)
-    # a larger budget resumes from round 3 and finishes the chain
+    assert os.path.exists(os.path.join(ck, "labels_round_1", "_SUCCESS"))
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        dedup.duplicate_clusters(pairs, max_iter=2, checkpoint_dir=ck)
+    # a larger budget resumes from round 1 and finishes the chain
     got = {r["doc_id"]: r["cluster_id"]
            for r in dedup.duplicate_clusters(
-               pairs, max_iter=12, checkpoint_dir=ck, jump=False).collect()}
+               pairs, max_iter=12, checkpoint_dir=ck).collect()}
     assert got == {i: 1 for i in range(1, n + 1)}
+
+
+def _plan_chars(df):
+    return len(df._jdf.queryExecution().executedPlan().toString())
+
+
+def test_duplicate_clusters_deep_chain_plan_stays_flat(spark):
+    """Every round cuts its lineage, so a 1000-node chain (10 rounds)
+    converges without a checkpoint dir, and its result plan is no larger
+    than a 12-chain's (4 rounds) up to a factor of 2. Uncut, the plan
+    string of a pointer-jumping round grows about 8x per round."""
+    def chain(n):
+        return spark.range(1, n).select(
+            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+        )
+
+    short = dedup.duplicate_clusters(chain(12))
+    deep = dedup.duplicate_clusters(chain(1000))
+    rows = deep.collect()
+    assert len(rows) == 1000 and {r["cluster_id"] for r in rows} == {1}
+    assert _plan_chars(deep) <= 2 * _plan_chars(short)
 
 
 def test_corpus_length_quantiles(spark):
@@ -2133,6 +2156,26 @@ def test_khop_checkpoint_resume(spark, tmp_path):
              for r in khop_reachability(edges, seeds, k=3,
                                         checkpoint_dir=ck).collect()}
     assert again == full
+
+
+def test_label_propagation_many_rounds_without_checkpoint_dir(spark, tmp_path):
+    """Every LPA round cuts its lineage, so 12 in-memory rounds on a
+    200-node graph complete (uncut, the plan string grows about 4x per
+    round) and agree with the checkpoint-dir path, whose disk writes were
+    always lineage-free."""
+    from data2neo_spark.operators.graph import label_propagation
+
+    n = 200
+    ids = spark.range(n)
+    edges = ids.select(
+        F.col("id").alias("src"), ((F.col("id") + 1) % n).alias("dst")
+    ).unionAll(
+        ids.select(F.col("id").alias("src"), ((F.col("id") * 7 + 3) % n).alias("dst"))
+    )
+    mem = {r.node: r.label for r in label_propagation(edges, iters=12).collect()}
+    disk = {r.node: r.label for r in label_propagation(
+        edges, iters=12, checkpoint_dir=str(tmp_path / "lpa")).collect()}
+    assert len(mem) == n and mem == disk
 
 
 def test_label_propagation_checkpoint_resume(spark, tmp_path):

@@ -177,20 +177,98 @@ def test_cooccurrence_grouped_equals_windowed(spark):
     assert fast == slow and fast
 
 
-def test_link_prediction_edges_distinct_flag_identical(spark):
-    """edges_distinct=True must be a pure plan optimization on
-    already-canonical edges — identical rows either way."""
+def _link_prediction_reference(edge_list, max_pivot_degree, top_k, scale):
+    """Plain-Python link prediction over the undirected simple graph of
+    ``edge_list``: (jaccard rows, adamic-adar rows), each the top_k by
+    (score desc, a, b). A self-loop makes a node its own neighbor once;
+    an edge with a NULL endpoint is ignored."""
+    nbrs = {}
+    for s, d in edge_list:
+        if s is None or d is None:
+            continue
+        nbrs.setdefault(s, set()).add(d)
+        nbrs.setdefault(d, set()).add(s)
+    deg = {v: len(us) for v, us in nbrs.items()}
+    common, aa = {}, {}
+    for v, us in nbrs.items():
+        capped = sorted(us)[:max_pivot_degree]
+        w = scale // max(1, deg[v].bit_length() - 1)
+        for i, x in enumerate(capped):
+            for y in capped[i + 1:]:
+                common[(x, y)] = common.get((x, y), 0) + 1
+                aa[(x, y)] = aa.get((x, y), 0) + w
+    cand = [p for p in common if p[1] not in nbrs[p[0]]]
+    jac = sorted(
+        ((a, b, common[(a, b)], deg[a], deg[b],
+          common[(a, b)] * scale // (deg[a] + deg[b] - common[(a, b)]))
+         for a, b in cand),
+        key=lambda r: (-r[5], r[0], r[1]),
+    )[:top_k]
+    ada = sorted(
+        ((a, b, common[(a, b)], aa[(a, b)]) for a, b in cand),
+        key=lambda r: (-r[3], r[0], r[1]),
+    )[:top_k]
+    return jac, ada
+
+
+def test_link_prediction_matches_reference_formulation(spark):
+    """Both link-prediction operators equal a plain-Python formulation on
+    canonical co-occurrence edges and on a generic edge list with
+    duplicate, reversed, self-loop and NULL-endpoint edges."""
     from data2neo_spark.operators.graph import (
         cooccurrence_edges, link_prediction_adamic_adar,
         link_prediction_jaccard,
     )
 
     li = spark.read.parquet(LI).where("l_orderkey % 5 = 0")
-    edges = cooccurrence_edges(li, "l_orderkey", "l_partkey",
-                               max_group_size=6).select(
+    cooc = cooccurrence_edges(li, "l_orderkey", "l_partkey",
+                              max_group_size=6).select(
         F.col("a").alias("src"), F.col("b").alias("dst"))
-    for fn in (link_prediction_jaccard, link_prediction_adamic_adar):
-        base = [tuple(r) for r in fn(edges, top_k=20).collect()]
-        opt = [tuple(r) for r in fn(edges, top_k=20,
-                                    edges_distinct=True).collect()]
-        assert base == opt and base
+    generic = spark.createDataFrame(
+        [(1, 2), (2, 1), (1, 2), (2, 3), (3, 3), (3, 4), (4, 1), (4, 3),
+         (2, 2), (5, 5), (5, 6), (6, 7), (7, 5), (8, 6), (6, 8), (1, 6),
+         (None, 3), (7, None)],
+        "src long, dst long",
+    )
+    for edges, cap in ((cooc, 64), (generic, 64), (generic, 2)):
+        edge_list = [(r.src, r.dst) for r in edges.collect()]
+        jac, ada = _link_prediction_reference(edge_list, cap, 20, 1_000_000)
+        got_jac = [tuple(r) for r in link_prediction_jaccard(
+            edges, max_pivot_degree=cap, top_k=20).collect()]
+        got_ada = [tuple(r) for r in link_prediction_adamic_adar(
+            edges, max_pivot_degree=cap, top_k=20).collect()]
+        assert got_jac == jac and jac
+        assert got_ada == ada and ada
+
+
+def _hash_exchanges(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sum("Exchange hashpartitioning" in line for line in plan.splitlines())
+
+
+def test_link_prediction_plans_one_edge_dedup(spark):
+    """The canonical edge set is built once and feeds the adjacency, the
+    degrees, the pivots and the anti-join. On the entry query's input the
+    static plans (AQE off) hold at most 11 (Jaccard) and 14 (Adamic-Adar)
+    hash-exchange nodes, reused ones included; the two-sided dedup they
+    replace planned 15 and 16."""
+    from data2neo_spark.operators.graph import (
+        cooccurrence_edges, link_prediction_adamic_adar,
+        link_prediction_jaccard,
+    )
+
+    li = spark.read.parquet(LI).where(F.col("l_orderkey") % 10 == 0)
+    edges = cooccurrence_edges(li, "l_orderkey", "l_partkey",
+                               max_group_size=8).select(
+        F.col("a").alias("src"), F.col("b").alias("dst"))
+    before = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        jac = _hash_exchanges(link_prediction_jaccard(
+            edges, max_pivot_degree=64, top_k=50))
+        ada = _hash_exchanges(link_prediction_adamic_adar(
+            edges, max_pivot_degree=64, top_k=50))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", before)
+    assert jac <= 11
+    assert ada <= 14
