@@ -15,6 +15,7 @@ value-for-value including their recall misses.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
@@ -30,8 +31,36 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
 )
 
 
-def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
+def _read(
+    spark: SparkSession, sf_dir: str, table: str, key: str | None = None
+) -> DataFrame:
+    """Scan one test table; with ``key``, hash-spread it over the cores."""
+    df = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
+    if key is None:
+        return df
+    # every test table is one parquet row group, so its scan has 1-2 splits
+    return df.repartition(spark.sparkContext.defaultParallelism, F.col(key))
+
+
+_CACHED_SIZING = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
+def _with_cached_plan_sizing(fn):
+    """Run a query with AQE free to coalesce the frames it persists (the
+    setting ``build_session`` makes), then restore the caller's value.
+    Spark reads the key at ``persist()``, which every query does inside
+    its own call."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        prev = spark.conf.get(_CACHED_SIZING)
+        spark.conf.set(_CACHED_SIZING, "true")
+        try:
+            return fn(spark, sf_dir)
+        finally:
+            spark.conf.set(_CACHED_SIZING, prev)
+
+    return run
 
 
 # ---------------------------------------------------------------------------
@@ -448,8 +477,8 @@ def _dedup_ngram(spark, sf_dir):
     from data2neo_spark.operators.dedup import ngram_jaccard_pairs
 
     return ngram_jaccard_pairs(
-        _read(spark, sf_dir, "documents"), "doc_id", n=3, threshold=0.1,
-        max_shingle_df=50,
+        _read(spark, sf_dir, "documents", key="doc_id"), "doc_id",
+        n=3, threshold=0.1, max_shingle_df=50,
     )
 
 
@@ -464,8 +493,8 @@ def _dedup_clusters(spark, sf_dir):
     )
 
     pairs = ngram_jaccard_pairs(
-        _read(spark, sf_dir, "documents"), "doc_id", n=3, threshold=0.1,
-        max_shingle_df=50,
+        _read(spark, sf_dir, "documents", key="doc_id"), "doc_id",
+        n=3, threshold=0.1, max_shingle_df=50,
     )
     return duplicate_clusters(pairs)
 
@@ -474,8 +503,8 @@ def _dedup_minhash(spark, sf_dir):
     from data2neo_spark.operators.dedup import minhash_lsh_duplicates
 
     return minhash_lsh_duplicates(
-        _read(spark, sf_dir, "documents"), "doc_id", threshold=0.2,
-        num_hashes=64, bands=16,
+        _read(spark, sf_dir, "documents", key="doc_id"), "doc_id",
+        threshold=0.2, num_hashes=64, bands=16,
     )
 
 
@@ -485,7 +514,8 @@ def _dedup_simhash(spark, sf_dir):
     from data2neo_spark.operators.dedup import simhash_near_duplicates
 
     return simhash_near_duplicates(
-        _read(spark, sf_dir, "documents"), "doc_id", max_hamming=3
+        _read(spark, sf_dir, "documents", key="doc_id"), "doc_id",
+        max_hamming=3,
     ).withColumn("hamming", F.col("hamming").cast("long"))
 
 
@@ -506,7 +536,7 @@ def _dedup_embedding_lsh(spark, sf_dir):
     from data2neo_spark.operators.dedup import embedding_near_duplicates_lsh
 
     return embedding_near_duplicates_lsh(
-        _read(spark, sf_dir, "embeddings"), "vec_id", dim=64,
+        _read(spark, sf_dir, "embeddings", key="vec_id"), "vec_id", dim=64,
         threshold=0.3, n_planes=6,
     )
 
@@ -515,7 +545,8 @@ def _sim_topk(spark, sf_dir):
     from data2neo_spark.operators.similarity import cosine_topk
 
     return cosine_topk(
-        _read(spark, sf_dir, "embeddings"), "vec_id", "embedding",
+        _read(spark, sf_dir, "embeddings", key="vec_id"),
+        "vec_id", "embedding",
         query_max_id=5, k=10,
     )
 
@@ -524,7 +555,8 @@ def _sim_ann(spark, sf_dir):
     from data2neo_spark.operators.similarity import lsh_ann_topk
 
     return lsh_ann_topk(
-        _read(spark, sf_dir, "embeddings"), "vec_id", "embedding",
+        _read(spark, sf_dir, "embeddings", key="vec_id"),
+        "vec_id", "embedding",
         dim=64, query_max_id=5, k=10, n_planes=8,
     )
 
@@ -536,7 +568,8 @@ def _sim_ivf(spark, sf_dir):
     from data2neo_spark.operators.similarity import ivf_ann_topk
 
     return ivf_ann_topk(
-        _read(spark, sf_dir, "embeddings"), "vec_id", "embedding",
+        _read(spark, sf_dir, "embeddings", key="vec_id"),
+        "vec_id", "embedding",
         dim=64, query_max_id=5, k=10, n_cells=8, n_probe=3,
         centroid_strategy="rows",
     )
@@ -597,7 +630,7 @@ def _dedup_incremental(spark, sf_dir):
     signatures and restricts pairing to odd×even."""
     from data2neo_spark.operators.dedup import incremental_near_duplicates
 
-    docs = _read(spark, sf_dir, "documents")
+    docs = _read(spark, sf_dir, "documents", key="doc_id")
     new = docs.where(F.col("doc_id") % 2 == 1)
     corpus = docs.where(F.col("doc_id") % 2 == 0)
     return incremental_near_duplicates(
@@ -620,7 +653,7 @@ def _dedup_incremental_store(spark, sf_dir):
         band_signatures, incremental_near_duplicates,
     )
 
-    docs = _read(spark, sf_dir, "documents")
+    docs = _read(spark, sf_dir, "documents", key="doc_id")
     new = docs.where(F.col("doc_id") % 2 == 1)
     corpus = docs.where(F.col("doc_id") % 2 == 0)
     base = tempfile.mkdtemp(prefix="d2s_sigstore_")
@@ -1087,7 +1120,9 @@ def _text_tfidf(spark, sf_dir):
     """TF-IDF top-5 terms per doc (smoothed idf, deterministic tie-break)."""
     from data2neo_spark.operators.text import tfidf_top_terms
 
-    return tfidf_top_terms(_read(spark, sf_dir, "documents"), "doc_id", k=5)
+    return tfidf_top_terms(
+        _read(spark, sf_dir, "documents", key="doc_id"), "doc_id", k=5
+    )
 
 
 def _text_chunks(spark, sf_dir):
@@ -1108,13 +1143,13 @@ def _text_fingerprint(spark, sf_dir):
     )
 
 
-def _structured_docs(spark, sf_dir) -> DataFrame:
+def _structured_docs(spark, sf_dir, key=None) -> DataFrame:
     """Corpus view with deterministic line/bullet/ellipsis structure (the
     synthetic corpus is single-line, which would make the Gopher line
     metrics constant-zero): three literal replaces, identical left-to-right
     non-overlapping semantics in Spark and DuckDB, so the oracle replays
     the same structured text."""
-    docs = _read(spark, sf_dir, "documents")
+    docs = _read(spark, sf_dir, "documents", key=key)
     text = F.replace(F.col("text"), F.lit(" table "), F.lit("\n"))
     text = F.replace(text, F.lit(" row "), F.lit("\n- "))
     text = F.replace(text, F.lit(" slow "), F.lit("...\n"))
@@ -1126,7 +1161,7 @@ def _text_quality_v2(spark, sf_dir):
     joined with the top-bigram share (two partial-agg shuffles)."""
     from data2neo_spark.operators.text import top_ngram_share, with_gopher_quality
 
-    docs = _structured_docs(spark, sf_dir)
+    docs = _structured_docs(spark, sf_dir, key="doc_id")
     g = with_gopher_quality(docs).select(
         "doc_id", "n_words", "frac_dup_lines", "frac_dup_paragraphs",
         "frac_bullet_lines", "frac_ellipsis_lines", "symbol_word_ratio",
@@ -1202,7 +1237,7 @@ def _contamination_check(spark, sf_dir):
     n-gram membership join, per-doc hit counts."""
     from data2neo_spark.operators.dedup import contamination_check
 
-    docs = _read(spark, sf_dir, "documents")
+    docs = _read(spark, sf_dir, "documents", key="doc_id")
     bench = docs.where(F.col("doc_id") % 19 == 0)
     corpus = docs.where(F.col("doc_id") % 19 != 0)
     return contamination_check(corpus, bench, "doc_id", n=3)
@@ -1411,7 +1446,7 @@ def _graph_pagerank(spark, sf_dir):
     replays the exact floor-division arithmetic."""
     from data2neo_spark.operators.graph import pagerank
 
-    li = _read(spark, sf_dir, "lineitem").select(
+    li = _read(spark, sf_dir, "lineitem", key="l_orderkey").select(
         F.col("l_orderkey").alias("src"),
         (F.col("l_partkey") + F.lit(10_000_000)).alias("dst"),
     )
@@ -1621,7 +1656,7 @@ def _kg_canonical_pairs(spark, sf_dir):
     pair + distance value-verified."""
     from data2neo_spark.operators.entities import name_near_duplicates
 
-    sup = _read(spark, sf_dir, "supplier").select(
+    sup = _read(spark, sf_dir, "supplier", key="s_suppkey").select(
         F.col("s_suppkey").cast("long").alias("ent_id"),
         F.col("s_name").alias("name"),
     )
@@ -1831,7 +1866,7 @@ def _kg_fuse(spark, sf_dir):
     from data2neo_spark.operators.dedup import md5_hash60
     from data2neo_spark.operators.fusion import fuse_claims
 
-    base = _read(spark, sf_dir, "part").select(
+    base = _read(spark, sf_dir, "part", key="p_partkey").select(
         "p_partkey", "p_brand", "p_size",
         F.explode(F.sequence(F.lit(0), F.lit(4))).alias("s"),
     )
@@ -1863,7 +1898,8 @@ def _sim_ivfpq(spark, sf_dir):
     from data2neo_spark.operators.similarity import ivfpq_ann_topk
 
     return ivfpq_ann_topk(
-        _read(spark, sf_dir, "embeddings"), "vec_id", "embedding",
+        _read(spark, sf_dir, "embeddings", key="vec_id"),
+        "vec_id", "embedding",
         dim=64, query_max_id=5, k=10, n_cells=8, n_probe=2, m=8,
         n_codes=16,
     )
@@ -1877,7 +1913,8 @@ def _sim_pq(spark, sf_dir):
     from data2neo_spark.operators.similarity import pq_ann_topk
 
     return pq_ann_topk(
-        _read(spark, sf_dir, "embeddings"), "vec_id", "embedding",
+        _read(spark, sf_dir, "embeddings", key="vec_id"),
+        "vec_id", "embedding",
         dim=64, query_max_id=5, k=10, m=8, n_codes=16,
         codebook_strategy="rows",
     )
@@ -1932,7 +1969,7 @@ def _text_trigram_lm(spark, sf_dir):
     value-hash replayable."""
     from data2neo_spark.operators.text import with_trigram_lm_scores
 
-    docs = _read(spark, sf_dir, "documents")
+    docs = _read(spark, sf_dir, "documents", key="doc_id")
     train = docs.where(F.col("doc_id") % 2 == 0)
     return with_trigram_lm_scores(docs, "doc_id", train_on=train)
 
@@ -1943,7 +1980,9 @@ def _text_bigram_lm(spark, sf_dir):
     bigram model (perplexity filtering without an external KenLM)."""
     from data2neo_spark.operators.text import with_bigram_lm_scores
 
-    return with_bigram_lm_scores(_read(spark, sf_dir, "documents"), "doc_id")
+    return with_bigram_lm_scores(
+        _read(spark, sf_dir, "documents", key="doc_id"), "doc_id"
+    )
 
 
 # ambiguous candidate dictionary for kg_entity_disambig — surfaces drawn
@@ -2000,7 +2039,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # measured tools/check_oracle.py time at sf0.01 — queries beyond
     # any cut keep their earlier green rows, so every query has a
     # driver-green row in some round.
-    return {
+    fns = {
         # round-5 late additions — never driver-checked, so they lead
         "events_sessionize": _events_sessionize,
         "events_funnel": _events_funnel,
@@ -2108,6 +2147,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_salted_match": _kg_salted_match,
         "text_fingerprint": _text_fingerprint,
     }
+    return {name: _with_cached_plan_sizing(fn) for name, fn in fns.items()}
 
 
 _LANG_CASE = """
@@ -4126,6 +4166,9 @@ FROM r GROUP BY 1
             ") ORDER BY aes_key, doc_id LIMIT 200"
         ),
         "kg_validate_shapes": (
+            # the summary groups violation rows: a shape nobody violates
+            # (no customer over 20 orders at sf0.001) has no row
+            "SELECT * FROM ("
             "SELECT 'endpoint_type' AS kind, 'CONTAINS' AS pred, "
             "count(*) AS n_violations FROM lineitem "
             "UNION ALL "
@@ -4134,6 +4177,7 @@ FROM r GROUP BY 1
             "  HAVING count(*) > 20) "
             "UNION ALL "
             "SELECT 'unknown_predicate', 'IN_SEGMENT', count(*) FROM customer"
+            ") WHERE n_violations > 0"
         ),
         "sketch_hll": (
             # exact replay of operators/sketch.py HLL math: 60-bit md5

@@ -101,12 +101,10 @@ def _sig_frame(
     allocation per lambda) with vectorized numpy over md5 base hashes
     (guide §4.2); values are bit-identical: md5 → leading 60 bits → mod
     P30, then ``min((aᵢ·h + bᵢ) mod P31)`` in int64 (no overflow:
-    a·h < 2^60), band bucket = md5 of the comma-joined signature slice.
-    Heavy per-row work also gets the deterministic parallelism guard
-    (text.spread_partitions) — a no-op at real scale."""
+    a·h < 2^60), band bucket = md5 of the comma-joined signature slice."""
     import numpy as np  # noqa: F401 — driver-side presence check
 
-    from .text import _ID_PD_DTYPE, _shingle_rows, spread_partitions
+    from .text import _ID_PD_DTYPE, _shingle_rows
 
     if bands and not num_hashes:
         raise ValueError("_sig_frame: bands requires num_hashes")
@@ -180,8 +178,7 @@ def _sig_frame(
                 data["_buckets"] = _pd.Series(buckets, dtype="object")
             yield _pd.DataFrame(data)
 
-    src = spread_partitions(df.select(id_col, text_col), id_col)
-    return src.mapInPandas(fn, schema)
+    return df.select(id_col, text_col).mapInPandas(fn, schema)
 
 
 def contamination_check(
@@ -607,13 +604,8 @@ def simhash(df: DataFrame, id_col: str, text_col: str = "text", bits: int = 60) 
     ~2× slower than the codegen'd hash aggregate despite its shuffle. Token
     hash = md5_hash60, so the signature is bit-identical in the DuckDB
     oracle; 60 bits keep the value non-negative in a signed long (no
-    sign-bit special case). The token source gets the deterministic
-    parallelism guard (text.spread_partitions) so the md5 + 60-sum map
-    side is not serialized onto a single-row-group scan's 1-2 splits."""
-    from .text import spread_partitions
-
-    src = spread_partitions(df.select(id_col, text_col), id_col)
-    tok = src.select(
+    sign-bit special case)."""
+    tok = df.select(
         F.col(id_col),
         F.explode(F.split(F.col(text_col), " ")).alias("word"),
     ).withColumn("h", md5_hash60(F.col("word")))
@@ -825,14 +817,9 @@ def embedding_near_duplicates_lsh(
     (tunable via n_planes; near-identical vectors almost always share a
     bucket since they disagree on a plane with prob ≈ angle/π)."""
     from .similarity import cosine_expr, lsh_signature, with_norm
-    from .text import spread_partitions
 
     sig = with_norm(
-        lsh_signature(
-            spread_partitions(df, id_col), vec_col, dim, n_planes, seed
-        ),
-        vec_col,
-        dim=dim,
+        lsh_signature(df, vec_col, dim, n_planes, seed), vec_col, dim=dim
     )
     a = sig.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
                    F.col("_norm").alias("na"), "bucket")

@@ -67,11 +67,7 @@ def name_near_duplicates(
     (the LSH degenerate-bucket guard, see dedup.py) — candidate recall
     only; leave ``None`` (default) for the exact contract.
     """
-    from .text import spread_partitions
-
-    # the delete-1 key build is an interpreted per-row transform (two
-    # substrings per position) — spread it (no-op at real scale)
-    keyed = spread_partitions(df, id_col).select(
+    keyed = df.select(
         F.col(id_col).alias("_id"),
         F.col(name_col).alias("_name"),
         F.explode(_delete1_keys(F.col(name_col))).alias("_key"),

@@ -98,8 +98,6 @@ def fuse_claims(claims: DataFrame, subj: str = "subj", pred: str = "pred",
     accuracy. ``scale`` is the integer accuracy denominator (round-0
     agreement fraction × scale, floored).
     """
-    from .text import spread_partitions
-
     # r6 shape: ONE groupBy collapses the claim stream to (subj, pred,
     # obj, source-SET) — collect_set IS the one-vote-per-source dedup, so
     # every later stage works on object-level rows (bounded by distinct
@@ -107,13 +105,9 @@ def fuse_claims(claims: DataFrame, subj: str = "subj", pred: str = "pred",
     # vote-level rows. Identical values by construction:
     #   n_votes(s,p,o)   = size(set)            (votes.groupBy(s,p,o).count)
     #   per-source votes = explode(set)          (votes rows, exactly once)
-    # The claim stream gets the deterministic parallelism spread (claims
-    # are often generated by a narrow projection over a few scan splits;
-    # no-op at real scale). Persisted: round-0, accuracy and weighted
-    # stages all probe it.
+    # Persisted: round-0, accuracy and weighted stages all probe it.
     spo = (
-        spread_partitions(claims, subj)
-        .where(F.col(source).isNotNull())
+        claims.where(F.col(source).isNotNull())
         .select(
             F.col(subj).alias("subj"), F.col(pred).alias("pred"),
             F.col(obj).alias("obj"), F.col(source).alias("source"),

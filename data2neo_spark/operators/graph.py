@@ -60,8 +60,6 @@ def pagerank(
     killed job restarts from the highest complete round below ``iters``.
     Disk writes replace the in-memory persist per round.
     """
-    from .text import spread_partitions
-
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # ONE aggregation derives the node set, per-src out-degrees AND the
     # no-incoming-edge set (r6): the old shape paid three passes over the
@@ -95,11 +93,7 @@ def pagerank(
         # smaller than the rank frame): avoids a sort-merge join just to
         # attach degrees to the edge frame
         deg = F.broadcast(deg)
-    # spread before persisting: the cached probe side of every round's
-    # broadcast join would otherwise inherit the scan's (or AQE's
-    # size-coalesced) few partitions and run each round on a fraction of
-    # the cores; no-op when the frame already has enough partitions
-    ed = spread_partitions(e.join(deg, "src"), "src").persist()
+    ed = e.join(deg, "src").persist()
     base = (scale * (damping_den - damping_num)) // (damping_den * n)
     # each round materializes (persist + count) before the next round's
     # broadcast build references it — a fully-lazy recurrence would
@@ -348,11 +342,8 @@ def khop_reachability(
             edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d"))
         )
     # the edge frame is probed once per layer — persist it so k layers
-    # cost one source scan, not k (pagerank's `ed` contract); spread so
-    # the per-layer probe runs on all cores (no-op at real scale)
-    from .text import spread_partitions
-
-    e = spread_partitions(e, "_s").persist()
+    # cost one source scan, not k (pagerank's `ed` contract)
+    e = e.persist()
     seed_nodes = seeds.select(F.col(seeds.columns[0]).alias("seed")).distinct()
 
     # ``reached`` is a lazy union of persisted layers (hop 0 = the seeds):
@@ -418,25 +409,21 @@ def label_propagation(
 
     Shape per round: one join of the (node, nbr) adjacency with the
     label frame — label frame broadcasts up to ``broadcast_nodes_max``
-    rows so the adjacency never shuffles — then a (node, label) vote
-    groupBy and a per-node top-1 hash aggregate, both partial-agg friendly.
+    rows so the adjacency never shuffles — then ONE per-node
+    ``mode(label, deterministic=True)`` aggregate (most frequent label,
+    smallest on ties), partial-agg friendly: one shuffle per round.
     A round reads the previous labels twice (vote join and carry-over
     join), so every round's labels are materialized with their lineage
     cut (operators/rounds.py) and the previous round is released.
     ``checkpoint_dir`` writes each round's label table to
     ``<dir>/lpa_round_<i>`` in place of the persist and resumes from the
     highest complete round below ``iters`` (operators/rounds.py)."""
-    from .text import spread_partitions
-
     nb = edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr")).unionAll(
         edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr"))
     )
     # probed every round — persist so rounds don't re-derive the
-    # adjacency from the source plan (khop/pagerank edge contract);
-    # spread first so the cached probe side of each round's broadcast
-    # join runs on all cores, not the upstream plan's few AQE-coalesced
-    # partitions (no-op at real scale)
-    nb = spread_partitions(nb, "node").persist()
+    # adjacency from the source plan (khop/pagerank edge contract)
+    nb = nb.persist()
     nodes = nb.select("node").distinct()
     labels = nodes.select("node", F.col("node").alias("label")).persist()
     n_nodes = labels.count()
@@ -449,19 +436,8 @@ def label_propagation(
         lbl = labels.select(F.col("node").alias("nbr"), F.col("label"))
         if n_nodes <= broadcast_nodes_max:
             lbl = F.broadcast(lbl)
-        votes = (
-            nb.join(lbl, "nbr")
-            .groupBy("node", "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        # top-1 per node as a HASH aggregate, not a sort window: winner
-        # maximizes (count, -label) — max count, min label on ties —
-        # identical to row_number() over (ORDER BY c DESC, label) but
-        # partial-agg combinable and with no per-round sort
-        top = votes.groupBy("node").agg(
-            F.max_by(
-                F.col("label"), F.struct(F.col("c"), (-F.col("label")).alias("nl"))
-            ).alias("_new")
+        top = nb.join(lbl, "nbr").groupBy("node").agg(
+            F.mode("label", deterministic=True).alias("_new")
         )
         prev = labels
         labels, _ = rounds.materialize(

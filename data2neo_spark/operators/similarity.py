@@ -64,17 +64,13 @@ def cosine_topk(
     ``dim`` (optional) unrolls the dot/norm folds into codegen
     expressions (identical values — see :func:`dot_expr`).
     """
-    from .text import spread_partitions
-
     queries = corpus.where(F.col(id_col) < query_max_id)
     qn = with_norm(queries, vec_col, dim=dim).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
         F.col("_norm").alias("qnorm"),
     )
-    cn = with_norm(
-        spread_partitions(corpus, id_col), vec_col, dim=dim
-    ).select(
+    cn = with_norm(corpus, vec_col, dim=dim).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
         F.col("_norm").alias("cnorm"),
@@ -154,9 +150,7 @@ def ivf_ann_topk(
                 if len(members):
                     centroids[c] = members.mean(axis=0)
 
-    from .text import spread_partitions
-
-    with_d = spread_partitions(corpus, id_col).select("*", *[
+    with_d = corpus.select("*", *[
         F.aggregate(
             F.zip_with(
                 F.col(vec_col),
@@ -259,11 +253,7 @@ def lsh_ann_topk(
     At 100TB scale the bucket join replaces the brute-force crossJoin; recall
     is tunable via n_planes (fewer planes → bigger buckets → higher recall).
     """
-    from .text import spread_partitions
-
-    sig = lsh_signature(
-        spread_partitions(corpus, id_col), vec_col, dim, n_planes, seed
-    )
+    sig = lsh_signature(corpus, vec_col, dim, n_planes, seed)
     queries = sig.where(F.col(id_col) < query_max_id)
     qn = with_norm(queries, vec_col, dim=dim).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
@@ -416,7 +406,7 @@ def _pq_encode_arrow(
     interpreted higher-order lambda trees per row with batch matrix ops.
     Output: ``(out_id, [cell,] _codes array<int>)``; NULL vectors keep
     their row with NULL codes (the old transform-over-null semantics)."""
-    from .text import _ID_PD_DTYPE, spread_partitions
+    from .text import _ID_PD_DTYPE
 
     id_type = corpus.schema[id_col].dataType.simpleString()
     id_dtype = _ID_PD_DTYPE.get(id_type, "object")
@@ -476,8 +466,7 @@ def _pq_encode_arrow(
             data["_codes"] = _pd.Series(codes_list, dtype="object")
             yield _pd.DataFrame(data)
 
-    src = spread_partitions(corpus.select(id_col, vec_col), id_col)
-    return src.mapInPandas(fn, schema)
+    return corpus.select(id_col, vec_col).mapInPandas(fn, schema)
 
 
 def pq_ann_topk(

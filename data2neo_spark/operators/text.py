@@ -28,30 +28,6 @@ def _occurrences(text: Column, token: str) -> Column:
     return F.size(F.split(padded, f" {token} ")) - F.lit(1)
 
 
-def spread_partitions(df: DataFrame, key_col: str) -> DataFrame:
-    """Deterministic scale-gated parallelism guard for CPU-heavy per-row
-    pipelines (guide §2.5 "input skew: one huge unsplittable file …
-    repartition immediately after the read").
-
-    A synthetic single-row-group parquet file yields 1-2 scan splits, so
-    everything up to the first exchange runs on 1-2 cores no matter how
-    many the session has. When the current partition count is below the
-    session's default parallelism, hash-repartition on ``key_col`` —
-    deterministic (never round-robin/rand, guide §2.5 SPARK-38388 note)
-    and therefore retry-safe. At real scale the scan already has more
-    splits than cores and this is a NO-OP (no extra exchange), so the
-    guard cannot regress a 100 TB run."""
-    try:
-        spark = df.sparkSession
-        n = spark.sparkContext.defaultParallelism
-        cur = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    if cur >= n:
-        return df
-    return df.repartition(n, F.col(key_col))
-
-
 def _shingle_rows(text: str, n: int):
     """Per-document distinct n-word shingles, first-occurrence order —
     byte-identical to ``array_distinct(transform(sequence(...),
@@ -102,8 +78,9 @@ def shingle_arrays_arrow(
                 "sh_arr": _pd.Series(shs, dtype="object"),
             })
 
-    src = spread_partitions(df.select(id_col, text_col), id_col)
-    return src.mapInPandas(fn, f"{id_col} {id_type}, sh_arr array<string>")
+    return df.select(id_col, text_col).mapInPandas(
+        fn, f"{id_col} {id_type}, sh_arr array<string>"
+    )
 
 
 def with_quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -232,7 +209,7 @@ def tfidf_top_terms(
     """
     from pyspark.sql import Window
 
-    tok = spread_partitions(df, id_col).select(
+    tok = df.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("word")
     )
     tf = tok.groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("tf"))
@@ -335,9 +312,6 @@ def with_gopher_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
     aggregation (top n-gram share) lives in :func:`top_ngram_share`.
     """
     text = F.col(text_col)
-    # the per-row battery (line/paragraph dup scans are O(n²) array HOFs)
-    # is the heavy part — spread it (no-op at real scale)
-    df = spread_partitions(df, text_col)
     bound = (
         df.withColumn("_words", F.split(text, " "))
         .withColumn("_lines", F.split(text, "\n"))
@@ -399,12 +373,9 @@ def top_ngram_share(
     max/sum — two shuffles, both with map-side partial aggregation; this
     codegen'd path beats an interpreted per-row higher-order fold (the
     same measured tradeoff as SimHash, see operators/dedup.py). Documents
-    shorter than ``n`` words are absent from the result. The per-row
-    gram build (a slice per position) gets the parallelism spread.
+    shorter than ``n`` words are absent from the result.
     """
-    bound = spread_partitions(df, id_col).withColumn(
-        "_words", F.split(F.col(text_col), " ")
-    )
+    bound = df.withColumn("_words", F.split(F.col(text_col), " "))
     words = F.col("_words")
     grams = F.transform(
         F.sequence(F.lit(0), F.size(words) - F.lit(n)),
@@ -675,10 +646,7 @@ def _bigram_stream(
     """([id,] w1, w2) — one row per adjacent word pair. The pair array is
     built inside the scan stage (sequence+element_at, zero shuffle); docs
     shorter than 2 words emit nothing (sequence(0, -1) would count DOWN —
-    the same guard as remove_shared_ngrams). The per-row pair build is
-    the heavy part, so the input gets the deterministic parallelism
-    spread (no-op at real scale)."""
-    df = spread_partitions(df, id_col if id_col is not None else text_col)
+    the same guard as remove_shared_ngrams)."""
     bound = df.withColumn("_words", F.split(F.col(text_col), " "))
     words = F.col("_words")
     pairs = F.transform(
@@ -957,8 +925,7 @@ def _trigram_stream(
 ) -> DataFrame:
     """([id,] w1, w2, w3) — one row per adjacent word triple, built
     inside the scan stage like _bigram_stream (zero shuffle); docs
-    shorter than 3 words emit nothing. Spread like _bigram_stream."""
-    df = spread_partitions(df, id_col if id_col is not None else text_col)
+    shorter than 3 words emit nothing."""
     bound = df.withColumn("_words", F.split(F.col(text_col), " "))
     words = F.col("_words")
     triples = F.transform(

@@ -12,6 +12,11 @@ Encodes the configuration lessons measured in BENCH.md:
   1,547 -> ~100 tasks, converter node pass 148 -> 18, relationship pass
   83 -> 18),
 * Arrow batches sized for the pandas-UDF wrapper paths.
+
+Operators leave their input's partitioning alone. Workarounds for the
+synthetic test data live in the driver contract (``__spark_entry__.py``):
+it spreads single-row-group scans in ``_read(..., key=)`` and runs each
+query with the cached-plan sizing above, restoring the caller's setting.
 """
 
 from __future__ import annotations

@@ -9,6 +9,7 @@ afterwards; ``build_session`` itself is not called here because its
 
 from contextlib import contextmanager
 
+import pytest
 from pyspark.sql import functions as F
 
 CACHED_SIZING = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
@@ -75,3 +76,29 @@ def test_khop_rows_identical_with_cached_sizing_on_and_off(spark):
     # the result is the union of the per-hop layers; sized layers hold
     # fewer partitions than layers that keep every shuffle partition
     assert parts_on < parts_off
+
+
+def test_entry_queries_size_their_caches_and_restore_the_setting(spark):
+    """Every driver query runs with cached-plan sizing on, whatever the
+    caller's session says, and hands the caller's value back, also when
+    the query raises."""
+    import __spark_entry__ as entry
+
+    shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    seen = {}
+
+    def query(spark, sf_dir):
+        seen["parts"] = _persisted_partitions(spark)
+        return spark.range(1)
+
+    def failing(spark, sf_dir):
+        raise RuntimeError("boom")
+
+    with cached_sizing(spark, on=False):
+        entry._with_cached_plan_sizing(query)(spark, "unused")
+        assert spark.conf.get(CACHED_SIZING) == "false"
+        with pytest.raises(RuntimeError):
+            entry._with_cached_plan_sizing(failing)(spark, "unused")
+        assert spark.conf.get(CACHED_SIZING) == "false"
+    assert seen["parts"] < shuffle_partitions
+    assert all(hasattr(fn, "__wrapped__") for fn in entry.queries().values())

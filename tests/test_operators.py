@@ -1,6 +1,8 @@
 """Unit tests for the training-data operators (dedup / similarity / text /
 multimodal) on constructed inputs with known answers."""
 
+from collections import Counter
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -2176,6 +2178,17 @@ def test_label_propagation_many_rounds_without_checkpoint_dir(spark, tmp_path):
     disk = {r.node: r.label for r in label_propagation(
         edges, iters=12, checkpoint_dir=str(tmp_path / "lpa")).collect()}
     assert len(mem) == n and mem == disk
+    # plain-Python synchronous LPA: every edge votes from both ends
+    # (repeated edges and self-loops count twice), smallest label on ties
+    nbrs = {}
+    for s, d in edges.collect():
+        nbrs.setdefault(s, []).append(d)
+        nbrs.setdefault(d, []).append(s)
+    ref = {v: v for v in nbrs}
+    for _ in range(12):
+        votes = {v: Counter(ref[u] for u in us) for v, us in nbrs.items()}
+        ref = {v: min(c, key=lambda lab: (-c[lab], lab)) for v, c in votes.items()}
+    assert mem == ref
 
 
 def test_label_propagation_checkpoint_resume(spark, tmp_path):

@@ -123,6 +123,12 @@ def test_dedup_plans_have_no_nested_loop(spark):
     for name, plan in plans.items():
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
+        # operators leave input partitioning alone, even on a
+        # one-partition scan
+        assert "REPARTITION_BY_NUM" not in plan, name
+    import re
+    # minhash: the band-bucket join and the pair dedup, nothing else
+    assert len(re.findall(r"\(\d+\) Exchange", plans["minhash"])) == 2
     # the exact path IS all-pairs by contract (oracle slice, max_id-gated)
     exact = plan_of(dedup.embedding_near_duplicates(
         emb, "vec_id", threshold=0.3, max_id=50))
@@ -146,7 +152,7 @@ def test_contamination_plan_broadcasts_benchmark(spark):
     # the per-doc groupBy is the ONLY corpus-side hash shuffle; the
     # benchmark's distinct adds its own (small side) — so at most 2, and
     # none of them may be a join-key shuffle of the corpus shingle stream
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 2
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 2
 
 
 def test_bpe_count_is_zero_shuffle_arrow(spark):

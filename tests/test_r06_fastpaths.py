@@ -5,6 +5,8 @@ These tests reconstruct the ORIGINAL (pre-r6) Column formulations inline
 and assert equality against the shipped fast paths, so a future change
 that drifts the fast path's values fails here, not at the oracle."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -93,20 +95,26 @@ def test_banded_frame_matches_column_formulation(spark):
     assert fast == slow and fast
 
 
-def test_spread_partitions_gate_and_rows(spark):
-    """No-op when partitions >= defaultParallelism; row-preserving and
-    deterministic when it fires."""
-    from data2neo_spark.operators.text import spread_partitions
+def test_read_with_key_spreads_the_scan(spark):
+    """The entry's ``_read(..., key=)`` keeps the scan's rows, spreads
+    them over defaultParallelism partitions, and hashes each key to the
+    same partition on every call (deterministic, so retry-safe)."""
+    import __spark_entry__ as entry
 
-    docs = spark.read.parquet(DOCS)
+    sf_dir = os.path.dirname(DOCS)
     n = spark.sparkContext.defaultParallelism
-    wide = docs.repartition(n + 2, "doc_id")
-    assert spread_partitions(wide, "doc_id") is wide  # gate: untouched
-    narrow = docs.coalesce(1)
-    out = spread_partitions(narrow, "doc_id")
-    assert out.rdd.getNumPartitions() == n
-    assert sorted(r[0] for r in out.select("doc_id").collect()) == \
-           sorted(r[0] for r in docs.select("doc_id").collect())
+
+    def placement():
+        out = entry._read(spark, sf_dir, "documents", key="doc_id")
+        assert out.rdd.getNumPartitions() == n
+        rows = out.select("*", F.spark_partition_id().alias("_p")).collect()
+        return ({r["doc_id"]: r["_p"] for r in rows},
+                sorted(tuple(r)[:-1] for r in rows))
+
+    first, rows = placement()
+    second, _ = placement()
+    assert rows == sorted(map(tuple, spark.read.parquet(DOCS).collect()))
+    assert first == second and len(set(first.values())) > 1
 
 
 def test_hamming_join_path_equals_grouped_path(spark):
