@@ -35,6 +35,7 @@ from .core.registrar import (
 from .core.store import GraphStore
 from .core.registry import IDRegistry
 from .core.converter import ConsoleProgress, Converter
+from .operators.rounds import release
 from .sources.iterators import (
     ResourceIterator,
     IteratorIterator,
@@ -77,6 +78,7 @@ __all__ = [
     "compile_schema",
     "SchemaConfigException",
     "build_session",
+    "release",
     "load_file",
     "register_attribute_postprocessor",
     "register_attribute_preprocessor",

@@ -28,6 +28,8 @@ from typing import List, Optional, Tuple
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from . import rounds
+from .rounds import persist
 from .text import word_shingles
 
 # affine hash-family moduli: largest prime < 2^30 (keeps a_i * h < 2^60,
@@ -72,16 +74,6 @@ def _shingle_expr(words: Column, n: int) -> Column:
     )
 
 
-def _shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(id, sh_arr) — each document's distinct shingle set as ONE array row
-    (zero-shuffle; the verification joins replicate arrays per candidate
-    pair instead of shuffling shingle-level rows). Arrow fast path — see
-    operators/text.shingle_arrays_arrow."""
-    from .text import shingle_arrays_arrow
-
-    return shingle_arrays_arrow(df, id_col, text_col, n)
-
-
 def _sig_frame(
     df: DataFrame,
     id_col: str,
@@ -94,7 +86,9 @@ def _sig_frame(
 ) -> DataFrame:
     """ONE Arrow pass over the corpus producing any combination of
     ``sh_arr`` (distinct shingle array), ``sig`` (MinHash signature) and
-    ``_buckets`` (per-band bucket hashes) per document.
+    ``_buckets`` (per-band bucket hashes) per document. Rows with NULL
+    text or fewer than ``shingle_n`` words are dropped — identical to the
+    Column formulation's ``where(size(words) >= n)``.
 
     This replaces the interpreted higher-order-function pipeline (one
     ``transform`` per affine hash — no whole-stage codegen, an array
@@ -214,7 +208,7 @@ def contamination_check(
         .select(F.explode(F.array_distinct(_shingle_expr(bwords, n))).alias("shingle"))
         .distinct()
     )
-    corp = _shingle_arrays(corpus, id_col, text_col, n)
+    corp = _sig_frame(corpus, id_col, text_col, n, with_shingles=True)
     return (
         corp.select(
             F.col(id_col),
@@ -273,13 +267,11 @@ def _parse_byte_conf(raw: str) -> int:
 
 
 def _verified_jaccard(
-    df: DataFrame,
     cand: DataFrame,
+    a_arrays: DataFrame,
+    b_arrays: DataFrame,
     id_col: str,
-    text_col: str,
-    n: int,
     threshold: float,
-    arrays: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Exact Jaccard over candidate pairs: (id_a, id_b, jaccard ≥ threshold).
 
@@ -291,15 +283,11 @@ def _verified_jaccard(
     here; the candidate stage is the only place pair blowup can occur, and
     it is capped/bucketed by construction.
 
-    ``arrays``: a prebuilt (id, sh_arr) frame (e.g. the shared
-    :func:`_sig_frame` output) so callers that already shingled for the
-    candidate stage don't pay the pass twice. The frame is persisted —
-    it is probed by BOTH sides of the pair join, and (unlike an
-    exchange-terminated subtree) a mapInPandas plan gets no ReuseExchange
-    dedup, so each side would re-run the python pass."""
-    if arrays is None:
-        arrays = _shingle_arrays(df, id_col, text_col, n)
-    arrays = arrays.persist()
+    ``a_arrays`` / ``b_arrays``: the (id, sh_arr) frames of the ``id_a``
+    and ``id_b`` documents, built by the candidate stage's
+    :func:`_sig_frame` pass, so the shingle pass is paid once. Self-dedup
+    passes one frame for both sides; it is probed twice and a mapInPandas
+    plan gets no ReuseExchange dedup, so that frame comes cached."""
     pairs = cand.select("id_a", "id_b")
     # broadcast ONLY the bare pair list (small by construction — capped/
     # bucketed candidate stage), never the intermediate that already
@@ -313,11 +301,11 @@ def _verified_jaccard(
     if _should_broadcast(pairs):
         pairs = pairs.hint("broadcast")
     joined = (
-        arrays.select(F.col(id_col).alias("id_a"),
-                      F.col("sh_arr").alias("_sa"))
+        a_arrays.select(F.col(id_col).alias("id_a"),
+                        F.col("sh_arr").alias("_sa"))
         .join(pairs, "id_a")
-        .join(arrays.select(F.col(id_col).alias("id_b"),
-                            F.col("sh_arr").alias("_sb")), "id_b")
+        .join(b_arrays.select(F.col(id_col).alias("id_b"),
+                              F.col("sh_arr").alias("_sb")), "id_b")
     )
     # bind the intersection size once: it appears in numerator AND union,
     # and higher-order exprs get no CSE
@@ -582,17 +570,16 @@ def minhash_lsh_duplicates(
     # ONE Arrow pass computes both the band buckets (candidate stage) and
     # the shingle arrays (verification stage); persisted because the two
     # stages and both pair-join sides probe it
-    sig = _sig_frame(
+    sig = persist(_sig_frame(
         df, id_col, text_col, shingle_n,
         num_hashes=num_hashes, bands=bands, with_shingles=True,
-    ).persist()
+    ))
     banded = sig.select(
         F.col(id_col), F.posexplode("_buckets").alias("band", "bucket")
     )
     cand = _candidates_from_banded(banded, id_col, max_bucket_size, None)
-    return _verified_jaccard(df, cand.select("id_a", "id_b"), id_col,
-                             text_col, shingle_n, threshold,
-                             arrays=sig.select(F.col(id_col), "sh_arr"))
+    arrays = sig.select(F.col(id_col), "sh_arr")
+    return _verified_jaccard(cand, arrays, arrays, id_col, threshold)
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str = "text", bits: int = 60) -> DataFrame:
@@ -705,7 +692,7 @@ def hamming_near_duplicates(
     bench graph). The capped/observed path keeps the grouped-pairs
     emission (the cap and the metrics need the bucket arrays)."""
     n_chunks = max_hamming + 1
-    sig = sig.persist()  # probed once per join side / grouping — tiny
+    sig = persist(sig)  # probed once per join side / grouping — tiny
     chunks = sig.select(
         F.col(id_col),
         hash_col,
@@ -902,12 +889,10 @@ def duplicate_clusters(
     only decrease), so resuming from any completed round is exact. The
     disk write replaces the in-memory persist and cuts the lineage too.
     """
-    from . import rounds
-
     # symmetrize in ONE pass over the (possibly expensive) pairs plan: a
     # union of two selects would recompute the upstream dedup pipeline per
     # branch — the explode emits both directions from a single scan
-    edges = (
+    edges = persist(
         pairs.select(
             F.explode(
                 F.array(
@@ -918,13 +903,13 @@ def duplicate_clusters(
         )
         .select("_e.u", "_e.v")
         .distinct()
-        .persist()
     )
     done, lab = rounds.resume(
         pairs.sparkSession, checkpoint_dir, "labels_round", max_iter
-    ) or (-1, edges.select(F.col("u").alias("v")).distinct().select(
-        F.col("v"), F.col("v").alias("lab")
-    ).persist())
+    ) or (-1, persist(
+        edges.select(F.col("u").alias("v")).distinct()
+        .select(F.col("v"), F.col("v").alias("lab"))
+    ))
     for i in range(done + 1, max_iter):
         flowed = edges.join(lab.withColumnRenamed("v", "u"), "u").select(
             F.col("v"), F.col("lab")
@@ -1110,14 +1095,14 @@ def incremental_near_duplicates(
     """Cross-frame candidates verified with exact Jaccard ≥ threshold:
     (id_a = new_id, id_b = corpus_id, jaccard). Pass ``corpus_bands``
     (a stored :func:`band_signatures` frame) to skip the corpus-side
-    signature pipeline — verification still reads corpus TEXT, but only
-    for the candidate pairs."""
+    signature pipeline — verification still shingles the corpus TEXT, in
+    one Arrow pass read by the ``id_b`` side only."""
     # the new batch's Arrow pass produces band buckets AND shingle arrays
     # at once (candidate + verification stages share it — persisted)
-    new_sig = _sig_frame(
+    new_sig = persist(_sig_frame(
         new_docs, id_col, text_col, shingle_n,
         num_hashes=num_hashes, bands=bands, with_shingles=True,
-    ).persist()
+    ))
     new_banded = new_sig.select(
         F.col(id_col), F.posexplode("_buckets").alias("band", "bucket")
     )
@@ -1125,12 +1110,14 @@ def incremental_near_duplicates(
         corpus_banded = corpus_bands.select(
             F.col(id_col), F.col("band"), F.col("bucket")
         )
-        corpus_arrays = _shingle_arrays(corpus, id_col, text_col, shingle_n)
+        corpus_arrays = _sig_frame(
+            corpus, id_col, text_col, shingle_n, with_shingles=True
+        )
     else:
-        corpus_sig = _sig_frame(
+        corpus_sig = persist(_sig_frame(
             corpus, id_col, text_col, shingle_n,
             num_hashes=num_hashes, bands=bands, with_shingles=True,
-        ).persist()
+        ))
         corpus_banded = corpus_sig.select(
             F.col(id_col), F.posexplode("_buckets").alias("band", "bucket")
         )
@@ -1138,9 +1125,5 @@ def incremental_near_duplicates(
     cand = _candidates_between_banded(
         new_banded, corpus_banded, id_col, max_bucket_size
     ).select(F.col("new_id").alias("id_a"), F.col("corpus_id").alias("id_b"))
-    both = new_docs.select(id_col, text_col).unionByName(
-        corpus.select(id_col, text_col)
-    )
-    arrays = new_sig.select(F.col(id_col), "sh_arr").unionByName(corpus_arrays)
-    return _verified_jaccard(both, cand, id_col, text_col, shingle_n,
-                             threshold, arrays=arrays)
+    return _verified_jaccard(cand, new_sig.select(F.col(id_col), "sh_arr"),
+                             corpus_arrays, id_col, threshold)

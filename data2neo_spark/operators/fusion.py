@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .rounds import persist
+
 __all__ = ["fuse_claims", "source_accuracy"]
 
 
@@ -106,7 +108,7 @@ def fuse_claims(claims: DataFrame, subj: str = "subj", pred: str = "pred",
     #   n_votes(s,p,o)   = size(set)            (votes.groupBy(s,p,o).count)
     #   per-source votes = explode(set)          (votes rows, exactly once)
     # Persisted: round-0, accuracy and weighted stages all probe it.
-    spo = (
+    spo = persist(
         claims.where(F.col(source).isNotNull())
         .select(
             F.col(subj).alias("subj"), F.col(pred).alias("pred"),
@@ -114,7 +116,6 @@ def fuse_claims(claims: DataFrame, subj: str = "subj", pred: str = "pred",
         )
         .groupBy("subj", "pred", "obj")
         .agg(F.collect_set("source").alias("_srcs"))
-        .persist()
     )
     w0 = spo.groupBy("subj", "pred").agg(
         F.max_by(

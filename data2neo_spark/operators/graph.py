@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import rounds
+from .rounds import persist
 
 
 def pagerank(
@@ -52,8 +53,7 @@ def pagerank(
     so the big edge frame is never shuffled — the only exchange per
     round is the partial-agg groupBy(dst). Beyond that the join shuffles
     on its key; hub skew behaves like any hot-key aggregation (AQE
-    skew-join or salting applies). Ranks persist per round; previous
-    rounds unpersist.
+    skew-join or salting applies).
 
     ``checkpoint_dir`` makes a long run resumable (operators/rounds.py):
     each round's rank table is written to ``<dir>/pr_round_<i>`` and a
@@ -66,7 +66,7 @@ def pagerank(
     # edge frame (union-distinct for nodes, groupBy(src) for degrees, an
     # anti join for no_in) — outdeg = count of src-tagged rows per node,
     # and a node never tagged as dst (min tag = 1) has no in-edges
-    stats = (
+    stats = persist(
         e.select(
             F.explode(
                 F.array(
@@ -78,12 +78,11 @@ def pagerank(
         .select("_x.v", "_x.s")
         .groupBy("v")
         .agg(F.sum("s").alias("_outdeg"), F.min("s").alias("_min_s"))
-        .persist()
     )
     n = stats.count()
     nodes = stats.select("v")
     if n == 0:
-        stats.unpersist()
+        rounds.release(stats)
         return nodes.withColumn("pr", F.lit(0).cast("long"))
     deg = stats.where(F.col("_outdeg") > 0).select(
         F.col("v").alias("src"), F.col("_outdeg").alias("deg")
@@ -93,7 +92,7 @@ def pagerank(
         # smaller than the rank frame): avoids a sort-merge join just to
         # attach degrees to the edge frame
         deg = F.broadcast(deg)
-    ed = e.join(deg, "src").persist()
+    ed = persist(e.join(deg, "src"))
     base = (scale * (damping_den - damping_num)) // (damping_den * n)
     # each round materializes (persist + count) before the next round's
     # broadcast build references it — a fully-lazy recurrence would
@@ -102,15 +101,16 @@ def pagerank(
     # with the probe side, so the barrier per round is load-bearing
     done, pr = rounds.resume(
         edges.sparkSession, checkpoint_dir, "pr_round", iters
-    ) or (-1, nodes.withColumn("pr", F.lit(scale // n).cast("long")).persist())
+    ) or (-1, persist(
+        nodes.withColumn("pr", F.lit(scale // n).cast("long"))
+    ))
     bcast = (lambda d: F.broadcast(d)) if n <= broadcast_nodes_max else (lambda d: d)
     # nodes with no incoming edge keep the constant rank `base` in every
     # round — that set falls out of the shared stats aggregate (a node
     # never tagged as dst), no extra anti join
-    no_in = (
+    no_in = persist(
         stats.where(F.col("_min_s") == 1)
         .select("v", F.lit(base).cast("long").alias("pr"))
-        .persist()
     )
     for i in range(done + 1, iters):
         contrib = (
@@ -343,16 +343,16 @@ def khop_reachability(
         )
     # the edge frame is probed once per layer — persist it so k layers
     # cost one source scan, not k (pagerank's `ed` contract)
-    e = e.persist()
+    e = persist(e)
     seed_nodes = seeds.select(F.col(seeds.columns[0]).alias("seed")).distinct()
 
     # ``reached`` is a lazy union of persisted layers (hop 0 = the seeds):
     # each hop caches only its own new pairs, never a copy of the union
     done, reached = rounds.resume(
         edges.sparkSession, checkpoint_dir, "khop_hop", k + 1
-    ) or (0, seed_nodes.select(
+    ) or (0, persist(seed_nodes.select(
         "seed", F.col("seed").alias("node"), F.lit(0).cast("int").alias("min_hops")
-    ).persist())
+    )))
     frontier = reached.where(F.col("min_hops") == done).select("seed", "node")
     n = frontier.count()  # only the resume layer pays a standalone count;
     reached_n = reached.count() if done > 0 else n
@@ -383,8 +383,13 @@ def khop_reachability(
             reached, _ = rounds.materialize(
                 reached, checkpoint_dir, "khop_hop", hop
             )
+            # read back from disk, ``reached`` no longer reads the layer
+            # caches: each one is spent once the next hop is written
+            rounds.release(frontier)
         frontier = nxt.select("seed", "node")
-    e.unpersist()
+    rounds.release(e)
+    if checkpoint_dir is not None:
+        rounds.release(frontier)
     return reached
 
 
@@ -414,7 +419,7 @@ def label_propagation(
     smallest on ties), partial-agg friendly: one shuffle per round.
     A round reads the previous labels twice (vote join and carry-over
     join), so every round's labels are materialized with their lineage
-    cut (operators/rounds.py) and the previous round is released.
+    cut (operators/rounds.py).
     ``checkpoint_dir`` writes each round's label table to
     ``<dir>/lpa_round_<i>`` in place of the persist and resumes from the
     highest complete round below ``iters`` (operators/rounds.py)."""
@@ -423,9 +428,9 @@ def label_propagation(
     )
     # probed every round — persist so rounds don't re-derive the
     # adjacency from the source plan (khop/pagerank edge contract)
-    nb = nb.persist()
+    nb = persist(nb)
     nodes = nb.select("node").distinct()
-    labels = nodes.select("node", F.col("node").alias("label")).persist()
+    labels = persist(nodes.select("node", F.col("node").alias("label")))
     n_nodes = labels.count()
     resumed = rounds.resume(edges.sparkSession, checkpoint_dir, "lpa_round", iters)
     done = -1
@@ -580,7 +585,7 @@ def sample_neighbors(
         e = e.unionAll(
             edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d"))
         )
-    e = e.persist()
+    e = persist(e)
     frontier = (
         seeds.select(F.col(seeds.columns[0]).alias("seed"))
         .distinct()
@@ -605,7 +610,7 @@ def sample_neighbors(
             )
         )
         w = Window.partitionBy("seed", "node").orderBy(rank_key, F.col("nbr"))
-        sampled = (
+        sampled = persist(
             cand.withColumn("_rk", F.row_number().over(w))
             .where(F.col("_rk") <= int(fanout))
             .select(
@@ -614,12 +619,11 @@ def sample_neighbors(
                 "node",
                 "nbr",
             )
-            .persist()
         )
         layers.append(sampled)
         frontier = sampled.select("seed", F.col("nbr").alias("node")).distinct()
         n = frontier.count()
-    e.unpersist()
+    rounds.release(e)
     if not layers:
         return frontier.sparkSession.createDataFrame(
             [], "seed long, layer int, node long, nbr long"

@@ -15,6 +15,14 @@ counted, because the next round's broadcast builds would otherwise
 re-execute every prior round; label_propagation and duplicate_clusters
 also cut its lineage every round (``cut``). :func:`release` drops the
 previous round.
+
+Cache ownership: :func:`persist` is the one persist in ``operators/``. It
+names each cache it makes (and :func:`materialize` each checkpoint) with
+:data:`OWNER`, the record Spark keeps with the cache itself, and
+:func:`release` frees the owned caches and checkpoints a frame reads, so
+one ``release(result)`` frees everything an operator cached for its
+result. Caches made elsewhere (a caller, ``GraphStore``, ``IDRegistry``)
+carry no such name and are never touched.
 """
 
 from __future__ import annotations
@@ -22,7 +30,10 @@ from __future__ import annotations
 import os
 from typing import Optional, Tuple
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+
+OWNER = "data2neo_spark"
 
 
 def _path(checkpoint_dir: str, prefix: str, i: int) -> str:
@@ -76,23 +87,48 @@ def materialize(
     uncut: forcing the cut measured slower for khop and no faster for
     pagerank."""
     if checkpoint_dir is None:
-        cached = df.persist()
+        cached = persist(df)
         if not cut:
             return cached, cached.count()
         df = cached.localCheckpoint(eager=False)
         n = df.count()
-        cached.unpersist()
+        release(cached)
+        df._jdf.queryExecution().logical().rdd().setName(OWNER)
         return df, n
     path = _path(checkpoint_dir, prefix, i)
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.parquet(path), None
 
 
+def persist(df: DataFrame) -> DataFrame:
+    """Cache ``df`` as ``df.persist()`` would, at PySpark's default level
+    (MEMORY_AND_DISK_DESER: spills without serializing), under the name
+    :data:`OWNER`. A plan that is already cached keeps its cache and its
+    owner."""
+    sc = df.sparkSession.sparkContext
+    df.sparkSession._jsparkSession.sharedState().cacheManager().cacheQuery(
+        df._jdf,
+        sc._jvm.scala.Some(OWNER),
+        sc._getJavaStorageLevel(StorageLevel.MEMORY_AND_DISK_DESER),
+    )
+    return df
+
+
 def release(*frames: DataFrame) -> None:
-    """Drop finished round frames: the cache of a persisted one, the
-    checkpoint blocks of a cut one (a no-op for read-back ones)."""
+    """Drop every cache and checkpoint named :data:`OWNER` that each
+    frame's plan reads (not the ones inside a cache's own lineage). On a
+    persisted or cut round frame that is the frame itself; on an
+    operator's result it is every cache the operator left behind it."""
     for f in frames:
-        f.unpersist()
-        plan = f._jdf.queryExecution().logical()
-        if plan.nodeName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
+        jspark = f.sparkSession._jsparkSession
+        leaves = f._jdf.queryExecution().withCachedData().collectLeaves()
+        for j in range(leaves.size()):
+            node = leaves.apply(j)
+            if node.nodeName() == "InMemoryRelation":
+                name = node.cacheBuilder().tableName()
+                if name.isDefined() and name.get() == OWNER:
+                    jspark.sharedState().cacheManager().uncacheQuery(
+                        jspark, node.cacheBuilder().logicalPlan(), False, False
+                    )
+            elif node.nodeName() == "LogicalRDD" and node.rdd().name() == OWNER:
+                node.rdd().unpersist(False)

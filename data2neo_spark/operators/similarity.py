@@ -730,22 +730,6 @@ def ivfpq_ann_topk(
     def _subdist(res: Column, code: Column, j: Column) -> Column:
         return _dist(F.slice(res, j * F.lit(s) + 1, s), code)
 
-    def _codes_of(res: Column) -> Column:
-        return F.transform(
-            books_lit,
-            lambda b, j: F.element_at(
-                F.array_sort(
-                    F.transform(
-                        b,
-                        lambda code, c: F.struct(
-                            _subdist(res, code, j).alias("d"), c.alias("c")
-                        ),
-                    )
-                ),
-                1,
-            ).getField("c"),
-        )
-
     # corpus side: cell argmin + residual PQ codes — the vectorized Arrow
     # encode (_pq_encode_arrow with cents; integer-exact, first-min ties);
     # the old nested _bind/struct-sort lambda trees ran interpreted

@@ -46,43 +46,6 @@ _ID_PD_DTYPE = {"bigint": "int64", "int": "int32", "smallint": "int16",
                 "string": "object", "double": "float64", "float": "float32"}
 
 
-def shingle_arrays_arrow(
-    df: DataFrame, id_col: str, text_col: str, n: int
-) -> DataFrame:
-    """(id, sh_arr) — per-document distinct-shingle ARRAYS via one Arrow
-    map (guide §4.2: batch python string ops instead of interpreted
-    higher-order Column lambdas, which get no whole-stage codegen and
-    re-allocate a slice per shingle). Rows with NULL text or fewer than
-    ``n`` words are dropped — identical to the Column formulation's
-    ``where(size(words) >= n)`` under null-comparison semantics."""
-    import pandas as pd  # noqa: F401 — executor-side import check
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    id_dtype = _ID_PD_DTYPE.get(id_type, "object")
-
-    def fn(batches):
-        import pandas as _pd
-
-        for pdf in batches:
-            ids, shs = [], []
-            for did, text in zip(pdf[id_col].tolist(), pdf[text_col].tolist()):
-                if text is None:
-                    continue
-                sh = _shingle_rows(text, n)
-                if sh is None:
-                    continue
-                ids.append(did)
-                shs.append(sh)
-            yield _pd.DataFrame({
-                id_col: _pd.Series(ids, dtype=id_dtype),
-                "sh_arr": _pd.Series(shs, dtype="object"),
-            })
-
-    return df.select(id_col, text_col).mapInPandas(
-        fn, f"{id_col} {id_type}, sh_arr array<string>"
-    )
-
-
 def with_quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Length/word statistics used for quality filtering.
 
@@ -171,11 +134,14 @@ def word_shingles(
 
     Computed array-side per document (a doc's shingles live in its own
     row — zero shuffle), via the Arrow batch map
-    (:func:`shingle_arrays_arrow`): python string slicing replaces the
-    old interpreted higher-order ``transform``/``slice`` lambdas, which
-    get no whole-stage codegen (guide §4.2) — identical rows.
+    (:func:`~data2neo_spark.operators.dedup._sig_frame`): python string
+    slicing replaces the old interpreted higher-order ``transform``/
+    ``slice`` lambdas, which get no whole-stage codegen (guide §4.2) —
+    identical rows.
     """
-    return shingle_arrays_arrow(df, id_col, text_col, n).select(
+    from .dedup import _sig_frame
+
+    return _sig_frame(df, id_col, text_col, n, with_shingles=True).select(
         F.col(id_col), F.explode("sh_arr").alias("shingle")
     )
 
@@ -187,7 +153,9 @@ def word_shingle_counts(
     in one zero-shuffle projection (the groupBy-count over the exploded
     shingle frame costs a shuffle AND a full shingle recomputation);
     shingling itself goes through the Arrow fast path."""
-    return shingle_arrays_arrow(df, id_col, text_col, n).select(
+    from .dedup import _sig_frame
+
+    return _sig_frame(df, id_col, text_col, n, with_shingles=True).select(
         F.col(id_col),
         F.size("sh_arr").cast("long").alias("n_sh"),
     )

@@ -43,9 +43,6 @@ class AttrSpec:
     def is_static(self) -> bool:
         return self.static is not None
 
-    def out_key(self) -> Optional[str]:
-        return self.key
-
 
 @dataclass
 class MatchSpec:

@@ -23,14 +23,17 @@ def _old_shingle_expr(words, n):
 
 
 def test_shingle_arrays_arrow_matches_column_formulation(spark):
-    """Arrow shingling == array_distinct(transform(...)) including
-    element ORDER (first occurrence) and the size>=n row filter."""
-    from data2neo_spark.operators.text import shingle_arrays_arrow
+    """Arrow shingling (``_sig_frame``'s ``sh_arr``) ==
+    array_distinct(transform(...)) including element ORDER (first
+    occurrence) and the size>=n row filter."""
+    from data2neo_spark.operators.dedup import _sig_frame
 
     docs = spark.read.parquet(DOCS).limit(200)
     fast = {
         r["doc_id"]: r["sh_arr"]
-        for r in shingle_arrays_arrow(docs, "doc_id", "text", 3).collect()
+        for r in _sig_frame(
+            docs, "doc_id", "text", 3, with_shingles=True
+        ).collect()
     }
     bound = docs.withColumn("_w", F.split("text", " "))
     slow = {
