@@ -16,9 +16,11 @@ merge semantics come from the aggregation itself, with a DETERMINISTIC
 outcome (ordered by (source, row) sequence) — strictly stronger than the
 reference's racy imap_unordered order (converter.py:338).
 
-Parallelism knobs (num_workers/batch_size) exist for API familiarity but map
-to Spark config; ``serialize=True`` coalesces to one partition for ordered
-debugging runs (reference converter.py:394-419).
+``num_workers`` and ``batch_size`` are accepted only for parity with the
+reference API and change nothing: Spark's own parallelism applies.
+``num_workers`` is only checked against ``serialize``; ``serialize=True``
+coalesces to one partition for ordered debugging runs (reference
+converter.py:394-419).
 """
 
 from __future__ import annotations
@@ -35,7 +37,6 @@ from ..plans import lowering as L
 from ..plans.rules import CompiledSchema
 from ..schema.compiler import compile_schema
 from ..sources.iterators import ResourceIterator
-from ..core.types import union_wide
 from .store import GraphStore
 
 logger = logging.getLogger(__name__)
@@ -123,6 +124,8 @@ class Converter:
         store: GraphStore to merge into (created in-memory if omitted).
         serialize: single-partition ordered mode (debugging; reference
             converter.py:394-419).
+        num_workers, batch_size: reference-API parity only; unused (see the
+            module docstring).
     """
 
     def __init__(
@@ -149,8 +152,6 @@ class Converter:
         self.iterator = iterator
         self.store = store
         self.serialize = serialize
-        self._num_workers = num_workers
-        self._batch_size = batch_size
         # run_id namespaces the deterministic sequence used for surrogate ids
         # of CREATE-mode elements: re-running the SAME run_id is idempotent
         # (checkpoint/resume semantics, north rule); appending genuinely new
@@ -167,7 +168,6 @@ class Converter:
         # sequenced sources (and dynamic-path long frames) persisted for
         # row-id determinism; released at the end of run()
         self._persisted: List[DataFrame] = []
-        self._node_bytes_est: Optional[int] = None
 
     # --------------------------------------------------------------------
 
@@ -268,32 +268,6 @@ class Converter:
                 self._persisted.append(df)
             out.append((etype, df))
         return out
-
-    def _incremental_upsert(self, store: GraphStore, parts, name, meta, key):
-        """MERGE-INTO-shaped upsert for bucketed disk stores: read + merge +
-        rewrite ONLY the hash-bucket partitions the batch touches —
-        O(|batch| + touched buckets) per increment instead of re-running the
-        whole store through the merge aggregation (SURVEY §2.6 M5)."""
-        from .store import BUCKET
-
-        batch = union_wide(parts).withColumn(BUCKET, store._bucket_col(name))
-        # touched-bucket discovery + the merge both consume the batch
-        batch = batch.persist()
-        touched = sorted(
-            r[0] for r in batch.select(BUCKET).distinct().collect()
-        )
-        existing = (
-            store.raw_table(name)
-            .where(F.col(BUCKET).isin(touched))  # partition pruning
-            .drop(BUCKET)
-            .withColumn(L.SEQ_SRC, F.lit(-1).cast("long"))
-        )
-        merged = L.merge_elements(
-            union_wide([existing, batch.drop(BUCKET)]), meta, key
-        )
-        store.overwrite_partitions(name, merged, touched)
-        batch.unpersist()
-        return touched
 
     def _release_sources(self, store: GraphStore) -> None:
         """Unpersist sequenced sources once nothing lazy references them.
@@ -473,128 +447,47 @@ class Converter:
                     enriched_df = L.attach_identifier_columns(enriched_df, rule)
                 enriched.append((etype, enriched_df))
 
-        incremental = store.path is not None and store.buckets > 0
-        if (
-            skip_nodes
-            and not node_parts
-            and store.nodes is not None
-            and store.is_materialized
-        ):
-            # shared/batch mode (share_nodes_from) or a two-phase rerun:
-            # the node table is already a materialized checkpoint and this
-            # run contributes no node rows — re-merging it would be an
-            # identity aggregation, skip it
-            store.log_stage("nodes", shared=True,
-                            wall_s=round(time.time() - t0, 3))
-        elif incremental and store.nodes is not None:
-            # bucketed disk store with prior contents: partition-pruned
-            # upsert; with no new node parts the store is left untouched
-            # (the full path would pointlessly rewrite it)
-            if node_parts:
-                touched = self._incremental_upsert(
-                    store, node_parts, "nodes", L.NODE_META, L.UID
-                )
-                store.log_stage(
-                    "nodes",
-                    n_touched_buckets=len(touched),
-                    n_buckets=store.buckets,
-                    wall_s=round(time.time() - t0, 3),
-                )
-                for rule_id, drop_obs in null_pk_obs:
-                    dropped = self._obs_value(drop_obs, "null_pk_rows")
-                    if dropped:
-                        logger.warning(
-                            "rule %s: dropped %d rows with NULL primary key",
-                            rule_id, dropped,
-                        )
-                        store.log_stage(
-                            "null_pk_dropped", rule=rule_id, n_rows=dropped
-                        )
-                null_pk_obs = []
-        elif node_parts or store.nodes is not None:
-            existing = None
-            if store.nodes is not None:
-                # previous graph contents participate with the lowest
-                # sequence → new values overwrite (upsert, reference
-                # test_end_to_end.py:55-68)
-                existing = store.nodes.withColumn(
-                    L.SEQ_SRC, F.lit(-1).cast("long")
-                ).withColumn(L.SEQ_ROW, F.col(L.SEQ_ROW))
-            if existing is None:
-                # shuffle-avoidance: CREATE-mode rows (no pk) have unique
-                # uids by construction — on a fresh store they bypass the
-                # merge aggregation entirely (A2). Only merge-mode rows pay
-                # the groupBy shuffle. With an existing store everything
-                # participates (resume-idempotence dedup by uid).
-                merge_parts = [p for p, m in zip(node_parts, node_merge_flags) if m]
-                create_parts = [p for p, m in zip(node_parts, node_merge_flags) if not m]
-                pieces = []
-                if merge_parts:
-                    pieces.append(
-                        L.merge_elements(union_wide(merge_parts), L.NODE_META, L.UID)
+        # the node-table materialization is the pass-1/pass-2 barrier —
+        # required only when some MATCH matcher joins against it, or the
+        # store persists to disk (checkpoint/resume). Identifier-only
+        # schemas skip it: the whole conversion collapses into one
+        # lazily-evaluated plan (no extra actions, no cache)
+        needs_barrier = store.path is not None or any(
+            (not m.is_identifier)
+            for etype, _ in enriched
+            if etype in self.schema.entities
+            for rule in self.schema.entities[etype].rel_rules
+            for m in (rule.from_match, rule.to_match)
+        )
+        # eager barrier (write + metrics) only for disk-backed stores —
+        # in-memory stores persist WITHOUT a count action: the first
+        # consumer fills the cache (one fewer source pass per conversion;
+        # metrics ride no action there, so they're skipped), and the
+        # unfilled cache reports its plan's size estimate. When a part has
+        # no estimate (RDD/createDataFrame sources), prefill eagerly so
+        # pass 2 can read the filled cache's real size for the broadcast
+        # decision.
+        eager = needs_barrier and (store.path is not None or any(
+            self._estimated_bytes(p) is None for p in node_parts
+        ))
+        stats = store.upsert("nodes", node_parts, node_merge_flags,
+                             materialize=needs_barrier, prefill=eager)
+        if stats:
+            store.log_stage("nodes", **stats, wall_s=round(time.time() - t0, 3))
+        if eager:
+            # null-pk drop counters rode the same write (A6 pattern);
+            # merge-mode data loss must be observable (reference raises
+            # per row, graph_elements.py:251-252)
+            for rule_id, drop_obs in null_pk_obs:
+                dropped = self._obs_value(drop_obs, "null_pk_rows")
+                if dropped:
+                    logger.warning(
+                        "rule %s: dropped %d rows with NULL primary key",
+                        rule_id, dropped,
                     )
-                pieces.extend(create_parts)
-                merged = union_wide(pieces)
-            else:
-                union = union_wide([existing] + node_parts)
-                merged = L.merge_elements(union, L.NODE_META, L.UID)
-            # the node-table materialization is the pass-1/pass-2 barrier —
-            # required only when some MATCH matcher joins against it, or the
-            # store persists to disk (checkpoint/resume). Identifier-only
-            # schemas skip it: the whole conversion collapses into one
-            # lazily-evaluated plan (no extra actions, no cache)
-            needs_barrier = store.path is not None or any(
-                (not m.is_identifier)
-                for etype, _ in enriched
-                if etype in self.schema.entities
-                for rule in self.schema.entities[etype].rel_rules
-                for m in (rule.from_match, rule.to_match)
-            )
-            # eager barrier (write + metrics) only for disk-backed stores —
-            # in-memory stores persist WITHOUT a count action: the first
-            # consumer fills the cache (one fewer source pass per
-            # conversion; metrics ride no action there, so they're skipped)
-            # byte estimate from the PRE-persist plan: an unfilled lazy
-            # cache (prefill=False) reports no statistics, but file sources
-            # behind the merge do. When even the pre-persist plan has no
-            # stats (RDD/createDataFrame sources), prefill eagerly so pass 2
-            # can read the filled cache's real size for the broadcast
-            # decision.
-            self._node_bytes_est = self._estimated_bytes(merged)
-            eager = needs_barrier and (
-                store.path is not None or self._node_bytes_est is None
-            )
-            if eager:
-                # observe(): rows-in metric rides the materialization action
-                # itself — no extra job (A6 counters, reference converter.py
-                # :67-70 shared-mp.Value counters)
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                merged = merged.observe(obs, F.count(F.lit(1)).alias("rows"))
-            store.set_nodes(merged, materialize=needs_barrier, prefill=eager)
-            if eager:
-                store.log_stage(
-                    "nodes",
-                    n_nodes=obs.get.get("rows"),
-                    wall_s=round(time.time() - t0, 3),
-                )
-                # null-pk drop counters rode the same action (A6 pattern);
-                # merge-mode data loss must be observable (reference raises
-                # per row, graph_elements.py:251-252)
-                for rule_id, drop_obs in null_pk_obs:
-                    dropped = self._obs_value(drop_obs, "null_pk_rows")
-                    if dropped:
-                        logger.warning(
-                            "rule %s: dropped %d rows with NULL primary key",
-                            rule_id, dropped,
-                        )
-                        store.log_stage(
-                            "null_pk_dropped", rule=rule_id, n_rows=dropped
-                        )
-            elif needs_barrier:
-                store.log_stage("nodes", lazy_cache=True,
-                                wall_s=round(time.time() - t0, 3))
+                    store.log_stage(
+                        "null_pk_dropped", rule=rule_id, n_rows=dropped
+                    )
 
         # ---------------- pass 2: relationships ------------------------
         t1 = time.time()
@@ -604,8 +497,6 @@ class Converter:
             broadcast_nodes = self.broadcast_nodes and have_nodes
         elif have_nodes:
             est = self._estimated_bytes(store.nodes)
-            if est is None:
-                est = getattr(self, "_node_bytes_est", None)
             if est is not None:
                 broadcast_nodes = est <= self.broadcast_bytes_limit
             else:
@@ -638,49 +529,12 @@ class Converter:
                     rule.primary_key is not None or rule.ghost_primary_key
                 )
 
-        if incremental and store.edges is not None:
-            if edge_parts:
-                touched_e = self._incremental_upsert(
-                    store, edge_parts, "edges", L.EDGE_META, L.EID
-                )
-                store.log_stage(
-                    "edges",
-                    n_touched_buckets=len(touched_e),
-                    n_buckets=store.buckets,
-                    wall_s=round(time.time() - t1, 3),
-                )
-        elif edge_parts or store.edges is not None:
-            if store.edges is None:
-                # same shuffle-avoidance as nodes: CREATE-mode edges (A5,
-                # parallel rels) append without the dedup shuffle
-                merge_parts = [p for p, m in zip(edge_parts, edge_merge_flags) if m]
-                create_parts = [p for p, m in zip(edge_parts, edge_merge_flags) if not m]
-                pieces = []
-                if merge_parts:
-                    pieces.append(
-                        L.merge_elements(union_wide(merge_parts), L.EDGE_META, L.EID)
-                    )
-                pieces.extend(create_parts)
-                merged_e = union_wide(pieces)
-            else:
-                existing_e = store.edges.withColumn(
-                    L.SEQ_SRC, F.lit(-1).cast("long")
-                )
-                union_e = union_wide([existing_e] + edge_parts)
-                merged_e = (
-                    L.merge_elements(union_e, L.EDGE_META, L.EID)
-                    if union_e is not None else None
-                )
-            if merged_e is not None:
-                # edges only need materializing for persistent stores; for
-                # in-memory stores the caller's first action computes them
-                store.set_edges(merged_e, materialize=store.path is not None)
-                if store.path is not None:
-                    store.log_stage(
-                        "edges",
-                        n_edges=store.edges.count(),
-                        wall_s=round(time.time() - t1, 3),
-                    )
+        # edges only need materializing for persistent stores; for
+        # in-memory stores the caller's first action computes them
+        stats = store.upsert("edges", edge_parts, edge_merge_flags,
+                             materialize=store.path is not None)
+        if stats:
+            store.log_stage("edges", **stats, wall_s=round(time.time() - t1, 3))
 
         store.log_stage("run", wall_s=round(time.time() - t0, 3))
         self._release_sources(store)

@@ -13,6 +13,14 @@ Node table:  _uid, _labels, _primary_label, _pk_prop, _pk_val, _seq_src,
 Edge table:  _eid, _src_uid, _rel_type, _dst_uid, _src_label, _src_key,
              _dst_label, _dst_key, _pk_prop, _seq_src, _seq_row, <props>
 
+Every write goes through one rule, ``GraphStore.upsert``, called by both
+Converter passes (nodes, then edges) and by ``create`` / ``merge`` /
+``push``: a fresh table merges keyed rows and appends CREATE-mode rows
+without a shuffle; an existing table merges the batch together with its
+stored rows, which enter at ``_seq_src = -1`` so every new value wins. On a
+bucketed disk store only the buckets the batch touches are read and
+rewritten. A batch with no rows leaves the table as it is.
+
 ``match_nodes`` / ``match_relationships`` provide the reference's standalone
 query API (/root/reference/data2neo/neo4j/matching.py:34-120) as DataFrame
 filters.
@@ -25,14 +33,28 @@ import os
 import time
 from typing import Any, Dict, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import lowering as L
+from .types import union_wide
 
 # hash-bucket partition column of disk-backed stores (pmod of the element
 # key) — the unit of partition-pruned incremental upserts
 BUCKET = "_nbucket"
+# merge sequence of create()/merge()/push() subgraph rows: above any
+# converter run's (run_id*1e6+i), so they overwrite whatever is stored
+# (reference MERGE+SET semantics); stored rows enter every merge at -1
+_ABSORB_SEQ = 1 << 40
+
+
+def _stored_seq(df: DataFrame) -> DataFrame:
+    """Stored rows enter a merge at the lowest sequence: any new row wins."""
+    return df.withColumn(L.SEQ_SRC, F.lit(-1).cast("long"))
+
+
+def _types(df: DataFrame) -> Dict[str, str]:
+    return {f.name: f.dataType.simpleString() for f in df.schema.fields}
 
 
 def _merge_into_sql(ident: str, view: str, cols: List[str], key: str) -> str:
@@ -51,8 +73,9 @@ def _merge_into_sql(ident: str, view: str, cols: List[str], key: str) -> str:
 
 class GraphStore:
     """``buckets > 0`` lays the node/edge parquet out as hash-bucket
-    partition directories (``_nbucket=pmod(key, buckets)``): incremental
-    converter runs then read + rewrite ONLY the buckets their batch touches
+    partition directories (``_nbucket=pmod(key, buckets)``): upserts into
+    a stored table (converter increments, ``merge``/``create``) then read +
+    rewrite ONLY the buckets their batch touches
     (SURVEY §2.6 M5 MERGE-INTO semantics on plain parquet) instead of
     re-materializing the whole store — O(|batch| + touched partitions) per
     increment, not O(|store|)."""
@@ -76,11 +99,6 @@ class GraphStore:
         # LAZY edge plan may still reference; released when the edge table
         # is next materialized (Converter._release_sources)
         self._adopted: List[DataFrame] = []
-        # create()/merge()/push() subgraph absorbs must overwrite whatever
-        # is already stored (reference MERGE+SET semantics): their rows get
-        # a sequence ABOVE any converter run's (run_id*1e6+i), increasing
-        # per absorb so repeated merges also overwrite each other
-        self._absorb_seq = 1 << 40
         if path is not None:
             import shutil
 
@@ -148,26 +166,83 @@ class GraphStore:
             self._node_count = self._nodes.count() if self._nodes is not None else 0
         return self._node_count
 
-    def set_nodes(
-        self, df: DataFrame, materialize: bool = True, prefill: bool = True
-    ) -> None:
-        """Install the merged node table; materializing it is the barrier
-        between the node pass and the relationship pass (reference two-pass
-        design, converter.py:374-393) and the resume checkpoint.
+    def upsert(
+        self,
+        name: str,
+        parts: List[DataFrame],
+        merge_flags: List[bool],
+        materialize: bool = True,
+        prefill: bool = True,
+    ) -> Dict[str, Any]:
+        """Merge a batch of canonical element rows into the ``"nodes"`` or
+        ``"edges"`` table — the store's only write path (both Converter
+        passes, ``create``/``merge``/``push``). ``merge_flags[i]`` says
+        whether ``parts[i]`` is merge-mode (keyed) or create-mode (fresh
+        uids by construction).
 
-        ``prefill=False`` (in-memory stores only): persist WITHOUT an eager
-        count action — the first consumer fills the cache. Saves one source
-        pass per conversion; correctness is unchanged because the plan is
-        deterministic and the cache fills exactly once."""
-        if materialize:
-            df = self._materialize(df, "nodes", prefill=prefill)
-        self.is_materialized = materialize
-        self._nodes = df
-        self._node_count = None
+        - Fresh table: merge-mode parts go through the keyed merge,
+          create-mode parts are appended without a shuffle.
+        - Existing table: stored rows enter the merge at ``_seq_src = -1``
+          (every new row overwrites them) and the union merges by key. On a
+          bucketed disk store only the stored rows of the buckets the batch
+          touches take part, and only those bucket directories are
+          rewritten.
+        - No new rows: the table is left as it is; a lazy node table is
+          only pinned when ``materialize`` asks for a barrier.
 
-    def set_edges(self, df: DataFrame, materialize: bool = True) -> None:
+        ``materialize`` makes the table a checkpoint (the pass-1/pass-2
+        barrier; disk stores always write). ``prefill=False`` (in-memory
+        stores only) persists WITHOUT an eager count — the first consumer
+        fills the cache; the plan is deterministic, so it fills once.
+
+        Returns the ``stages`` metrics of what was done: ``shared`` (no new
+        rows), ``n_<name>`` (row count of an eager write, observed on the
+        write itself), ``lazy_cache``, ``n_touched_buckets``/``n_buckets``,
+        or nothing for an unmaterialized plan."""
+        stored = self.nodes if name == "nodes" else self.edges
+        if not parts:
+            if name == "nodes" and materialize and not self.is_materialized:
+                self._install("nodes", self._nodes, True, prefill)
+            return {} if stored is None else {"shared": True}
+        meta, key = (L.NODE_META, L.UID) if name == "nodes" else (L.EDGE_META, L.EID)
+        touched = None
+        if stored is None:
+            keyed = [p for p, m in zip(parts, merge_flags) if m]
+            appended = [p for p, m in zip(parts, merge_flags) if not m]
+        else:
+            keyed, appended = [_stored_seq(stored)] + parts, []
+            # a batch that adds or widens a column rewrites every bucket:
+            # the files of one table must share one schema
+            if self.path is not None and self.buckets and \
+                    _types(union_wide(keyed)) == _types(stored):
+                # touched-bucket discovery and the merge both read the batch
+                batch = union_wide(parts).withColumn(BUCKET, self._bucket_col(name)).persist()
+                touched = sorted(r[0] for r in batch.select(BUCKET).distinct().collect())
+                pruned = self.raw_table(name).where(F.col(BUCKET).isin(touched))
+                keyed = [_stored_seq(pruned.drop(BUCKET)), batch.drop(BUCKET)]
+        merged = union_wide(
+            ([L.merge_elements(union_wide(keyed), meta, key)] if keyed else []) + appended
+        )
+        if touched is not None:
+            self.overwrite_partitions(name, merged, touched)
+            batch.unpersist()
+            return {"n_touched_buckets": len(touched), "n_buckets": self.buckets}
+        eager = materialize and (self.path is not None or prefill)
+        if eager:
+            obs = Observation()
+            merged = merged.observe(obs, F.count(F.lit(1)).alias("rows"))
+        self._install(name, merged, materialize, prefill)
+        if eager:
+            return {f"n_{name}": obs.get["rows"]}
+        return {"lazy_cache": True} if materialize else {}
+
+    def _install(self, name: str, df: DataFrame, materialize: bool, prefill: bool) -> None:
         if materialize:
-            df = self._materialize(df, "edges")
+            df = self._materialize(df, name, prefill=prefill)
+        if name == "nodes":
+            self._nodes, self.is_materialized, self._node_count = df, materialize, None
+            return
+        if materialize:
             # the materialized edge table no longer references converter
             # sources — release any adopted upstream caches. The NODE table
             # may still be an unfilled lazy plan reading those same sources
@@ -418,7 +493,7 @@ class GraphStore:
             F.col("_plabel_l").alias(L.PLABEL),
             F.col("_pk_prop_l").alias(L.PKPROP),
             F.col("_pk_val_l").alias(L.PKVAL),
-            F.lit(self._absorb_seq).cast("long").alias(L.SEQ_SRC),
+            F.lit(_ABSORB_SEQ).cast("long").alias(L.SEQ_SRC),
             F.col("_local").cast("long").alias(L.SEQ_ROW),
             *[F.col(c) for c in prop_cols],
         )
@@ -473,24 +548,16 @@ class GraphStore:
             F.col("_dl").alias(L.DST_LABEL),
             F.col("_dk").alias(L.DST_KEY),
             F.col("_pk").alias(L.PKPROP),
-            F.lit(self._absorb_seq).cast("long").alias(L.SEQ_SRC),
+            F.lit(_ABSORB_SEQ).cast("long").alias(L.SEQ_SRC),
             F.col("_j").cast("long").alias(L.SEQ_ROW),
             *[F.col(c) for c in eprops],
         )
         return nodes_df, edges_df
 
     def _absorb(self, nodes_df, edges_df) -> None:
-        from ..core.types import union_wide
-
-        self._absorb_seq += 1
-
-        # .nodes/.edges properties (not _nodes/_edges): the bucket partition
-        # column of disk-backed bucketed stores must not enter the merge
-        parts = [self.nodes, nodes_df] if self._nodes is not None else [nodes_df]
-        self.set_nodes(L.merge_elements(union_wide(parts), L.NODE_META, L.UID))
-        if edges_df is not None or self._edges is not None:
-            eparts = [p for p in (self.edges, edges_df) if p is not None]
-            self.set_edges(L.merge_elements(union_wide(eparts), L.EDGE_META, L.EID))
+        self.upsert("nodes", [nodes_df], [True])
+        if edges_df is not None:
+            self.upsert("edges", [edges_df], [True])
 
     def create(self, subgraph) -> None:
         """Write a python-built Subgraph as new elements (reference

@@ -608,30 +608,29 @@ def with_unigram_scores(
     )
 
 
-def _bigram_stream(
-    df: DataFrame, id_col: Optional[str], text_col: str
+def _ngram_stream(
+    df: DataFrame, id_col: Optional[str], text_col: str, n: int
 ) -> DataFrame:
-    """([id,] w1, w2) — one row per adjacent word pair. The pair array is
-    built inside the scan stage (sequence+element_at, zero shuffle); docs
-    shorter than 2 words emit nothing (sequence(0, -1) would count DOWN —
-    the same guard as remove_shared_ngrams)."""
+    """([id,] w1, ..., wn) — one row per run of n adjacent words. The
+    n-gram array is built inside the scan stage (sequence+element_at, zero
+    shuffle); docs shorter than n words emit nothing (sequence(0, -1) would
+    count DOWN — the same guard as remove_shared_ngrams)."""
     bound = df.withColumn("_words", F.split(F.col(text_col), " "))
     words = F.col("_words")
-    pairs = F.transform(
-        F.sequence(F.lit(0), F.size(words) - F.lit(2)),
-        lambda i: F.struct(
-            F.element_at(words, i + 1).alias("w1"),
-            F.element_at(words, i + 2).alias("w2"),
-        ),
+    names = [f"w{k}" for k in range(1, n + 1)]
+    grams = F.transform(
+        F.sequence(F.lit(0), F.size(words) - F.lit(n)),
+        lambda i: F.struct(*[
+            F.element_at(words, i + k).alias(w) for k, w in enumerate(names, 1)
+        ]),
     )
     keep = [F.col(id_col)] if id_col is not None else []
     return (
-        bound.where(F.size(words) >= 2)
-        .select(*keep, F.explode(pairs).alias("_p"))
+        bound.where(F.size(words) >= n)
+        .select(*keep, F.explode(grams).alias("_g"))
         .select(
             *([id_col] if id_col is not None else []),
-            F.col("_p.w1").alias("w1"),
-            F.col("_p.w2").alias("w2"),
+            *[F.col(f"_g.{w}").alias(w) for w in names],
         )
     )
 
@@ -657,7 +656,7 @@ def train_bigram_lm(
     """
     from pyspark.sql import Window
 
-    big = _bigram_stream(df, None, text_col)
+    big = _ngram_stream(df, None, text_col, 2)
     c2 = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
     m = c2.withColumn("c1", F.sum("c2").over(Window.partitionBy("w1")))
     return m.select(
@@ -701,7 +700,7 @@ def with_bigram_lm_scores(
     mside = model.select("w1", "w2", "cond_ppm", "bits")
     if _should_broadcast(mside):
         mside = F.broadcast(mside)
-    big = _bigram_stream(df, id_col, text_col)
+    big = _ngram_stream(df, id_col, text_col, 2)
     scored = big.join(mside, ["w1", "w2"])
     return (
         scored.groupBy(id_col)
@@ -888,35 +887,6 @@ def normalize_text(df: DataFrame, text_col: str = "text",
     return df.withColumn(out_col, F.trim(c))
 
 
-def _trigram_stream(
-    df: DataFrame, id_col: Optional[str], text_col: str
-) -> DataFrame:
-    """([id,] w1, w2, w3) — one row per adjacent word triple, built
-    inside the scan stage like _bigram_stream (zero shuffle); docs
-    shorter than 3 words emit nothing."""
-    bound = df.withColumn("_words", F.split(F.col(text_col), " "))
-    words = F.col("_words")
-    triples = F.transform(
-        F.sequence(F.lit(0), F.size(words) - F.lit(3)),
-        lambda i: F.struct(
-            F.element_at(words, i + 1).alias("w1"),
-            F.element_at(words, i + 2).alias("w2"),
-            F.element_at(words, i + 3).alias("w3"),
-        ),
-    )
-    keep = [F.col(id_col)] if id_col is not None else []
-    return (
-        bound.where(F.size(words) >= 3)
-        .select(*keep, F.explode(triples).alias("_t"))
-        .select(
-            *([id_col] if id_col is not None else []),
-            F.col("_t.w1").alias("w1"),
-            F.col("_t.w2").alias("w2"),
-            F.col("_t.w3").alias("w3"),
-        )
-    )
-
-
 def train_trigram_lm(
     df: DataFrame, text_col: str = "text", scale: int = 1_000_000
 ) -> DataFrame:
@@ -927,7 +897,7 @@ def train_trigram_lm(
     context totals; both on model-sized data."""
     from pyspark.sql import Window
 
-    tri = _trigram_stream(df, None, text_col)
+    tri = _ngram_stream(df, None, text_col, 3)
     c3 = tri.groupBy("w1", "w2", "w3").agg(F.count(F.lit(1)).alias("c3"))
     m = c3.withColumn("c12", F.sum("c3").over(Window.partitionBy("w1", "w2")))
     return m.select(
@@ -981,7 +951,7 @@ def with_trigram_lm_scores(
     if _should_broadcast(b):
         b = F.broadcast(b)
 
-    tri = _trigram_stream(df, id_col, text_col)
+    tri = _ngram_stream(df, id_col, text_col, 3)
     scored = (
         tri.join(t, ["w1", "w2", "w3"], "left")
         .join(b, ["w2", "w3"], "left")
