@@ -26,16 +26,18 @@ Two assignment strategies:
   (hash partitioning + in-partition key order), but the key→id mapping
   depends on the partition count, so it is reproducible, not SQL-replayable.
 
-Persistence mirrors GraphStore's rename-aside swap protocol (crash-safe).
+A path-backed registry writes and reopens its table through
+``core/tables.py`` (crash-safe rename-aside swap + startup recovery).
 """
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from . import tables
 
 
 class IDRegistry:
@@ -47,31 +49,14 @@ class IDRegistry:
     ) -> None:
         self.spark = spark
         self.path = path
-        self._table: Optional[DataFrame] = None
-        self._max_id: int = 0
-        if path is not None:
-            import shutil
-
-            os.makedirs(path, exist_ok=True)
-            target = os.path.join(path, "registry")
-            old = os.path.join(path, "_old_registry")
-            # crash recovery: sweep staging dirs a killed write stranded
-            # (mirrors GraphStore.__init__'s _tmp_ sweep)
-            for d in os.listdir(path):
-                if d.startswith("_tmp_registry_"):
-                    shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-            if not os.path.exists(os.path.join(target, "_SUCCESS")) and \
-                    os.path.exists(os.path.join(old, "_SUCCESS")):
-                os.rename(old, target)
-            if os.path.exists(os.path.join(target, "_SUCCESS")):
-                self._table = spark.read.parquet(target)
-                self._max_id = (
-                    self._table.agg(F.max("sid")).collect()[0][0] or 0
-                )
+        self._table = (
+            tables.recover(spark, path, "registry") if path is not None else None
+        )
+        self._max_id = 0
         if self._table is None:
-            self._table = spark.createDataFrame(
-                [], f"key {key_type}, sid long"
-            )
+            self._table = spark.createDataFrame([], f"key {key_type}, sid long")
+        else:
+            self._max_id = self._table.agg(F.max("sid")).collect()[0][0] or 0
 
     @property
     def table(self) -> DataFrame:
@@ -186,26 +171,12 @@ class IDRegistry:
         return df.join(reg, key_col, "left")
 
     def _materialize(self, updated: DataFrame) -> None:
-        if self.path is not None:
-            import shutil
-            import time
-
-            target = os.path.join(self.path, "registry")
-            tmp = os.path.join(self.path, f"_tmp_registry_{int(time.time()*1000)}")
-            updated.write.mode("overwrite").parquet(tmp)
-            old = os.path.join(self.path, "_old_registry")
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.exists(target):
-                os.rename(target, old)
-            os.rename(tmp, target)
-            shutil.rmtree(old, ignore_errors=True)
-            self._table = self.spark.read.parquet(target)
-        else:
-            prev = self._table
-            self._table = updated.persist()
-            # fill before dropping the previous cache the plan references
-            self._max_id = self._table.agg(F.max("sid")).collect()[0][0] or 0
-            if prev is not None:
-                prev.unpersist()
-            return
+        prev = None if self.path is not None else self._table
+        self._table = (
+            tables.swap(self.spark, self.path, "registry", updated)
+            if self.path is not None else updated.persist()
+        )
+        # fill the new cache before dropping the previous one its plan reads
         self._max_id = self._table.agg(F.max("sid")).collect()[0][0] or 0
+        if prev is not None:
+            prev.unpersist()

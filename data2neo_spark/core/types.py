@@ -10,6 +10,7 @@ coercion, graph_elements.py:84-86).
 
 from __future__ import annotations
 
+import datetime
 from typing import Dict, List, Optional
 
 from pyspark.sql import Column, DataFrame
@@ -100,4 +101,8 @@ def spark_type_of_literal(value) -> T.DataType:
         return T.LongType()
     if isinstance(value, float):
         return T.DoubleType()
+    if isinstance(value, datetime.datetime):
+        return T.TimestampType()
+    if isinstance(value, datetime.date):
+        return T.DateType()
     return T.StringType()

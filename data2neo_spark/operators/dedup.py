@@ -239,31 +239,9 @@ def _should_broadcast(df: DataFrame, limit_bytes: Optional[int] = None) -> bool:
     if est is None:
         return False
     if limit_bytes is None:
-        try:
-            raw = df.sparkSession.conf.get(
-                "spark.sql.autoBroadcastJoinThreshold", "10485760"
-            )
-            limit_bytes = _parse_byte_conf(raw)
-        except Exception:
-            limit_bytes = 10 << 20
+        limit_bytes = (df.sparkSession._jsparkSession.sessionState().conf()
+                       .autoBroadcastJoinThreshold())
     return 0 < est <= limit_bytes
-
-
-def _parse_byte_conf(raw: str) -> int:
-    """Spark byte-size conf string → bytes, covering every suffix Spark's
-    own parser accepts (b/k/kb/m/mb/g/gb/t/tb/p/pb, case-insensitive;
-    bare numbers are bytes). A '1g' threshold must not silently fall back
-    to the 10MB default (understating the user's limit 100×)."""
-    s = raw.strip().lower()
-    units = {"b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20,
-             "g": 30, "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50}
-    i = len(s)
-    while i > 0 and not s[i - 1].isdigit():
-        i -= 1
-    num, suffix = s[:i], s[i:]
-    if suffix and suffix not in units:
-        raise ValueError(f"unparseable byte size: {raw!r}")
-    return int(num) << units.get(suffix, 0)
 
 
 def _verified_jaccard(

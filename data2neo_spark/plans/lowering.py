@@ -92,21 +92,6 @@ def _probe_value(dtype: T.DataType):
     return "1"
 
 
-def _spark_type_for(value) -> T.DataType:
-    import datetime
-    if isinstance(value, bool):
-        return T.BooleanType()
-    if isinstance(value, int):
-        return T.LongType()
-    if isinstance(value, float):
-        return T.DoubleType()
-    if isinstance(value, datetime.datetime):
-        return T.TimestampType()
-    if isinstance(value, datetime.date):
-        return T.DateType()
-    return T.StringType()
-
-
 def _infer_post_chain_type(
     fns: List[Tuple], key: str, input_dtype: T.DataType
 ) -> T.DataType:
@@ -118,7 +103,7 @@ def _infer_post_chain_type(
             attr = fn(attr, *static_args)
             if attr is None:
                 return T.StringType()
-        return _spark_type_for(attr.value)
+        return spark_type_of_literal(attr.value)
     except Exception:
         return T.StringType()
 
@@ -279,7 +264,7 @@ def _attr_column_pair(
             try:
                 probe = fn(pd.Series([_probe_value(dtype)]), *sargs)
                 out_dtype = (
-                    _spark_type_for(probe.iloc[0]) if len(probe) else dtype
+                    spark_type_of_literal(probe.iloc[0]) if len(probe) else dtype
                 )
             except Exception:
                 # value-sensitive fn: assume type-preserving rather than

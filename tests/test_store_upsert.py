@@ -191,11 +191,11 @@ def test_create_and_merge(spark, tmp_path, kind):
     Converter(SCHEMA_ID, [("t", _df(spark, range(10), "v1"))], store=store)(spark)
     stages = _stages(store)
     store.merge(_merge_graph())
-    assert _tables(store) == (24, 22, "535ed64d4c2616ba")
+    assert _tables(store) == (24, 22, "4c473d7398c65c99")
     names = {r["id"]: r["name"] for r in store.match_nodes("Item").collect()}
     assert names[3] == "m-3" and names[42] == "m-42" and names[4] == "v1-4"
     store.create(_create_graph())
-    assert _tables(store, ids=False) == (26, 23, "225a7c885454ef2c")
+    assert _tables(store, ids=False) == (26, 23, "a50843c725feaedb")
     # the subgraph API logs no stage records
     assert _stages(store) == stages
 
@@ -214,9 +214,8 @@ def test_bucketed_merge_rewrites_only_touched_buckets(spark, tmp_path):
     edges_before = _bucket_files(path, "edges")
     assert len(nodes_before) > 8
 
-    # same property set on every node: the batch keeps the table's column
-    # types (a subgraph mixing labels widens ``id`` to double, which
-    # rewrites every bucket)
+    # the batch adds no property column and keeps the table's column types,
+    # so only the buckets it touches are rewritten
     x, y = Node("Item", id=5, name="m-5"), Node("Item", id=9, name="m-9")
     x.set_primary_key("id")
     y.set_primary_key("id")
@@ -230,6 +229,31 @@ def test_bucketed_merge_rewrites_only_touched_buckets(spark, tmp_path):
     names = {r["id"]: r["name"] for r in store.match_nodes("Item").collect()}
     assert names[5] == "m-5" and names[9] == "m-9" and names[4] == "v1-4"
     assert len(names) == 64 and store.match_relationships("NEXT").count() == 1
+
+
+@pytest.mark.parametrize("kind", ["memory", "bucketed"])
+def test_mixed_label_merge_keeps_integer_ids(spark, tmp_path, kind):
+    """A subgraph whose nodes do not all carry ``id`` keeps the stored
+    ``bigint`` column, and leaves the properties a node lacks null; on a
+    bucketed store it then rewrites only the buckets it touches."""
+    path = None if kind == "memory" else str(tmp_path / "store")
+    store = GraphStore(spark, path=path, buckets=16 if path else 0)
+    Converter(SCHEMA_ID, [("t", _df(spark, range(64), "v1"))], store=store)(spark)
+    before = _bucket_files(path, "nodes") if path else {}
+    item, cat = Node("Item", id=3, name="m-3"), Node("Cat", cat="c0")
+    item.set_primary_key("id")
+    cat.set_primary_key("cat")
+    store.merge(item | cat | Relationship(item, "IN_CAT", cat))
+    assert dict(store.nodes.dtypes)["id"] == "bigint"
+    ids = sorted(r["id"] for r in store.match_nodes("Item").collect())
+    assert ids == list(range(64))
+    c0 = store.match_nodes("Cat", cat="c0").collect()
+    assert len(c0) == 1 and c0[0]["id"] is None and c0[0]["name"] is None
+    assert store.match_nodes("Item", id=3).collect()[0]["cat"] is None
+    if path:
+        after = _bucket_files(path, "nodes")
+        changed = [b for b in before if after.get(b) != before[b]]
+        assert changed and len(changed) <= 2
 
 
 def test_bucketed_increment_with_a_new_property(spark, tmp_path):
