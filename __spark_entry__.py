@@ -298,14 +298,17 @@ def _kg_webtext_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kg_salted_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7: the kg_triples_match workload forced onto the shuffle+salt MATCH
-    path (broadcast disabled, 4 salt buckets) — must hash-match the same
-    oracle as the broadcast plan. Nodes come from the SAME shared store as
-    kg_triples_match (batch mode): the salt/broadcast decision is a rel-pass
-    property, so sharing the node pass is sound."""
+    """A7: the kg_triples_match workload on the shuffle MATCH join — a
+    sort-merge join whose hub keys AQE's skew join splits, no salt. It must
+    hash-match the same oracle as the broadcast plan. Nodes come from the
+    SAME shared store as kg_triples_match (batch mode): the join strategy
+    is a rel-pass property, so sharing the node pass is sound."""
     from data2neo_spark import Converter, GraphStore
 
     store = GraphStore(spark).share_nodes_from(_order_part_base(spark, sf_dir))
+    # the hint on the shared node frame makes Spark plan both MATCH joins
+    # as shuffle sort-merge joins however small the node table is
+    store._nodes = store._nodes.hint("shuffle_merge")
     store = Converter(
         _ORDER_PART_MATCH_SCHEMA,
         [
@@ -314,8 +317,6 @@ def _kg_salted_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("lineitem", _read(spark, sf_dir, "lineitem")),
         ],
         store=store,
-        broadcast_nodes=False,
-        match_salt_buckets=4,
     )(spark, skip_nodes=True)
     return store.triples()
 

@@ -8,8 +8,9 @@ DataFrame transforms:
 * the conversion-schema DSL is kept verbatim as the public API
   (reference grammar: data2neo/core/schema_compiler.py:31-319),
 * every NODE / RELATIONSHIP rule compiles to a set of DataFrame expressions,
-* MATCH lookups compile to (broadcast/salted) hash joins against the node
-  table instead of per-row Cypher round-trips
+* MATCH lookups compile to equi joins against the node table, broadcast
+  or shuffled as Spark's planner and AQE decide, instead of per-row
+  Cypher round-trips
   (reference: data2neo/core/factories/matcher.py:94-96),
 * merge-on-key becomes a deterministic last-writer-wins keyed aggregation
   (reference: data2neo/neo4j/graph_elements.py:206-264),

@@ -38,22 +38,9 @@ from ..plans.rules import CompiledSchema
 from ..schema.compiler import compile_schema
 from ..sources.iterators import ResourceIterator
 from .store import GraphStore
+from .types import estimated_bytes
 
 logger = logging.getLogger(__name__)
-
-# broadcast the node table into MATCH joins while its estimated size is
-# under this many bytes (plan statistics; parquet-backed stores report file
-# size, in-memory stores the cached size). The old row-count limit remains
-# the fallback when statistics are unavailable — a row count alone is the
-# wrong unit: 2M rows of wide properties can blow the driver.
-BROADCAST_BYTES_LIMIT = 256 * 1024 * 1024
-BROADCAST_NODE_LIMIT = 2_000_000
-# shuffle-join fallback: salt MATCH joins with this many buckets unless the
-# caller chose a value (0 would leave hub-entity keys to a single reducer,
-# with only AQE skew-split as a backstop)
-DEFAULT_SALT_BUCKETS = 8
-# plan statistics sentinel for "unknown" (Long.MaxValue-ish)
-_STATS_UNKNOWN = 1 << 60
 
 
 class ConsoleProgress:
@@ -126,6 +113,11 @@ class Converter:
             converter.py:394-419).
         num_workers, batch_size: reference-API parity only; unused (see the
             module docstring).
+
+    The MATCH joins of pass 2 are plain equi joins: Spark picks broadcast
+    or shuffle from the node table's measured size
+    (``spark.sql.autoBroadcastJoinThreshold``), and AQE's skew join splits
+    hub keys on the shuffle path.
     """
 
     def __init__(
@@ -137,9 +129,6 @@ class Converter:
         num_workers: Optional[int] = None,
         batch_size: Optional[int] = None,
         run_id: int = 0,
-        match_salt_buckets: int = 0,
-        broadcast_nodes: Optional[bool] = None,
-        broadcast_bytes_limit: int = BROADCAST_BYTES_LIMIT,
     ) -> None:
         if serialize and num_workers is not None and num_workers > 1:
             raise ValueError(
@@ -158,13 +147,6 @@ class Converter:
         # batches should use a fresh run_id so parallel create-edges from
         # different runs never collide.
         self.run_id = run_id
-        # A7: salt MATCH joins when the node table is too big to broadcast
-        # and hub keys would otherwise produce straggler reducers
-        self.match_salt_buckets = match_salt_buckets
-        # None = decide from plan statistics (bytes) at run time; True/False
-        # forces the MATCH join strategy (tests, deliberately-wide tables)
-        self.broadcast_nodes = broadcast_nodes
-        self.broadcast_bytes_limit = broadcast_bytes_limit
         # sequenced sources (and dynamic-path long frames) persisted for
         # row-id determinism; released at the end of run()
         self._persisted: List[DataFrame] = []
@@ -204,18 +186,6 @@ class Converter:
                 return None
             time.sleep(0.05)
         return None
-
-    @staticmethod
-    def _estimated_bytes(df: DataFrame) -> Optional[int]:
-        """Optimizer size estimate in bytes, or None when unavailable."""
-        try:
-            size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            # py4j maps small BigInts to python ints; huge ones stay JVM
-            # objects with toString()
-            est = size if isinstance(size, int) else int(size.toString())
-        except Exception:
-            return None
-        return est if 0 <= est < _STATS_UNKNOWN else None
 
     @staticmethod
     def _plan_row_count(df: DataFrame) -> Optional[int]:
@@ -464,11 +434,11 @@ class Converter:
         # consumer fills the cache (one fewer source pass per conversion;
         # metrics ride no action there, so they're skipped), and the
         # unfilled cache reports its plan's size estimate. When a part has
-        # no estimate (RDD/createDataFrame sources), prefill eagerly so
-        # pass 2 can read the filled cache's real size for the broadcast
-        # decision.
+        # no estimate (RDD/createDataFrame sources), prefill eagerly: Spark
+        # then sizes the pass-2 MATCH joins from the filled cache's real
+        # size instead of an unknown one (which never broadcasts).
         eager = needs_barrier and (store.path is not None or any(
-            self._estimated_bytes(p) is None for p in node_parts
+            estimated_bytes(p) is None for p in node_parts
         ))
         stats = store.upsert("nodes", node_parts, node_merge_flags,
                              materialize=needs_barrier, prefill=eager)
@@ -492,22 +462,6 @@ class Converter:
         # ---------------- pass 2: relationships ------------------------
         t1 = time.time()
         self._enter_rel_pass_progress(spark)
-        have_nodes = store.nodes is not None and store.is_materialized
-        if self.broadcast_nodes is not None:
-            broadcast_nodes = self.broadcast_nodes and have_nodes
-        elif have_nodes:
-            est = self._estimated_bytes(store.nodes)
-            if est is not None:
-                broadcast_nodes = est <= self.broadcast_bytes_limit
-            else:
-                broadcast_nodes = store.node_count <= BROADCAST_NODE_LIMIT
-        else:
-            broadcast_nodes = False
-        # shuffle-join fallback: default to salted joins so hub entities
-        # spread over reducers (A7) instead of relying on AQE alone
-        salt_buckets = self.match_salt_buckets
-        if not broadcast_nodes and have_nodes and salt_buckets == 0:
-            salt_buckets = DEFAULT_SALT_BUCKETS
         edge_parts: List[DataFrame] = list(dyn_edge_parts)
         edge_merge_flags: List[bool] = [True] * len(dyn_edge_parts)
         if skip_relationships:
@@ -519,10 +473,7 @@ class Converter:
             if rules is None or etype not in self.schema.relationship_mask:
                 continue
             for rule in rules.rel_rules:
-                part = L.lower_rel_rule(
-                    df, rule, store.nodes, broadcast_nodes,
-                    salt_buckets,
-                )
+                part = L.lower_rel_rule(df, rule, store.nodes)
                 part = dyn.apply_rel_postprocessors_dynamic(part, rule)
                 edge_parts.append(part)
                 edge_merge_flags.append(

@@ -107,7 +107,6 @@ class GraphStore:
         self._nodes: Optional[DataFrame] = None
         self._edges: Optional[DataFrame] = None
         self.counters: Dict[str, Any] = {}
-        self._node_count: Optional[int] = None
         # whether the current node table is a materialized checkpoint (vs a
         # lazy plan); edges joining a lazy node table would recompute it
         self.is_materialized = True
@@ -143,12 +142,6 @@ class GraphStore:
     def _bucket_col(self, name: str):
         key = L.UID if name == "nodes" else L.EID
         return F.pmod(F.col(key), F.lit(self.buckets)).cast("int")
-
-    @property
-    def node_count(self) -> int:
-        if self._node_count is None:
-            self._node_count = self._nodes.count() if self._nodes is not None else 0
-        return self._node_count
 
     def upsert(
         self,
@@ -227,7 +220,7 @@ class GraphStore:
         if materialize:
             df = self._materialize(df, name, prefill, touched)
         if name == "nodes":
-            self._nodes, self.is_materialized, self._node_count = df, materialize, None
+            self._nodes, self.is_materialized = df, materialize
             return
         if materialize:
             # the materialized edge table no longer references converter
@@ -252,7 +245,6 @@ class GraphStore:
         if not self.is_materialized:
             self._nodes = self._materialize(self._nodes, "nodes", prefill=True)
             self.is_materialized = True
-            self._node_count = None
         else:
             # persisted but possibly unfilled (prefill=False): one count
             # action fills the cache; cheap if already filled
@@ -270,7 +262,6 @@ class GraphStore:
         consumer recomputes."""
         self._nodes = other.raw_table("nodes")
         self.is_materialized = other.is_materialized
-        self._node_count = other._node_count
         return self
 
     def adopt_persisted(self, dfs: List[DataFrame]) -> None:

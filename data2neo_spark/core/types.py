@@ -13,11 +13,26 @@ from __future__ import annotations
 import datetime
 from typing import Dict, List, Optional
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _INTEGRALS = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+# plan statistics sentinel for "unknown" (Long.MaxValue-ish)
+_STATS_UNKNOWN = 1 << 60
+
+
+def estimated_bytes(df: DataFrame) -> Optional[int]:
+    """Optimizer size estimate in bytes, or None when unavailable."""
+    try:
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        # py4j maps small BigInts to python ints; huge ones stay JVM
+        # objects with toString()
+        est = size if isinstance(size, int) else int(size.toString())
+    except Exception:
+        return None
+    return est if 0 <= est < _STATS_UNKNOWN else None
 
 
 def python_str_column(col: Column, dtype: T.DataType) -> Column:
@@ -95,6 +110,9 @@ def union_wide(dfs: List[DataFrame]) -> Optional[DataFrame]:
 
 
 def spark_type_of_literal(value) -> T.DataType:
+    if isinstance(value, (np.number, np.bool_)):
+        # numpy scalars (pandas probe values) map like their python twins
+        value = value.item()
     if isinstance(value, bool):
         return T.BooleanType()
     if isinstance(value, int):

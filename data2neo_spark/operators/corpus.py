@@ -23,6 +23,7 @@ from typing import List, Optional, Tuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..core.types import estimated_bytes
 from .dedup import minhash_lsh_duplicates
 from .text import with_gopher_quality, with_langid, with_quality_features
 
@@ -87,11 +88,10 @@ def clean_corpus(
         )
     flagged = with_quality_features(docs, text_col)
     if url_col is not None and domain_blocklist is not None:
-        from ..core.converter import Converter
         from .web import with_url_parts
 
         flagged = with_url_parts(flagged, url_col)
-        est = Converter._estimated_bytes(domain_blocklist)
+        est = estimated_bytes(domain_blocklist)
         small = (est is not None and est <= blocklist_max_inline * 64) or (
             est is None and domain_blocklist.count() <= blocklist_max_inline
         )

@@ -28,6 +28,7 @@ from typing import List, Optional, Tuple
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ..core.types import estimated_bytes
 from . import rounds
 from .rounds import persist
 from .text import word_shingles
@@ -233,9 +234,7 @@ def _should_broadcast(df: DataFrame, limit_bytes: Optional[int] = None) -> bool:
     session's autoBroadcastJoinThreshold (or an explicit limit). Unknown
     estimate → False: at scale the safe default is to let AQE decide, not
     to force a driver-side build of an unbounded frame."""
-    from ..core.converter import Converter
-
-    est = Converter._estimated_bytes(df)
+    est = estimated_bytes(df)
     if est is None:
         return False
     if limit_bytes is None:

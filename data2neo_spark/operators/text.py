@@ -1045,9 +1045,8 @@ def mention_contexts(
     Column-native: ONE posexplode of the token array (the array rides
     along, so contexts are in-row ``slice`` calls — no self-join back
     to the document), term filter pushed into the explode output.
-    Zero shuffles; dictionary inlines as a literal set (broadcast-join
-    variant available via detect_mentions' strategy for huge
-    dictionaries).
+    Zero shuffles; dictionary inlines as a literal set (detect_mentions
+    joins dictionaries too big to inline).
     """
     if not terms:
         raise ValueError("terms must be non-empty")

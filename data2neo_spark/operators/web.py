@@ -19,6 +19,8 @@ from typing import List
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.types import estimated_bytes
+
 # registrable-suffix heuristic: public-suffix lists are data, not code —
 # this fixture covers the common two-label suffixes so registered_domain
 # takes THREE labels for e.g. example.co.uk (documented approximation;
@@ -109,9 +111,7 @@ def filter_domain_blocklist(
     (zero shuffle); a large one runs a LEFT ANTI join (broadcast by
     Spark's own sizing, else shuffle)."""
     parts = with_url_parts(df, url_col)
-    from ..core.converter import Converter
-
-    est = Converter._estimated_bytes(blocklist)
+    est = estimated_bytes(blocklist)
     if est is not None:
         rows_small = est <= max_inline * 64
     else:  # stats-less source: one count job decides (cheap by definition)

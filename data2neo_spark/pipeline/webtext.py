@@ -3,8 +3,8 @@
 Stages (all DataFrame-native):
   pages (url, warc_ts, html, text, lang)
     → extract     html → text (deterministic, byte-identical per url)
-    → mention     tokenize + dictionary join (broadcast entity_dict;
-                  salting knob for hub surfaces)
+    → mention     tokenize + dictionary lookup (inlined when small, else
+                  an equi join Spark sizes itself)
     → link        score + canonicalize mentions to entity ids
     → materialize nodes / edges / (subj, pred, obj) triples via the same
                   merge machinery as the schema engine
@@ -16,10 +16,12 @@ verify it value-for-value.
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import List, Optional, Tuple
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..core.types import estimated_bytes
 
 # static term dictionary for the oracle-checked slice (kept in sync with
 # __spark_entry__.oracle_sql's kg_webtext_mentions)
@@ -75,7 +77,7 @@ def extract_pages(pages: DataFrame) -> DataFrame:
     )
 
 
-# dictionaries up to this size use the zero-shuffle in-row strategy
+# dictionaries up to this size inline into the row (zero shuffle)
 ARRAY_STRATEGY_MAX_DICT = 50_000
 # rough bytes/row of a (surface, entity_id, canonical, kind) dict row, used
 # to translate the row cap into a byte cap for the stats-based decision
@@ -86,99 +88,66 @@ def detect_mentions(
     docs: DataFrame,
     entity_dict: DataFrame,
     text_col: str = "text",
-    salt_buckets: int = 0,
-    strategy: str = "auto",
     count_hits: bool = True,
+    keep: Tuple[str, ...] = ("url",),
 ) -> DataFrame:
-    """Tokenize + dictionary lookup → (url, surface, entity_id, canonical,
-    kind, n_hits).
+    """Tokenize + dictionary lookup → (*keep, surface, entity_id,
+    canonical, kind, n_hits): one row per distinct mentioned surface per
+    input row, for batches and streams alike (no aggregation, so no state
+    store). A URL crawled twice gives one row per crawl.
 
-    Two physical strategies:
+    The dictionary's size decides how the lookup runs:
 
-    * ``array`` — ZERO-shuffle: the surface set is folded into the row as a
-      literal array; per-document mention counting happens inside the scan
-      stage with higher-order functions (array_intersect + filter), then a
-      broadcast join attaches entity metadata. Per-(url,...) aggregation is
-      per-row by construction, so no groupBy shuffle exists at all. Used
-      automatically when the dictionary is small enough to inline.
-    * ``join`` — the scale path for dictionaries too big to inline: explode
-      tokens, broadcast-join the dict, groupBy with map-side partial agg
-      (one shuffle of ~1 row per mention). ``salt_buckets`` salts this
-      aggregation for hot (url,surface) keys — the A7 two-phase pattern.
+    * small (optimizer byte estimate under the inline cap) — the surface
+      set folds into the row as a literal array; mentions are found inside
+      the scan stage with higher-order functions, then a broadcast join
+      attaches entity metadata. Zero shuffle.
+    * larger — each row's distinct words explode and equi-join the
+      dictionary with no driver-side collect and no plan bloat; Spark
+      broadcasts the dictionary side when its own size logic allows,
+      otherwise it shuffles.
+
+    ``count_hits`` counts each surface's occurrences in its row (else
+    ``n_hits`` is 1). ``keep`` names the input columns carried through
+    (the windowed stream carries ``warc_ts``).
     """
-    if strategy == "auto":
-        if salt_buckets:
-            strategy = "join"
-        else:
-            # metadata decision, not an eager count() job: the optimizer's
-            # byte estimate is free for file-backed dicts (same pattern as
-            # the converter's broadcast decision, core/converter.py
-            # _estimated_bytes); count() only as a stats-less fallback
-            from ..core.converter import Converter
-
-            est = Converter._estimated_bytes(entity_dict)
-            if est is not None:
-                small = est <= ARRAY_STRATEGY_MAX_DICT * _DICT_ROW_BYTES_EST
-            else:
-                small = entity_dict.count() <= ARRAY_STRATEGY_MAX_DICT
-            strategy = "array" if small else "join"
-
-    if strategy == "array":
-        surfaces = [r[0] for r in entity_dict.select("surface").collect()]
-        surf_arr = F.array(*[F.lit(s) for s in sorted(surfaces)])
-        words = F.split(F.col(text_col), " ")
-        # The per-doc mention set is computed inside the scan stage with
-        # higher-order functions — zero shuffle. CAREFUL with expression
-        # duplication: whole-stage codegen does not CSE across a Filter +
-        # Project of the same array expression (lambda exprs disable
-        # subexpression elimination), so the mention array feeds ONE
-        # generator directly — explode of an empty array emits no rows,
-        # which also makes a size()>0 prefilter redundant.
-        if count_hits:
-            # counts need the word array after the explode: count word
-            # occurrences equal to each mention — still one projection chain
-            exploded = docs.select(
-                F.col("url"),
-                F.explode(
-                    F.transform(
-                        F.array_intersect(F.array_distinct(words), surf_arr),
-                        lambda m: F.struct(
-                            m.alias("surface"),
-                            F.size(F.filter(words, lambda w: w == m))
-                            .cast("long").alias("n_hits"),
-                        ),
-                    )
-                ).alias("_m"),
-            ).select("url", F.col("_m.surface").alias("surface"),
-                     F.col("_m.n_hits").alias("n_hits"))
-        else:
-            exploded = docs.select(
-                F.col("url"),
-                F.explode(
-                    F.array_intersect(F.array_distinct(words), surf_arr)
-                ).alias("surface"),
-            ).withColumn("n_hits", F.lit(1).cast("long"))
-        return exploded.join(F.broadcast(entity_dict), "surface").select(
-            "url", "surface", "entity_id", "canonical", "kind", "n_hits"
-        )
-
-    tok = docs.select(
-        F.col("url"),
-        F.explode(F.split(F.col(text_col), " ")).alias("surface"),
-    )
-    hits = tok.join(F.broadcast(entity_dict), "surface")
-    if salt_buckets:
-        partial = (
-            hits.withColumn("_salt", F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets)))
-            .groupBy("url", "surface", "entity_id", "canonical", "kind", "_salt")
-            .agg(F.count(F.lit(1)).alias("n_hits"))
-        )
-        return (
-            partial.groupBy("url", "surface", "entity_id", "canonical", "kind")
-            .agg(F.sum("n_hits").alias("n_hits"))
-        )
-    return hits.groupBy("url", "surface", "entity_id", "canonical", "kind").agg(
-        F.count(F.lit(1)).alias("n_hits")
+    # metadata decision, not an eager count() job: the optimizer's byte
+    # estimate is free for file-backed dicts; count() only as a stats-less
+    # fallback
+    est = estimated_bytes(entity_dict)
+    if est is None:
+        est = entity_dict.count() * _DICT_ROW_BYTES_EST
+    words = F.split(F.col(text_col), " ")
+    if est <= ARRAY_STRATEGY_MAX_DICT * _DICT_ROW_BYTES_EST:
+        surfaces = sorted(r[0] for r in entity_dict.select("surface").collect())
+        surf_arr = F.array(*[F.lit(s) for s in surfaces])
+        base = F.array_intersect(F.array_distinct(words), surf_arr)
+        dict_side = F.broadcast(entity_dict)
+    else:
+        base = F.array_distinct(words)
+        dict_side = entity_dict
+    # CAREFUL with expression duplication: whole-stage codegen does not CSE
+    # across a Filter + Project of the same array expression (lambda exprs
+    # disable subexpression elimination), so the mention array feeds ONE
+    # generator directly — explode of an empty array emits no rows
+    if count_hits:
+        exploded = docs.select(
+            *keep,
+            F.explode(
+                F.transform(base, lambda m: F.struct(
+                    m.alias("surface"),
+                    F.size(F.filter(words, lambda w: w == m))
+                    .cast("long").alias("n_hits"),
+                ))
+            ).alias("_m"),
+        ).select(*keep, F.col("_m.surface").alias("surface"),
+                 F.col("_m.n_hits").alias("n_hits"))
+    else:
+        exploded = docs.select(
+            *keep, F.explode(base).alias("surface")
+        ).withColumn("n_hits", F.lit(1).cast("long"))
+    return exploded.join(dict_side, "surface").select(
+        *keep, "surface", "entity_id", "canonical", "kind", "n_hits"
     )
 
 
@@ -243,8 +212,8 @@ def link_entities_contextual(
     zero-shuffle higher-order expressions; candidates broadcast-join on
     surface; one (doc, surface) max_by hash aggregation picks winners (no
     sort-based window). At 100 TB the only corpus-wide movement is that
-    single partial-agg shuffle of ~1 row per mention; dictionaries beyond
-    broadcast size take detect_mentions' join strategy instead.
+    single partial-agg shuffle of ~1 row per mention; dictionaries too big
+    to inline take detect_mentions' dictionary join instead.
     """
     rows = candidates.select("surface", "desc").collect()
     surfaces = sorted({r["surface"] for r in rows})
@@ -287,11 +256,7 @@ def link_entities_contextual(
     )
 
 
-def pages_to_triples(
-    pages: DataFrame,
-    entity_dict: DataFrame,
-    salt_buckets: int = 0,
-) -> DataFrame:
+def pages_to_triples(pages: DataFrame, entity_dict: DataFrame) -> DataFrame:
     """Full pipeline: extract → detect → link → (subj, pred, obj) triples."""
     docs = extract_pages(pages)
     # one tiny driver-side job: an unambiguous dictionary lets the link
@@ -300,8 +265,7 @@ def pages_to_triples(
         entity_dict.groupBy("surface").count().where(F.col("count") > 1).isEmpty()
     )
     linked = link_entities(
-        detect_mentions(docs, entity_dict, salt_buckets=salt_buckets),
-        assume_unambiguous=unambiguous,
+        detect_mentions(docs, entity_dict), assume_unambiguous=unambiguous
     )
     return linked.select(
         F.concat(F.lit("Page:"), F.col("url")).alias("subj"),
@@ -310,12 +274,7 @@ def pages_to_triples(
     )
 
 
-def pages_to_graph(
-    pages: DataFrame,
-    entity_dict: DataFrame,
-    store,
-    salt_buckets: int = 0,
-):
+def pages_to_graph(pages: DataFrame, entity_dict: DataFrame, store):
     """Materialize the full node/edge graph through the schema engine: Page
     nodes, Entity nodes (merged on canonical — the IDStore-as-keyed-DataFrame
     path), MENTIONS edges with n_hits/score props."""
@@ -325,9 +284,7 @@ def pages_to_graph(
     # the Converter auto-persists shuffle-derived sources feeding rel rules
     # (freezes row ids across passes and saves the recompute), so no manual
     # persist is needed here
-    linked = link_entities(
-        detect_mentions(docs, entity_dict, salt_buckets=salt_buckets)
-    )
+    linked = link_entities(detect_mentions(docs, entity_dict))
     schema = """
 ENTITY("pages"):
     NODE("Page") page:

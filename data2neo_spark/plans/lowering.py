@@ -603,15 +603,15 @@ def lower_match(
     nodes: DataFrame,
     entity_type: str,
     side: str,
-    broadcast_nodes: bool,
-    salt_buckets: int = 0,
 ) -> DataFrame:
     """MATCH(...) → equi join of rows against the node table.
 
     Returns rows extended with ``<side>_uid / <side>_label / <side>_key``
     columns (side ∈ {_from, _to}). Static labels and static conditions are
     pushed into the node-side filter (predicate pushdown into the node scan);
-    row-derived conditions become join keys.
+    row-derived conditions become join keys. The join is a plain inner
+    join: Spark picks its strategy from the node side's measured size, and
+    AQE's skew join splits hub keys when it shuffles.
     """
     uid_out, label_out, key_out = f"{side}_uid", f"{side}_label", f"{side}_key"
 
@@ -701,28 +701,6 @@ def lower_match(
             rows_b = rows_b.withColumn(f"{side}_sup_{i}", sup)
 
     def _join(rside: DataFrame, jcond) -> DataFrame:
-        if broadcast_nodes:
-            # small node table: broadcast — no shuffle, skew-immune
-            return rside.join(F.broadcast(cand), on=jcond, how="inner")
-        if salt_buckets:
-            # A7 skew handling for shuffle joins against a huge node table:
-            # the row side gets a deterministic salt, the candidate side is
-            # replicated across all salt values — a hub key's rows spread
-            # over salt_buckets reducers instead of one straggler
-            rside = rside.withColumn(
-                f"{side}_salt",
-                F.pmod(F.xxhash64(F.col(SEQ_SRC), F.col(SEQ_ROW)), F.lit(salt_buckets)),
-            )
-            cand_s = cand.withColumn(
-                f"{side}_salt_c",
-                F.explode(F.sequence(F.lit(0).cast("long"),
-                                     F.lit(salt_buckets - 1).cast("long"))),
-            )
-            return rside.join(
-                cand_s,
-                on=jcond & (F.col(f"{side}_salt") == F.col(f"{side}_salt_c")),
-                how="inner",
-            ).drop(f"{side}_salt", f"{side}_salt_c")
         return rside.join(cand, on=jcond, how="inner")
 
     def _eq(i: int):
@@ -735,7 +713,7 @@ def lower_match(
     # >1 condition and wrappers in play, rows are routed by their
     # suppression-mask to one equi join per observed condition subset
     # (2^k−1 branches, k small by construction) — each branch stays a
-    # hashable equi join, so the broadcast/salted plan shape survives. A
+    # hashable equi join, so Spark's join selection still applies. A
     # condition whose value is genuinely NULL (not suppressed) is KEPT:
     # its equi-join predicate is null → the row matches nothing, exactly
     # the reference's None-valued parsed_conditions behavior.
@@ -828,8 +806,6 @@ def lower_rel_rule(
     df: DataFrame,
     rule: RelRule,
     nodes: DataFrame,
-    broadcast_nodes: bool = False,
-    salt_buckets: int = 0,
 ) -> DataFrame:
     """RELATIONSHIP rule → canonical edge-rows DataFrame.
 
@@ -840,10 +816,8 @@ def lower_rel_rule(
     """
     base = apply_subgraph_preprocessors(df, rule.wrappers)
 
-    rows = lower_match(base, rule.from_match, nodes, rule.entity_type,
-                       "_from", broadcast_nodes, salt_buckets)
-    rows = lower_match(rows, rule.to_match, nodes, rule.entity_type,
-                       "_to", broadcast_nodes, salt_buckets)
+    rows = lower_match(base, rule.from_match, nodes, rule.entity_type, "_from")
+    rows = lower_match(rows, rule.to_match, nodes, rule.entity_type, "_to")
 
     type_col = attr_column(rule.type_attr, rows, rule.entity_type)
     type_col = python_str_column(type_col, dtype_of(rows, type_col))

@@ -4,7 +4,8 @@ Encodes the configuration lessons measured in BENCH.md:
 * small input splits (16 MB) so scans feed every core even on ~1 GB inputs,
 * generous shuffle partitions with AQE coalescing (16 MB advisory) —
   stragglers beat scheduling overhead on skewed aggregations,
-* AQE on (runtime re-planning, skew-join backstop),
+* AQE on: runtime re-planning, and the skew join that splits hub keys
+  of shuffled MATCH and mention joins (the engine adds no salt of its own),
 * cached plans sized to their data: with
   ``canChangeCachedPlanOutputPartitioning`` AQE may coalesce the last
   stage of a persisted frame, which otherwise keeps every shuffle

@@ -22,71 +22,16 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ..pipeline.webtext import extract_pages, detect_mentions, link_entities
 
 
-def _stateless_mentions(
-    docs: DataFrame,
-    entity_dict: DataFrame,
-    extra_cols,
-    count_hits: bool = False,
-) -> DataFrame:
-    """Stateless mention detection for streams, with the batch path's
-    size-gated strategy (pipeline/webtext.py detect_mentions 'auto'):
-
-    * small dictionary (optimizer byte estimate under the array cap) — the
-      surface set inlines as a literal array, zero shuffle, exactly the
-      batch array strategy;
-    * larger dictionary — distinct words explode and equi-join the STATIC
-      dict frame (stream-static join, no driver-side collect, no plan
-      bloat, no aggregation → still no state store). Spark broadcasts the
-      static side when its own size logic allows; otherwise it shuffles.
-
-    Both paths emit one row per distinct mentioned surface per document.
-    """
-    from ..core.converter import Converter
-    from ..pipeline.webtext import ARRAY_STRATEGY_MAX_DICT, _DICT_ROW_BYTES_EST
-
-    cap_bytes = ARRAY_STRATEGY_MAX_DICT * _DICT_ROW_BYTES_EST
-    est = Converter._estimated_bytes(entity_dict)
-    if est is None:
-        est = entity_dict.count() * _DICT_ROW_BYTES_EST
-    words = F.split(F.col("text"), " ")
-    if est <= cap_bytes:
-        surfaces = sorted(r[0] for r in entity_dict.select("surface").collect())
-        surf_arr = F.array(*[F.lit(s) for s in surfaces])
-        base = F.array_intersect(F.array_distinct(words), surf_arr)
-        dict_side = F.broadcast(entity_dict)
-    else:
-        base = F.array_distinct(words)
-        dict_side = entity_dict
-    sel = [F.col(c) for c in extra_cols]
-    if count_hits:
-        exploded = docs.select(
-            *sel,
-            F.explode(
-                F.transform(base, lambda m: F.struct(
-                    m.alias("surface"),
-                    F.size(F.filter(words, lambda w: w == m))
-                    .cast("long").alias("n_hits"),
-                ))
-            ).alias("_m"),
-        ).select(*extra_cols, F.col("_m.surface").alias("surface"),
-                 F.col("_m.n_hits").alias("n_hits"))
-    else:
-        exploded = docs.select(
-            *sel, F.explode(base).alias("surface")
-        ).withColumn("n_hits", F.lit(1).cast("long"))
-    return exploded.join(dict_side, "surface")
-
-
 def stream_pages_to_triples(pages_stream: DataFrame, entity_dict: DataFrame) -> DataFrame:
     """Streaming pages → (subj, pred, obj) triples.
 
     Stateless (no state store): every micro-batch is a pure map + a
-    stream-static dict join, size-gated between the zero-shuffle array
-    strategy and the join strategy (see :func:`_stateless_mentions`). The
-    caller picks the sink (``writeStream.format("parquet"|"memory")...``).
+    stream-static dict lookup, the batch path's
+    :func:`~data2neo_spark.pipeline.webtext.detect_mentions`. The caller
+    picks the sink (``writeStream.format("parquet"|"memory")...``).
     """
     docs = extract_pages(pages_stream)
-    mentions = _stateless_mentions(docs, entity_dict, ["url"])
+    mentions = detect_mentions(docs, entity_dict, count_hits=False)
     return mentions.select(
         F.concat(F.lit("Page:"), F.col("url")).alias("subj"),
         F.lit("MENTIONS").alias("pred"),
@@ -107,10 +52,11 @@ def stream_windowed_mention_counts(
     docs = pages_stream.select("url", "warc_ts", "text").withWatermark(
         "warc_ts", watermark
     )
-    # size-gated stateless mention detection carrying the event-time column
-    # (a stream-stream self-join to re-attach warc_ts would need two
+    # stateless mention detection carrying the event-time column (a
+    # stream-stream self-join to re-attach warc_ts would need two
     # watermarks; carrying the column through the explode avoids it)
-    enriched = _stateless_mentions(docs, entity_dict, ["url", "warc_ts"])
+    enriched = detect_mentions(docs, entity_dict, count_hits=False,
+                               keep=("url", "warc_ts"))
     return (
         enriched.groupBy(
             F.window("warc_ts", window).alias("win"),
@@ -140,17 +86,13 @@ def stream_pages_to_graph(
     Returns the StreamingQuery; stop it to end ingestion.
     """
     from ..core.converter import Converter
-    from ..pipeline.webtext import detect_mentions, extract_pages, link_entities
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # foreachBatch runs in batch context — the batch auto strategy's
-        # size gate applies directly (no unconditional dict inlining)
         docs = extract_pages(batch_df)
         linked = link_entities(
-            detect_mentions(docs, entity_dict, strategy="auto"),
-            assume_unambiguous=True,
+            detect_mentions(docs, entity_dict), assume_unambiguous=True
         )
         conv_schema = schema or """
 ENTITY("pages"):

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -28,6 +29,25 @@ def spark():
         .getOrCreate()
     )
     yield session
+
+
+@pytest.fixture
+def shuffle_joins(spark):
+    """Context manager under which Spark broadcasts no join side larger
+    than ``threshold`` bytes (``spark.sql.autoBroadcastJoinThreshold``;
+    -1, the default, broadcasts none). Wrap both the conversion and the
+    action, since AQE re-plans joins at run time."""
+    @contextlib.contextmanager
+    def _shuffle_joins(threshold: str = "-1"):
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        spark.conf.set(key, threshold)
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+
+    return _shuffle_joins
 
 
 def node_set(nodes_df):

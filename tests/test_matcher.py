@@ -162,9 +162,9 @@ def test_partially_suppressed_conditions_match_on_survivors(spark):
     assert got == ["1"]
 
 
-def test_partial_suppression_salted_path(spark):
-    """The null-mask branch routing must survive the shuffle+salt MATCH
-    path too (each branch is its own salted equi join; union of branches
+def test_partial_suppression_salted_path(spark, shuffle_joins):
+    """The null-mask branch routing must survive the shuffle MATCH join
+    too (each branch is its own shuffled equi join; union of branches
     equals the broadcast-path answer)."""
     from data2neo_spark import Attribute, register_attribute_postprocessor
 
@@ -181,8 +181,8 @@ def test_partial_suppression_salted_path(spark):
     })
     expr = ('MATCH("TestLabel", id = suppress_neg_r3s(INT(probe.id)), '
             "id2 = INT(probe.id2))")
-    assert run_match(spark, expr, probe,
-                     broadcast_nodes=False, match_salt_buckets=4) == ["1"]
+    with shuffle_joins():
+        assert run_match(spark, expr, probe) == ["1"]
 
 
 def test_suppressed_dynamic_label_matches_on_remaining(spark):
@@ -242,7 +242,7 @@ def test_suppression_flag_distinct_from_genuine_null(spark):
     assert got == ["1"]
 
 
-def test_suppression_branch_cap_linear_routing(spark, monkeypatch):
+def test_suppression_branch_cap_linear_routing(spark, monkeypatch, shuffle_joins):
     """Above SUPPRESSION_BRANCH_CAP the lowering routes rows by their first
     unsuppressed condition (k equi-join branches + post-filter) instead of
     2^k−1 subset branches — same answers, bounded plan size."""
@@ -265,6 +265,6 @@ def test_suppression_branch_cap_linear_routing(spark, monkeypatch):
             "id2 = INT(probe.id2))")
     monkeypatch.setattr(lowering, "SUPPRESSION_BRANCH_CAP", 1)
     assert run_match(spark, expr, probe) == ["1"]
-    # and on the salted path too
-    assert run_match(spark, expr, probe,
-                     broadcast_nodes=False, match_salt_buckets=4) == ["1"]
+    # and on the shuffle join path too
+    with shuffle_joins():
+        assert run_match(spark, expr, probe) == ["1"]

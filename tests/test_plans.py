@@ -92,7 +92,7 @@ def test_mention_array_strategy_has_no_shuffle(spark):
     physical plan (the only exchange allowed is the dict broadcast)."""
     pages = synth_pages(spark, 100, n_entities=20, seed=42)
     edict = entity_dictionary(spark, 20, seed=42)
-    m = detect_mentions(extract_pages(pages), edict, strategy="array")
+    m = detect_mentions(extract_pages(pages), edict)
     plan = plan_of(m)
     import re
     # count the plan's exchange nodes ("(N) <kind>Exchange" in the
@@ -252,3 +252,19 @@ def test_round5_second_wave_plan_shapes(spark):
                           "doc_id % 97 AS obj")
     p = plan_of(negative_samples(pos, n_entities=97, k=2, filter_true=False))
     assert "Exchange" not in p
+
+
+def test_salted_match_runs_shuffle_match_join(spark):
+    """kg_salted_match gives kg_triples_match's rows through a shuffle
+    sort-merge join for both MATCH joins: no broadcast, no salt."""
+    import __spark_entry__ as entrymod
+    from tools.check_leaks import SF_DIR
+
+    q = entrymod.queries()
+    shuffled = q["kg_salted_match"](spark, SF_DIR)
+    rows = sorted(shuffled.collect())
+    assert rows == sorted(q["kg_triples_match"](spark, SF_DIR).collect())
+    # the tree of the executed adaptive plan, before its initial plan
+    final = plan_of(shuffled).split("== Initial Plan ==")[0]
+    assert final.count("SortMergeJoin") == 2
+    assert "BroadcastHashJoin" not in final

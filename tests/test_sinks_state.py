@@ -100,8 +100,8 @@ ENTITY("g"):
     assert st.nodes.collect()[0]["v"] == "x-from-state"
 
 
-def test_salted_match_join_same_result(spark):
-    """A7: salting the MATCH join changes the physical plan, not the answer."""
+def test_salted_match_join_same_result(spark, shuffle_joins):
+    """A7: a shuffled MATCH join changes the physical plan, not the answer."""
     ent = pd.DataFrame({"id": [1, 2]})
     rel = pd.DataFrame({"src": [1, 1, 1, 1, 2], "dst": [2, 2, 2, 2, 1]})
     schema = """
@@ -113,23 +113,18 @@ ENTITY("r"):
     RELATIONSHIP(MATCH("E", id = INT(r.src)), "TO", MATCH("E", id = INT(r.dst))):
 """
 
-    def run(salt):
-        import data2neo_spark.core.converter as C
-        old = C.BROADCAST_NODE_LIMIT
-        C.BROADCAST_NODE_LIMIT = 0  # force the shuffle-join path
-        try:
-            store = Converter(
-                schema,
-                [("e", spark.createDataFrame(ent)), ("r", spark.createDataFrame(rel))],
-                match_salt_buckets=salt,
-            )(spark)
-            return sorted(
-                (r["_src_key"], r["_dst_key"]) for r in store.edges.collect()
-            )
-        finally:
-            C.BROADCAST_NODE_LIMIT = old
+    def run():
+        store = Converter(
+            schema,
+            [("e", spark.createDataFrame(ent)), ("r", spark.createDataFrame(rel))],
+        )(spark)
+        return sorted(
+            (r["_src_key"], r["_dst_key"]) for r in store.edges.collect()
+        )
 
-    assert run(0) == run(4) == [("1", "2")] * 4 + [("2", "1")]
+    with shuffle_joins():
+        shuffled = run()
+    assert run() == shuffled == [("1", "2")] * 4 + [("2", "1")]
 
 
 def test_live_sink_batches(spark, store):

@@ -163,11 +163,10 @@ def test_stream_pages_to_graph(spark, pages_dir, tmp_path):
 
 
 def test_large_dict_uses_join_not_inline(spark):
-    """The streaming mention path must size-gate the dictionary like the
-    batch auto strategy: a large dict goes through a stream-static equi
-    join (no driver-side collect of surfaces, no literal array in the
-    plan)."""
-    from data2neo_spark.streaming.ingest import _stateless_mentions
+    """The mention detector size-gates the dictionary for streams as for
+    batches: a large dict goes through a stream-static equi join (no
+    driver-side collect of surfaces, no literal array in the plan)."""
+    from data2neo_spark.pipeline.webtext import detect_mentions
 
     big_dict = spark.range(300_000).selectExpr(
         "concat('w', id) surface", "id entity_id",
@@ -176,7 +175,7 @@ def test_large_dict_uses_join_not_inline(spark):
     docs = spark.createDataFrame(
         pd.DataFrame({"url": ["u1"], "text": ["w1 w2 w999 foo"]})
     )
-    out = _stateless_mentions(docs, big_dict, ["url"])
+    out = detect_mentions(docs, big_dict, count_hits=False)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "array_intersect" not in plan          # no inlined literal dict
     assert "Join" in plan
@@ -185,7 +184,7 @@ def test_large_dict_uses_join_not_inline(spark):
 
 
 def test_small_dict_keeps_array_strategy(spark):
-    from data2neo_spark.streaming.ingest import _stateless_mentions
+    from data2neo_spark.pipeline.webtext import detect_mentions
 
     small_dict = spark.createDataFrame(pd.DataFrame({
         "surface": ["w1", "w2"], "entity_id": [1, 2],
@@ -194,7 +193,7 @@ def test_small_dict_keeps_array_strategy(spark):
     docs = spark.createDataFrame(
         pd.DataFrame({"url": ["u1"], "text": ["w1 w3 w1"]})
     )
-    out = _stateless_mentions(docs, small_dict, ["url"])
+    out = detect_mentions(docs, small_dict, count_hits=False)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "array_intersect" in plan              # inlined zero-shuffle path
     assert [(r["url"], r["surface"]) for r in out.collect()] == [("u1", "w1")]
@@ -203,7 +202,7 @@ def test_small_dict_keeps_array_strategy(spark):
 def test_stateless_mentions_count_hits(spark):
     """The count_hits path computes per-surface occurrence counts inside
     the row (no aggregation → still stateless)."""
-    from data2neo_spark.streaming.ingest import _stateless_mentions
+    from data2neo_spark.pipeline.webtext import detect_mentions
 
     d = spark.createDataFrame(pd.DataFrame({
         "surface": ["w1", "w2"], "entity_id": [1, 2],
@@ -213,7 +212,7 @@ def test_stateless_mentions_count_hits(spark):
         pd.DataFrame({"url": ["u1"], "text": ["w1 w3 w1 w2"]})
     )
     got = {(r["surface"]): r["n_hits"]
-           for r in _stateless_mentions(docs, d, ["url"], count_hits=True).collect()}
+           for r in detect_mentions(docs, d).collect()}
     assert got == {"w1": 2, "w2": 1}
 
 

@@ -122,9 +122,9 @@ ENTITY("t"):
     assert store.edges.count() == 2
 
 
-def test_forced_shuffle_match_equals_broadcast(spark):
-    """A7: forcing the shuffle+salt MATCH path yields the exact same edge
-    set as the broadcast path."""
+def test_forced_shuffle_match_equals_broadcast(spark, shuffle_joins):
+    """A7: forcing the shuffle MATCH join yields the exact same edge set as
+    the broadcast path, and really plans a sort-merge join."""
     df = spark.createDataFrame(
         pd.DataFrame({"src": [1, 1, 2, 2, 2, 3], "dst": [10, 11, 10, 12, 13, 10]})
     )
@@ -136,24 +136,30 @@ ENTITY("t"):
     + id = INT(t.dst)
   RELATIONSHIP(MATCH("S", id = INT(t.src)), "HIT", MATCH("D", id = INT(t.dst))):
 """
-    def run(**kw):
-        store = Converter(nodes_schema, [("t", df)], **kw)(spark)
-        return {
+    def run():
+        store = Converter(nodes_schema, [("t", df)])(spark)
+        edges = {
             (r["_src_key"], r["_dst_key"]) for r in store.edges.collect()
         }
+        return edges, store.edges._sc._jvm.PythonSQLUtils.explainString(
+            store.edges._jdf.queryExecution(), "formatted"
+        )
 
-    broadcast = run(broadcast_nodes=True)
-    shuffled = run(broadcast_nodes=False, match_salt_buckets=4)
-    auto_salt = run(broadcast_nodes=False)  # salt defaults on for shuffle
-    assert broadcast == shuffled == auto_salt
+    broadcast, bplan = run()
+    with shuffle_joins():
+        shuffled, splan = run()
+    assert "BroadcastHashJoin" in bplan
+    assert "SortMergeJoin" in splan and "BroadcastHashJoin" not in splan
+    assert broadcast == shuffled
     assert len(broadcast) == 6
 
 
-def test_byte_based_broadcast_decision(spark):
-    """The MATCH join strategy is decided by estimated node-table BYTES:
-    a tiny byte cap forces the shuffle+salt path even though the row count
-    is small (the old row-count heuristic would have broadcast a wide
-    table into the driver)."""
+def test_byte_based_broadcast_decision(spark, shuffle_joins):
+    """The MATCH join strategy is decided by estimated node-table BYTES
+    against the session's ``spark.sql.autoBroadcastJoinThreshold``: a
+    tiny threshold gives a shuffle join even though the row count is
+    small (a row count alone would broadcast a wide table into the
+    driver)."""
     df = spark.createDataFrame(
         pd.DataFrame({
             "src": [1, 2, 3],
@@ -178,11 +184,10 @@ ENTITY("t"):
     # default byte budget: broadcast
     s1 = Converter(schema, [("t", df)])(spark)
     assert "BroadcastHashJoin" in plan_of(s1)
-    # 1-byte budget: auto-falls back to the salted shuffle join
-    s2 = Converter(schema, [("t", df)], broadcast_bytes_limit=1)(spark)
+    # 1-byte session budget: Spark falls back to the shuffle join
+    with shuffle_joins("1"):
+        s2 = Converter(schema, [("t", df)])(spark)
+        r2 = {(r["_src_key"], r["_dst_key"]) for r in s2.edges.collect()}
     # same answers either way
     r1 = {(r["_src_key"], r["_dst_key"]) for r in s1.edges.collect()}
-    r2 = {(r["_src_key"], r["_dst_key"]) for r in s2.edges.collect()}
     assert r1 == r2 and len(r1) == 3
-    # the salt column machinery ran: the logical plan mentions the salt
-    assert "_salt" in s2.edges._jdf.queryExecution().logical().toString()

@@ -151,3 +151,27 @@ def test_dynamic_typed_props_sample_inference(spark):
     rows = {r["b"]: r.asDict() for r in out.filter(F.col("b").isNotNull()).collect()}
     assert rows["x"]["a"] == 1.0 and rows["x"]["c"] is True
     assert rows["7"]["a"] == 2.5 and rows["7"]["d"] == 3
+
+
+def test_vectorized_postprocessor_output_type(spark):
+    """A vectorized postprocessor's output column is typed from its probe
+    result, a numpy scalar: ``s + 1`` on an INT column stays ``bigint``."""
+    from data2neo_spark import register_vectorized_attribute_postprocessor
+
+    @register_vectorized_attribute_postprocessor
+    def vec_plus_one(s):
+        return s + 1
+
+    schema = """
+ENTITY("T"):
+    NODE("N") n:
+        + id = INT(T.id)
+        - j = vec_plus_one(INT(T.x))
+"""
+    store = Converter(schema, [
+        ("T", spark.createDataFrame(pd.DataFrame({"id": [1, 2], "x": [10, 20]})))
+    ])(spark)
+    assert store.nodes.schema["j"].dataType.simpleString() == "bigint"
+    assert sorted((r["id"], r["j"]) for r in store.nodes.collect()) == [
+        (1, 11), (2, 21)
+    ]

@@ -1,6 +1,6 @@
 """North-rule webtext pipeline tests: corpus determinism, byte-identical
 extraction per url, mention-detection P/R vs an independent python oracle,
-graph materialization, and salting equivalence."""
+graph materialization, and one answer from both dictionary paths."""
 
 import pandas as pd
 import pytest
@@ -79,20 +79,33 @@ def test_zipf_skew_exists(pages, edict):
     assert counts[0]["n"] > 10 * counts[-1]["n"]  # heavy head
 
 
-def test_salting_equivalence(pages, edict):
-    """Two-phase salted aggregation returns the identical result set."""
-    docs = extract_pages(pages)
-    plain = {
-        tuple(r)
-        for r in detect_mentions(docs, edict, salt_buckets=0)
-        .select("url", "canonical", "n_hits").collect()
-    }
-    salted = {
-        tuple(r)
-        for r in detect_mentions(docs, edict, salt_buckets=8)
-        .select("url", "canonical", "n_hits").collect()
-    }
-    assert plain == salted
+def test_mention_paths_agree_per_page_row(spark, monkeypatch):
+    """The inline (small-dictionary) and join (large-dictionary) paths give
+    the same answer: one row per mentioned surface per page ROW, so a URL
+    crawled twice keeps one row per crawl instead of summing its hits."""
+    from data2neo_spark.pipeline import webtext
+
+    docs = spark.createDataFrame(pd.DataFrame({
+        "url": ["u1", "u1", "u2"],
+        "text": ["spark spark join", "spark", "join"],
+    }))
+    d = spark.createDataFrame(pd.DataFrame({
+        "surface": ["spark", "join"], "entity_id": [1, 2],
+        "canonical": ["SPARK", "JOIN"], "kind": ["t", "t"],
+    }))
+
+    def rows():
+        return sorted(
+            (r["url"], r["surface"], r["n_hits"])
+            for r in detect_mentions(docs, d).collect()
+        )
+
+    inline = rows()
+    monkeypatch.setattr(webtext, "ARRAY_STRATEGY_MAX_DICT", 0)
+    assert rows() == inline == [
+        ("u1", "join", 1), ("u1", "spark", 1), ("u1", "spark", 2),
+        ("u2", "join", 1),
+    ]
 
 
 def test_pages_to_triples(pages, edict):

@@ -58,7 +58,7 @@ def child(cpus: int, corpus_dir: str) -> None:
     pages = spark.read.parquet(corpus_dir)
     edict = entity_dictionary(spark, 1000, seed=42)
     n_pages = pages.count()
-    job = pages_to_triples(pages, edict, salt_buckets=0)
+    job = pages_to_triples(pages, edict)
     # warmup rep (JIT/codegen + page cache), then best of 3 timed reps —
     # steady-state throughput, same protocol at both parallelism levels
     n_triples = job.count()
