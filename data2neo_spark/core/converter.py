@@ -38,7 +38,7 @@ from ..plans.rules import CompiledSchema
 from ..schema.compiler import compile_schema
 from ..sources.iterators import ResourceIterator
 from .store import GraphStore
-from .types import estimated_bytes
+from .types import estimated_bytes, observed_value
 
 logger = logging.getLogger(__name__)
 
@@ -167,25 +167,6 @@ class Converter:
         # only SHUFFLE exchanges make per-partition row ids execution-
         # dependent; broadcast exchanges don't repartition the probe side
         return "Exchange" in plan.replace("BroadcastExchange", "")
-
-    @staticmethod
-    def _obs_value(obs, key: str, retries: int = 20):
-        """Non-blocking Observation read: the blocking ``obs.get`` deadlocks
-        inside ``foreachBatch`` micro-batches for CollectMetrics nodes below
-        an aggregation (the listener never fires there) — poll the JVM-side
-        ``getOrEmptyAsJava`` with a short bounded retry instead and treat a
-        missing metric as unknown."""
-        for _ in range(retries):
-            try:
-                opt = obs._jo.getRowOrEmpty()
-                if opt.isDefined():
-                    row = opt.get()
-                    idx = row.fieldIndex(key)
-                    return None if row.isNullAt(idx) else row.get(idx)
-            except Exception:
-                return None
-            time.sleep(0.05)
-        return None
 
     @staticmethod
     def _plan_row_count(df: DataFrame) -> Optional[int]:
@@ -449,7 +430,7 @@ class Converter:
             # merge-mode data loss must be observable (reference raises
             # per row, graph_elements.py:251-252)
             for rule_id, drop_obs in null_pk_obs:
-                dropped = self._obs_value(drop_obs, "null_pk_rows")
+                dropped = observed_value(drop_obs, "null_pk_rows")
                 if dropped:
                     logger.warning(
                         "rule %s: dropped %d rows with NULL primary key",

@@ -354,12 +354,12 @@ class GraphStore:
             src = self.match_nodes(*from_node_labels).select(
                 F.col(L.UID).alias("__src_match")
             )
-            df = df.join(F.broadcast(src), df[L.SRC_UID] == F.col("__src_match"), "left_semi")
+            df = df.join(src, df[L.SRC_UID] == F.col("__src_match"), "left_semi")
         if to_node_labels:
             dst = self.match_nodes(*to_node_labels).select(
                 F.col(L.UID).alias("__dst_match")
             )
-            df = df.join(F.broadcast(dst), df[L.DST_UID] == F.col("__dst_match"), "left_semi")
+            df = df.join(dst, df[L.DST_UID] == F.col("__dst_match"), "left_semi")
         return df
 
     # --- subgraph create / merge (reference neo4j/__init__.py create/merge) ---

@@ -11,6 +11,7 @@ coercion, graph_elements.py:84-86).
 from __future__ import annotations
 
 import datetime
+import time
 from typing import Dict, List, Optional
 
 import numpy as np
@@ -33,6 +34,34 @@ def estimated_bytes(df: DataFrame) -> Optional[int]:
     except Exception:
         return None
     return est if 0 <= est < _STATS_UNKNOWN else None
+
+
+def inline_values(df: DataFrame, col: str, max_rows: int) -> Optional[list]:
+    """``col``'s values when ``df`` has at most ``max_rows`` rows, else
+    None. The one inline-or-join decision of the operators: a bounded
+    collect of at most ``max_rows + 1`` rows counts rows exactly, where a
+    byte estimate would have to guess a row width."""
+    rows = df.select(col).limit(max_rows + 1).collect()
+    return None if len(rows) > max_rows else [r[0] for r in rows]
+
+
+def observed_value(obs, key: str, retries: int = 20):
+    """Non-blocking Observation read: the blocking ``obs.get`` deadlocks
+    inside ``foreachBatch`` micro-batches for CollectMetrics nodes below
+    an aggregation (the listener never fires there) — poll the JVM-side
+    ``getRowOrEmpty`` with a short bounded retry instead and treat a
+    missing metric as unknown (None)."""
+    for _ in range(retries):
+        try:
+            opt = obs._jo.getRowOrEmpty()
+            if opt.isDefined():
+                row = opt.get()
+                idx = row.fieldIndex(key)
+                return None if row.isNullAt(idx) else row.get(idx)
+        except Exception:
+            return None
+        time.sleep(0.05)
+    return None
 
 
 def python_str_column(col: Column, dtype: T.DataType) -> Column:

@@ -23,7 +23,7 @@ from typing import List, Optional, Tuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..core.types import estimated_bytes
+from ..core.types import inline_values
 from .dedup import minhash_lsh_duplicates
 from .text import with_gopher_quality, with_langid, with_quality_features
 
@@ -47,7 +47,6 @@ def clean_corpus(
     normalize: bool = False,
     url_col: Optional[str] = None,
     domain_blocklist: Optional[DataFrame] = None,
-    blocklist_max_inline: int = 10_000,
 ) -> Tuple[DataFrame, DataFrame]:
     """Returns (kept_docs, report).
 
@@ -74,9 +73,10 @@ def clean_corpus(
     chain is then normalize → url-gate → quality → lang → exact dedup →
     near dedup in ONE pass. ``url_col`` + ``domain_blocklist`` add the
     URL-hygiene gate: rows whose eTLD+1 is blocklisted fail eligibility
-    (size-gated like :func:`~data2neo_spark.operators.web.
-    filter_domain_blocklist`: small lists inline as an isin literal —
-    zero extra shuffle — large ones flag via a join).
+    (like :func:`~data2neo_spark.operators.web.filter_domain_blocklist`:
+    lists of at most ``web.BLOCKLIST_MAX_INLINE`` rows inline as an isin
+    literal — zero extra shuffle — longer ones flag via a join that Spark
+    sizes itself).
     """
     if normalize:
         from .text import normalize_text
@@ -88,15 +88,11 @@ def clean_corpus(
         )
     flagged = with_quality_features(docs, text_col)
     if url_col is not None and domain_blocklist is not None:
-        from .web import with_url_parts
+        from .web import BLOCKLIST_MAX_INLINE, with_url_parts
 
         flagged = with_url_parts(flagged, url_col)
-        est = estimated_bytes(domain_blocklist)
-        small = (est is not None and est <= blocklist_max_inline * 64) or (
-            est is None and domain_blocklist.count() <= blocklist_max_inline
-        )
-        if small:
-            domains = [r[0] for r in domain_blocklist.select("domain").collect()]
+        domains = inline_values(domain_blocklist, "domain", BLOCKLIST_MAX_INLINE)
+        if domains is not None:
             url_ok = (
                 ~F.col("registered_domain").isin(domains)
                 | F.col("registered_domain").isNull()

@@ -28,7 +28,7 @@ from typing import List, Optional, Tuple
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..core.types import estimated_bytes
+from ..core.types import observed_value
 from . import rounds
 from .rounds import persist
 from .text import word_shingles
@@ -229,20 +229,6 @@ def contamination_check(
     )
 
 
-def _should_broadcast(df: DataFrame, limit_bytes: Optional[int] = None) -> bool:
-    """True when the optimizer's size estimate says ``df`` fits under the
-    session's autoBroadcastJoinThreshold (or an explicit limit). Unknown
-    estimate → False: at scale the safe default is to let AQE decide, not
-    to force a driver-side build of an unbounded frame."""
-    est = estimated_bytes(df)
-    if est is None:
-        return False
-    if limit_bytes is None:
-        limit_bytes = (df.sparkSession._jsparkSession.sessionState().conf()
-                       .autoBroadcastJoinThreshold())
-    return 0 < est <= limit_bytes
-
-
 def _verified_jaccard(
     cand: DataFrame,
     a_arrays: DataFrame,
@@ -265,18 +251,11 @@ def _verified_jaccard(
     :func:`_sig_frame` pass, so the shingle pass is paid once. Self-dedup
     passes one frame for both sides; it is probed twice and a mapInPandas
     plan gets no ReuseExchange dedup, so that frame comes cached."""
+    # no hint: Spark broadcasts the bare pair list when its size estimate
+    # is under autoBroadcastJoinThreshold and shuffles it otherwise (at
+    # low thresholds the candidate list is O(corpus)); AQE promotes either
+    # join at run time when a side turns out small
     pairs = cand.select("id_a", "id_b")
-    # broadcast ONLY the bare pair list (small by construction — capped/
-    # bucketed candidate stage), never the intermediate that already
-    # carries _sa shingle arrays: that build side grows with array size
-    # and can blow the broadcast limit at scale. The hint is CONDITIONAL
-    # on the optimizer's size estimate: at low thresholds the candidate
-    # list is O(corpus) and an unconditional hint would override Spark's
-    # size logic and OOM the driver — above the gate we leave strategy to
-    # AQE. The second join's arrays side shuffles (or AQE promotes it when
-    # actually small).
-    if _should_broadcast(pairs):
-        pairs = pairs.hint("broadcast")
     joined = (
         a_arrays.select(F.col(id_col).alias("id_a"),
                         F.col("sh_arr").alias("_sa"))
@@ -925,11 +904,9 @@ def duplicate_clusters(
             checkpoint_dir, "labels_round", i, cut=True,
         )
         # non-blocking metric read (blocking Observation.get deadlocks for
-        # CollectMetrics inside foreachBatch micro-batches — same guard as
-        # core/converter._obs_value); metric unavailable → explicit count
-        from ..core.converter import Converter as _C
-
-        changed = _C._obs_value(obs, "changed")
+        # CollectMetrics inside foreachBatch micro-batches); metric
+        # unavailable → explicit count
+        changed = observed_value(obs, "changed")
         if changed is None:
             changed = (
                 new_lab.join(lab.withColumnRenamed("lab", "_old"), "v")

@@ -18,6 +18,18 @@ from pyspark.sql import functions as F
 from . import rounds
 from .rounds import persist
 
+# pagerank's rank/degree frames and LPA's label frame broadcast up to this
+# many nodes: the one join-size gate an operator keeps. Spark's own rule
+# (size estimate <= autoBroadcastJoinThreshold, 10 MB by default) does not
+# broadcast a 1.7 M-node frame, so without the gate every round shuffles
+# the edge frame. On a generated 6 M-edge, 1.7 M-node graph (local[4]) the
+# final plans went from 12 BroadcastHashJoin to 12 SortMergeJoin
+# (pagerank) and from 2 to 0 BroadcastHashJoin (LPA). One warm pair took
+# 20.3 vs 23.7 s (pagerank) and 50.8 vs 61.0 s (LPA) with the gate vs
+# without; further pairs on the same 4 vCPU host, where a shuffle never
+# leaves the machine, did not separate the two. 16 B/node: 5 M is ~80 MB.
+NODE_BROADCAST_MAX = 5_000_000
+
 
 def pagerank(
     edges: DataFrame,
@@ -27,7 +39,6 @@ def pagerank(
     scale: int = 10**12,
     damping_num: int = 85,
     damping_den: int = 100,
-    broadcast_nodes_max: int = 5_000_000,
     checkpoint_dir: str = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank in INTEGER arithmetic: ranks are longs
@@ -49,11 +60,10 @@ def pagerank(
     computed once before the loop and unioned in, instead of a per-round
     left join back to all nodes (r4: saves one broadcast build + one
     join per round). When the node count is at most
-    ``broadcast_nodes_max`` the rank frame (16 bytes/node) is BROADCAST,
+    ``NODE_BROADCAST_MAX`` the rank frame (16 bytes/node) is BROADCAST,
     so the big edge frame is never shuffled — the only exchange per
-    round is the partial-agg groupBy(dst). Beyond that the join shuffles
-    on its key; hub skew behaves like any hot-key aggregation (AQE
-    skew-join or salting applies).
+    round is the partial-agg groupBy(dst). Beyond that Spark picks the
+    join from its own size rule, and AQE's skew join splits hub keys.
 
     ``checkpoint_dir`` makes a long run resumable (operators/rounds.py):
     each round's rank table is written to ``<dir>/pr_round_<i>`` and a
@@ -87,7 +97,7 @@ def pagerank(
     deg = stats.where(F.col("_outdeg") > 0).select(
         F.col("v").alias("src"), F.col("_outdeg").alias("deg")
     )
-    if n <= broadcast_nodes_max:
+    if n <= NODE_BROADCAST_MAX:
         # same gate as the per-round rank broadcast (deg is strictly
         # smaller than the rank frame): avoids a sort-merge join just to
         # attach degrees to the edge frame
@@ -104,7 +114,7 @@ def pagerank(
     ) or (-1, persist(
         nodes.withColumn("pr", F.lit(scale // n).cast("long"))
     ))
-    bcast = (lambda d: F.broadcast(d)) if n <= broadcast_nodes_max else (lambda d: d)
+    bcast = (lambda d: F.broadcast(d)) if n <= NODE_BROADCAST_MAX else (lambda d: d)
     # nodes with no incoming edge keep the constant rank `base` in every
     # round — that set falls out of the shared stats aggregate (a node
     # never tagged as dst), no extra anti join
@@ -301,7 +311,6 @@ def khop_reachability(
     src: str = "src",
     dst: str = "dst",
     undirected: bool = False,
-    broadcast_frontier_max: int = 5_000_000,
     checkpoint_dir: str = None,
 ) -> DataFrame:
     """Bounded k-hop BFS from a seed set: ``(seed, node, min_hops)`` for
@@ -317,13 +326,14 @@ def khop_reachability(
     the loop is k joins total, NOT k self-joins of a growing path table:
     no path enumeration, state is O(reached nodes) not O(paths).
 
-    Scale shape: the edge frame is the big side and is never moved when
-    the frontier fits the broadcast gate (``broadcast_frontier_max``
-    rows, checked per layer with a cheap count that doubles as the
-    convergence test — an empty frontier short-circuits the remaining
-    hops). Past the gate the layer join degrades to one hash exchange
-    per side, keyed on the node id — hub fan-out behaves like any hot
-    key (AQE skew split applies). ``undirected=True`` unions the
+    Scale shape: the edge frame is the big side. The frontier and the
+    reached set are filled caches, so Spark knows their exact size and
+    ships them to the edge frame's tasks while they fit its join-size
+    threshold; the edge frame then never moves. Past the threshold the
+    layer join is one hash exchange per side, keyed on the node id, and
+    AQE's skew join splits hub fan-out. Each layer's materialization
+    counts the new frontier, which is the convergence test: an empty
+    frontier short-circuits the remaining hops. ``undirected=True`` unions the
     reversed edge frame lazily (no materialization).
 
     Engine-portable: integer hop arithmetic and set semantics only, so a
@@ -354,30 +364,18 @@ def khop_reachability(
         "seed", F.col("seed").alias("node"), F.lit(0).cast("int").alias("min_hops")
     )))
     frontier = reached.where(F.col("min_hops") == done).select("seed", "node")
-    n = frontier.count()  # only the resume layer pays a standalone count;
-    reached_n = reached.count() if done > 0 else n
+    n = frontier.count()  # only the resume layer pays a standalone count
     for hop in range(done + 1, k + 1):
         if n == 0:
             break
-        f = F.broadcast(frontier) if n <= broadcast_frontier_max else frontier
-        # the dedup-vs-reached anti-join broadcasts its right side while
-        # the reached set is small (it is bounded by seeds × visited
-        # nodes — tiny relative to the edge frame), saving the exchange
-        # on the candidate stream every layer
-        anti = (
-            F.broadcast(reached)
-            if reached_n <= broadcast_frontier_max
-            else reached
-        )
         # the layer's one job: materialize + frontier size
         nxt, n = rounds.materialize(
-            f.join(e, f["node"] == e["_s"])
+            frontier.join(e, frontier["node"] == e["_s"])
             .select("seed", F.col("_d").alias("node"))
             .distinct()
-            .join(anti, ["seed", "node"], "left_anti")
+            .join(reached, ["seed", "node"], "left_anti")
             .withColumn("min_hops", F.lit(hop).cast("int"))
         )
-        reached_n += n
         reached = reached.unionAll(nxt)
         if checkpoint_dir is not None:
             reached, _ = rounds.materialize(
@@ -398,7 +396,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     iters: int = 3,
-    broadcast_nodes_max: int = 5_000_000,
     checkpoint_dir: str = None,
 ) -> DataFrame:
     """Community detection by synchronous label propagation
@@ -413,7 +410,7 @@ def label_propagation(
     into separate communities.
 
     Shape per round: one join of the (node, nbr) adjacency with the
-    label frame — label frame broadcasts up to ``broadcast_nodes_max``
+    label frame — label frame broadcasts up to ``NODE_BROADCAST_MAX``
     rows so the adjacency never shuffles — then ONE per-node
     ``mode(label, deterministic=True)`` aggregate (most frequent label,
     smallest on ties), partial-agg friendly: one shuffle per round.
@@ -439,7 +436,7 @@ def label_propagation(
         done, labels = resumed
     for i in range(done + 1, iters):
         lbl = labels.select(F.col("node").alias("nbr"), F.col("label"))
-        if n_nodes <= broadcast_nodes_max:
+        if n_nodes <= NODE_BROADCAST_MAX:
             lbl = F.broadcast(lbl)
         top = nb.join(lbl, "nbr").groupBy("node").agg(
             F.mode("label", deterministic=True).alias("_new")
@@ -558,7 +555,6 @@ def sample_neighbors(
     dst: str = "dst",
     undirected: bool = False,
     seed: int = 0,
-    broadcast_frontier_max: int = 5_000_000,
 ) -> DataFrame:
     """GraphSAGE-style layered neighbor sampling for GNN minibatches:
     layer ``i`` keeps at most ``fanouts[i]`` neighbors PER (seed,
@@ -569,9 +565,10 @@ def sample_neighbors(
     ``(seed, layer, node, nbr)``.
 
     Scale shape per layer: frontier joins the persisted edge frame
-    (frontier broadcasts under the gate, so the edge frame never
-    moves), then ONE (seed, node)-keyed top-k window over candidate
-    rows already bounded by frontier×degree. The output is
+    (Spark ships the frontier to the edge frame's tasks while it fits
+    its join-size threshold, so the edge frame never moves), then ONE
+    (seed, node)-keyed top-k window over candidate rows already bounded
+    by frontier×degree. The output is
     Σ_i Π_{j≤i} fanout_j rows per seed — minibatch-sized by
     construction, independent of graph size.
     """
@@ -596,8 +593,7 @@ def sample_neighbors(
     for layer, fanout in enumerate(fanouts, start=1):
         if n == 0:
             break
-        f = F.broadcast(frontier) if n <= broadcast_frontier_max else frontier
-        cand = f.join(e, f["node"] == e["_s"]).select(
+        cand = frontier.join(e, frontier["node"] == e["_s"]).select(
             "seed", "node", F.col("_d").alias("nbr")
         ).distinct()
         rank_key = md5_hash60(

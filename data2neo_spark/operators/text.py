@@ -689,17 +689,14 @@ def with_bigram_lm_scores(
 
     ``model`` defaults to a model trained on ``df`` itself (self-scoring,
     what the oracle verifies); the 100 TB flow trains once on a trusted
-    reference corpus via train_bigram_lm and broadcasts it here. Shape:
-    the doc→model join is size-gated broadcast (vocab²-bounded model) with
-    a (w1, w2)-keyed shuffle fallback, then one per-doc groupBy.
+    reference corpus via train_bigram_lm and scores against it here.
+    Shape: one doc→model equi join, which Spark broadcasts while the
+    (vocab²-bounded) model is under its broadcast threshold and shuffles
+    on (w1, w2) past it, then one per-doc groupBy.
     """
     if model is None:
         model = train_bigram_lm(df, text_col=text_col, scale=scale)
-    from .dedup import _should_broadcast
-
     mside = model.select("w1", "w2", "cond_ppm", "bits")
-    if _should_broadcast(mside):
-        mside = F.broadcast(mside)
     big = _ngram_stream(df, id_col, text_col, 2)
     scored = big.join(mside, ["w1", "w2"])
     return (
@@ -929,12 +926,11 @@ def with_trigram_lm_scores(
     ``train_on``/explicit models; score the crawl). All integer
     arithmetic — hash-reproducible cross-engine.
 
-    Shape: two size-gated broadcast joins (trigram then bigram model,
-    both vocab-bounded, shuffle fallback past the gate) + one per-doc
-    groupBy. The corpus side never shuffles when both models broadcast.
+    Shape: two left joins (trigram then bigram model, both
+    vocab-bounded; Spark broadcasts each under its broadcast threshold and
+    shuffles past it) + one per-doc groupBy. The corpus side never
+    shuffles when both models broadcast.
     """
-    from .dedup import _should_broadcast
-
     base = train_on if train_on is not None else df
     if trigram_model is None:
         trigram_model = train_trigram_lm(base, text_col=text_col, scale=scale)
@@ -946,10 +942,6 @@ def with_trigram_lm_scores(
         F.col("w1").alias("w2"), F.col("w2").alias("w3"),
         F.col("cond_ppm").alias("_p2"),
     )
-    if _should_broadcast(t):
-        t = F.broadcast(t)
-    if _should_broadcast(b):
-        b = F.broadcast(b)
 
     tri = _ngram_stream(df, id_col, text_col, 3)
     scored = (

@@ -5,8 +5,8 @@ per-domain quality statistics drive the keep/drop lists).
 
 All parsing is plain Column regex/string algebra with identical Java/RE2
 semantics, so everything is value-hash oracle-able; the blocklist filter
-follows the engine's size-gate pattern (literal isin for small lists, a
-broadcast anti-join otherwise).
+inlines a list of at most ``BLOCKLIST_MAX_INLINE`` rows as an isin literal
+and anti-joins a longer one.
 
 The reference repo has no web operators — first-class training-pipeline
 extension (SURVEY.md §2 additions).
@@ -19,13 +19,17 @@ from typing import List
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..core.types import estimated_bytes
+from ..core.types import inline_values
 
 # registrable-suffix heuristic: public-suffix lists are data, not code —
 # this fixture covers the common two-label suffixes so registered_domain
 # takes THREE labels for e.g. example.co.uk (documented approximation;
 # swap in the full PSL as a broadcast table for production)
 TWO_LABEL_SUFFIXES: List[str] = ["co.uk", "com.au", "co.jp", "com.br", "co.in"]
+
+# blocklists up to this many rows inline as an isin literal (zero shuffle);
+# shared by filter_domain_blocklist and corpus.clean_corpus
+BLOCKLIST_MAX_INLINE = 10_000
 
 _HOST_RE = r"^[a-z][a-z0-9+.-]*://([^/?#]+)"
 
@@ -104,20 +108,14 @@ def filter_domain_blocklist(
     blocklist: DataFrame,
     url_col: str = "url",
     domain_col: str = "domain",
-    max_inline: int = 10_000,
 ) -> DataFrame:
-    """Drop rows whose registered domain is blocklisted. Size-gated like
-    the mention dictionary: a small blocklist inlines as an isin literal
-    (zero shuffle); a large one runs a LEFT ANTI join (broadcast by
-    Spark's own sizing, else shuffle)."""
+    """Drop rows whose registered domain is blocklisted. A blocklist of at
+    most ``BLOCKLIST_MAX_INLINE`` rows (one bounded collect counts them)
+    inlines as an isin literal (zero shuffle); a longer one runs a LEFT
+    ANTI join that Spark sizes itself (broadcast or shuffle)."""
     parts = with_url_parts(df, url_col)
-    est = estimated_bytes(blocklist)
-    if est is not None:
-        rows_small = est <= max_inline * 64
-    else:  # stats-less source: one count job decides (cheap by definition)
-        rows_small = blocklist.count() <= max_inline
-    if rows_small:
-        domains = [r[0] for r in blocklist.select(domain_col).collect()]
+    domains = inline_values(blocklist, domain_col, BLOCKLIST_MAX_INLINE)
+    if domains is not None:
         out = parts.where(
             ~F.col("registered_domain").isin(domains)
             | F.col("registered_domain").isNull()

@@ -3,8 +3,9 @@
 Stages (all DataFrame-native):
   pages (url, warc_ts, html, text, lang)
     → extract     html → text (deterministic, byte-identical per url)
-    → mention     tokenize + dictionary lookup (inlined when small, else
-                  an equi join Spark sizes itself)
+    → mention     tokenize + dictionary lookup (inlined up to
+                  ARRAY_STRATEGY_MAX_DICT rows, else an equi join Spark
+                  sizes itself)
     → link        score + canonicalize mentions to entity ids
     → materialize nodes / edges / (subj, pred, obj) triples via the same
                   merge machinery as the schema engine
@@ -21,7 +22,7 @@ from typing import List, Optional, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..core.types import estimated_bytes
+from ..core.types import inline_values
 
 # static term dictionary for the oracle-checked slice (kept in sync with
 # __spark_entry__.oracle_sql's kg_webtext_mentions)
@@ -77,11 +78,8 @@ def extract_pages(pages: DataFrame) -> DataFrame:
     )
 
 
-# dictionaries up to this size inline into the row (zero shuffle)
+# dictionaries of up to this many rows inline into the row (zero shuffle)
 ARRAY_STRATEGY_MAX_DICT = 50_000
-# rough bytes/row of a (surface, entity_id, canonical, kind) dict row, used
-# to translate the row cap into a byte cap for the stats-based decision
-_DICT_ROW_BYTES_EST = 128
 
 
 def detect_mentions(
@@ -96,31 +94,25 @@ def detect_mentions(
     input row, for batches and streams alike (no aggregation, so no state
     store). A URL crawled twice gives one row per crawl.
 
-    The dictionary's size decides how the lookup runs:
+    The dictionary's row count decides how the lookup runs (one bounded
+    collect of at most ``ARRAY_STRATEGY_MAX_DICT + 1`` surfaces):
 
-    * small (optimizer byte estimate under the inline cap) — the surface
-      set folds into the row as a literal array; mentions are found inside
+    * at most ``ARRAY_STRATEGY_MAX_DICT`` rows — the surface set folds
+      into the row as a literal array; mentions are found inside
       the scan stage with higher-order functions, then a broadcast join
       attaches entity metadata. Zero shuffle.
     * larger — each row's distinct words explode and equi-join the
-      dictionary with no driver-side collect and no plan bloat; Spark
-      broadcasts the dictionary side when its own size logic allows,
-      otherwise it shuffles.
+      dictionary with no plan bloat; Spark broadcasts the dictionary
+      side when its own size logic allows, otherwise it shuffles.
 
     ``count_hits`` counts each surface's occurrences in its row (else
     ``n_hits`` is 1). ``keep`` names the input columns carried through
     (the windowed stream carries ``warc_ts``).
     """
-    # metadata decision, not an eager count() job: the optimizer's byte
-    # estimate is free for file-backed dicts; count() only as a stats-less
-    # fallback
-    est = estimated_bytes(entity_dict)
-    if est is None:
-        est = entity_dict.count() * _DICT_ROW_BYTES_EST
+    surfaces = inline_values(entity_dict, "surface", ARRAY_STRATEGY_MAX_DICT)
     words = F.split(F.col(text_col), " ")
-    if est <= ARRAY_STRATEGY_MAX_DICT * _DICT_ROW_BYTES_EST:
-        surfaces = sorted(r[0] for r in entity_dict.select("surface").collect())
-        surf_arr = F.array(*[F.lit(s) for s in surfaces])
+    if surfaces is not None:
+        surf_arr = F.array(*[F.lit(s) for s in sorted(surfaces)])
         base = F.array_intersect(F.array_distinct(words), surf_arr)
         dict_side = F.broadcast(entity_dict)
     else:

@@ -919,21 +919,33 @@ def test_bucket_cap_components_unchanged(spark, docs):
 
 
 def test_verified_jaccard_broadcast_is_conditional(spark, docs):
-    """The pair-list broadcast hint must follow the size estimate: with the
-    session threshold forced to 1 byte nothing qualifies, so the plan may
-    not contain a broadcast exchange for the pair join."""
-    cand = dedup.minhash_lsh_candidates(docs, "doc_id", num_hashes=16, bands=8)
-    assert dedup._should_broadcast(spark.range(3)) in (True, False)
+    """The pair-list join follows the session's size rule: with the
+    threshold forced to 1 byte nothing qualifies, so the plan may not
+    contain a broadcast for the pair join; at the default threshold the
+    small pair list's join runs as a BroadcastHashJoin."""
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
-        assert not dedup._should_broadcast(cand)
         dup = dedup.minhash_lsh_duplicates(docs, "doc_id", threshold=0.5,
                                            num_hashes=16, bands=8)
         plan = dup._jdf.queryExecution().optimizedPlan().toString()
         assert "broadcast" not in plan.lower()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    dup = dedup.minhash_lsh_duplicates(docs, "doc_id", threshold=0.5,
+                                       num_hashes=16, bands=8)
+    dup.collect()
+    plan = dup._sc._jvm.PythonSQLUtils.explainString(
+        dup._jdf.queryExecution(), "formatted"
+    )
+    import re
+    final = plan.split("== Initial Plan ==")[0]
+    bhj_keys = [
+        re.search(rf"\({i}\) BroadcastHashJoin[^\n]*\nLeft keys \[1\]: \[(\w+)#",
+                  plan).group(1)
+        for i in re.findall(r"BroadcastHashJoin \w+ Build\w+ \((\d+)\)", final)
+    ]
+    assert "id_a" in bhj_keys
 
 
 def test_sample_corpus_deterministic_and_nested(spark):
