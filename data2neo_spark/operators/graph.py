@@ -18,18 +18,6 @@ from pyspark.sql import functions as F
 from . import rounds
 from .rounds import persist
 
-# pagerank's rank/degree frames and LPA's label frame broadcast up to this
-# many nodes: the one join-size gate an operator keeps. Spark's own rule
-# (size estimate <= autoBroadcastJoinThreshold, 10 MB by default) does not
-# broadcast a 1.7 M-node frame, so without the gate every round shuffles
-# the edge frame. On a generated 6 M-edge, 1.7 M-node graph (local[4]) the
-# final plans went from 12 BroadcastHashJoin to 12 SortMergeJoin
-# (pagerank) and from 2 to 0 BroadcastHashJoin (LPA). One warm pair took
-# 20.3 vs 23.7 s (pagerank) and 50.8 vs 61.0 s (LPA) with the gate vs
-# without; further pairs on the same 4 vCPU host, where a shuffle never
-# leaves the machine, did not separate the two. 16 B/node: 5 M is ~80 MB.
-NODE_BROADCAST_MAX = 5_000_000
-
 
 def pagerank(
     edges: DataFrame,
@@ -59,11 +47,11 @@ def pagerank(
     in-edges has the CONSTANT rank ``base`` every round, so that set is
     computed once before the loop and unioned in, instead of a per-round
     left join back to all nodes (r4: saves one broadcast build + one
-    join per round). When the node count is at most
-    ``NODE_BROADCAST_MAX`` the rank frame (16 bytes/node) is BROADCAST,
-    so the big edge frame is never shuffled — the only exchange per
-    round is the partial-agg groupBy(dst). Beyond that Spark picks the
-    join from its own size rule, and AQE's skew join splits hub keys.
+    join per round). Spark sizes the rank join from the filled rank cache
+    (16 bytes/node): under ``spark.sql.autoBroadcastJoinThreshold`` it
+    broadcasts the rank frame, so the edge frame never shuffles and the
+    only exchange per round is the partial-agg groupBy(dst); past it the
+    join shuffles, and AQE's skew join splits hub keys.
 
     ``checkpoint_dir`` makes a long run resumable (operators/rounds.py):
     each round's rank table is written to ``<dir>/pr_round_<i>`` and a
@@ -97,24 +85,19 @@ def pagerank(
     deg = stats.where(F.col("_outdeg") > 0).select(
         F.col("v").alias("src"), F.col("_outdeg").alias("deg")
     )
-    if n <= NODE_BROADCAST_MAX:
-        # same gate as the per-round rank broadcast (deg is strictly
-        # smaller than the rank frame): avoids a sort-merge join just to
-        # attach degrees to the edge frame
-        deg = F.broadcast(deg)
     ed = persist(e.join(deg, "src"))
     base = (scale * (damping_den - damping_num)) // (damping_den * n)
     # each round materializes (persist + count) before the next round's
-    # broadcast build references it — a fully-lazy recurrence would
-    # re-execute every prior round inside each broadcast build (measured
-    # 36 s vs 14 s on the bench graph): broadcast builds don't share work
-    # with the probe side, so the barrier per round is load-bearing
+    # join references it — a fully-lazy recurrence would re-execute every
+    # prior round inside each broadcast build (measured 36 s vs 14 s on the
+    # bench graph): broadcast builds don't share work with the probe side,
+    # and a filled cache gives Spark the rank frame's real size, so the
+    # barrier per round is load-bearing
     done, pr = rounds.resume(
         edges.sparkSession, checkpoint_dir, "pr_round", iters
     ) or (-1, persist(
         nodes.withColumn("pr", F.lit(scale // n).cast("long"))
     ))
-    bcast = (lambda d: F.broadcast(d)) if n <= NODE_BROADCAST_MAX else (lambda d: d)
     # nodes with no incoming edge keep the constant rank `base` in every
     # round — that set falls out of the shared stats aggregate (a node
     # never tagged as dst), no extra anti join
@@ -124,7 +107,7 @@ def pagerank(
     )
     for i in range(done + 1, iters):
         contrib = (
-            ed.join(bcast(pr.withColumnRenamed("v", "src")), "src")
+            ed.join(pr.withColumnRenamed("v", "src"), "src")
             .withColumn("c", F.expr("pr div deg"))
             .groupBy("dst")
             .agg(F.sum("c").alias("inc"))
@@ -410,8 +393,9 @@ def label_propagation(
     into separate communities.
 
     Shape per round: one join of the (node, nbr) adjacency with the
-    label frame — label frame broadcasts up to ``NODE_BROADCAST_MAX``
-    rows so the adjacency never shuffles — then ONE per-node
+    label frame — Spark sizes it from the filled label cache and
+    broadcasts the labels under ``spark.sql.autoBroadcastJoinThreshold``,
+    so the adjacency never shuffles — then ONE per-node
     ``mode(label, deterministic=True)`` aggregate (most frequent label,
     smallest on ties), partial-agg friendly: one shuffle per round.
     A round reads the previous labels twice (vote join and carry-over
@@ -428,7 +412,7 @@ def label_propagation(
     nb = persist(nb)
     nodes = nb.select("node").distinct()
     labels = persist(nodes.select("node", F.col("node").alias("label")))
-    n_nodes = labels.count()
+    labels.count()  # filled, so Spark sizes round 0's label join exactly
     resumed = rounds.resume(edges.sparkSession, checkpoint_dir, "lpa_round", iters)
     done = -1
     if resumed:
@@ -436,8 +420,6 @@ def label_propagation(
         done, labels = resumed
     for i in range(done + 1, iters):
         lbl = labels.select(F.col("node").alias("nbr"), F.col("label"))
-        if n_nodes <= NODE_BROADCAST_MAX:
-            lbl = F.broadcast(lbl)
         top = nb.join(lbl, "nbr").groupBy("node").agg(
             F.mode("label", deterministic=True).alias("_new")
         )

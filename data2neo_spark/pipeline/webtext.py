@@ -17,7 +17,7 @@ verify it value-for-value.
 
 from __future__ import annotations
 
-from typing import List, Optional, Tuple
+from typing import Callable, List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -82,6 +82,76 @@ def extract_pages(pages: DataFrame) -> DataFrame:
 ARRAY_STRATEGY_MAX_DICT = 50_000
 
 
+def mention_detector(entity_dict: DataFrame) -> Callable[..., DataFrame]:
+    """Decide once how ``entity_dict`` is looked up and return
+    ``detect(docs, text_col="text", count_hits=True, keep=("url",))``,
+    which finds the mentions with that lookup: one row per distinct
+    mentioned surface per input row, (*keep, surface, entity_id,
+    canonical, kind, n_hits), for batches and streams alike (no
+    aggregation, so no state store). A URL crawled twice gives one row per
+    crawl.
+
+    The dictionary's row count decides the lookup (one bounded collect of
+    at most ``ARRAY_STRATEGY_MAX_DICT + 1`` surfaces, here and not per
+    call of ``detect``, so a stream's micro-batches pay it once):
+
+    * at most ``ARRAY_STRATEGY_MAX_DICT`` rows — the surface set folds
+      into the row as a literal array; mentions are found inside
+      the scan stage with higher-order functions, then a join attaches
+      entity metadata. Only those surfaces reach the join.
+    * larger — each row's distinct words explode and equi-join the
+      dictionary with no plan bloat.
+
+    Spark sizes the metadata join either way: it broadcasts the
+    dictionary under ``spark.sql.autoBroadcastJoinThreshold`` (zero
+    shuffle), otherwise it shuffles.
+
+    ``count_hits`` counts each surface's occurrences in its row (else
+    ``n_hits`` is 1). ``keep`` names the input columns carried through
+    (the windowed stream carries ``warc_ts``).
+    """
+    surfaces = inline_values(entity_dict, "surface", ARRAY_STRATEGY_MAX_DICT)
+    surf_arr = (None if surfaces is None
+                else F.array(*[F.lit(s) for s in sorted(surfaces)]))
+
+    def detect(
+        docs: DataFrame,
+        text_col: str = "text",
+        count_hits: bool = True,
+        keep: Tuple[str, ...] = ("url",),
+    ) -> DataFrame:
+        words = F.split(F.col(text_col), " ")
+        base = F.array_distinct(words)
+        if surf_arr is not None:
+            base = F.array_intersect(base, surf_arr)
+        # CAREFUL with expression duplication: whole-stage codegen does not
+        # CSE across a Filter + Project of the same array expression (lambda
+        # exprs disable subexpression elimination), so the mention array
+        # feeds ONE generator directly — explode of an empty array emits no
+        # rows
+        if count_hits:
+            exploded = docs.select(
+                *keep,
+                F.explode(
+                    F.transform(base, lambda m: F.struct(
+                        m.alias("surface"),
+                        F.size(F.filter(words, lambda w: w == m))
+                        .cast("long").alias("n_hits"),
+                    ))
+                ).alias("_m"),
+            ).select(*keep, F.col("_m.surface").alias("surface"),
+                     F.col("_m.n_hits").alias("n_hits"))
+        else:
+            exploded = docs.select(
+                *keep, F.explode(base).alias("surface")
+            ).withColumn("n_hits", F.lit(1).cast("long"))
+        return exploded.join(entity_dict, "surface").select(
+            *keep, "surface", "entity_id", "canonical", "kind", "n_hits"
+        )
+
+    return detect
+
+
 def detect_mentions(
     docs: DataFrame,
     entity_dict: DataFrame,
@@ -89,58 +159,9 @@ def detect_mentions(
     count_hits: bool = True,
     keep: Tuple[str, ...] = ("url",),
 ) -> DataFrame:
-    """Tokenize + dictionary lookup → (*keep, surface, entity_id,
-    canonical, kind, n_hits): one row per distinct mentioned surface per
-    input row, for batches and streams alike (no aggregation, so no state
-    store). A URL crawled twice gives one row per crawl.
-
-    The dictionary's row count decides how the lookup runs (one bounded
-    collect of at most ``ARRAY_STRATEGY_MAX_DICT + 1`` surfaces):
-
-    * at most ``ARRAY_STRATEGY_MAX_DICT`` rows — the surface set folds
-      into the row as a literal array; mentions are found inside
-      the scan stage with higher-order functions, then a broadcast join
-      attaches entity metadata. Zero shuffle.
-    * larger — each row's distinct words explode and equi-join the
-      dictionary with no plan bloat; Spark broadcasts the dictionary
-      side when its own size logic allows, otherwise it shuffles.
-
-    ``count_hits`` counts each surface's occurrences in its row (else
-    ``n_hits`` is 1). ``keep`` names the input columns carried through
-    (the windowed stream carries ``warc_ts``).
-    """
-    surfaces = inline_values(entity_dict, "surface", ARRAY_STRATEGY_MAX_DICT)
-    words = F.split(F.col(text_col), " ")
-    if surfaces is not None:
-        surf_arr = F.array(*[F.lit(s) for s in sorted(surfaces)])
-        base = F.array_intersect(F.array_distinct(words), surf_arr)
-        dict_side = F.broadcast(entity_dict)
-    else:
-        base = F.array_distinct(words)
-        dict_side = entity_dict
-    # CAREFUL with expression duplication: whole-stage codegen does not CSE
-    # across a Filter + Project of the same array expression (lambda exprs
-    # disable subexpression elimination), so the mention array feeds ONE
-    # generator directly — explode of an empty array emits no rows
-    if count_hits:
-        exploded = docs.select(
-            *keep,
-            F.explode(
-                F.transform(base, lambda m: F.struct(
-                    m.alias("surface"),
-                    F.size(F.filter(words, lambda w: w == m))
-                    .cast("long").alias("n_hits"),
-                ))
-            ).alias("_m"),
-        ).select(*keep, F.col("_m.surface").alias("surface"),
-                 F.col("_m.n_hits").alias("n_hits"))
-    else:
-        exploded = docs.select(
-            *keep, F.explode(base).alias("surface")
-        ).withColumn("n_hits", F.lit(1).cast("long"))
-    return exploded.join(dict_side, "surface").select(
-        *keep, "surface", "entity_id", "canonical", "kind", "n_hits"
-    )
+    """Tokenize + dictionary lookup: :func:`mention_detector` of
+    ``entity_dict`` applied to ``docs``."""
+    return mention_detector(entity_dict)(docs, text_col, count_hits, keep)
 
 
 def link_entities(mentions: DataFrame, assume_unambiguous: bool = False) -> DataFrame:

@@ -19,7 +19,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..pipeline.webtext import extract_pages, detect_mentions, link_entities
+from ..pipeline.webtext import (
+    extract_pages, detect_mentions, link_entities, mention_detector)
 
 
 def stream_pages_to_triples(pages_stream: DataFrame, entity_dict: DataFrame) -> DataFrame:
@@ -81,18 +82,23 @@ def stream_pages_to_graph(
     """Incremental graph materialization: every micro-batch runs the SAME
     batch Converter against the shared GraphStore with ``run_id = batch_id``
     — merge-on-key nodes upsert, batch replays after failure are idempotent
-    (the streaming variant of the checkpoint/resume contract).
+    (the streaming variant of the checkpoint/resume contract). The
+    dictionary lookup is decided once, when the stream starts
+    (:func:`~data2neo_spark.pipeline.webtext.mention_detector`), not per
+    micro-batch.
 
     Returns the StreamingQuery; stop it to end ingestion.
     """
     from ..core.converter import Converter
+
+    detect = mention_detector(entity_dict)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         docs = extract_pages(batch_df)
         linked = link_entities(
-            detect_mentions(docs, entity_dict), assume_unambiguous=True
+            detect(docs), assume_unambiguous=True
         )
         conv_schema = schema or """
 ENTITY("pages"):

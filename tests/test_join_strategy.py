@@ -1,11 +1,12 @@
 """Who picks each operator join: Spark's planner from measured sizes, and
 one row-bounded collect for the inline-literal-or-join lookups.
 
-The graph and store joins carry no broadcast hint, so with
+The graph, store and mention joins carry no broadcast hint, so with
 ``spark.sql.autoBroadcastJoinThreshold=-1`` they plan no
 BroadcastHashJoin, and at the default threshold Spark still broadcasts
 the small filled caches. Dictionaries and blocklists inline by row
-count, not by a byte estimate that guesses a row width.
+count, not by a byte estimate that guesses a row width, and a mention
+detector decides that once, not per micro-batch.
 """
 
 import pandas as pd
@@ -13,7 +14,8 @@ import pandas as pd
 from data2neo_spark import GraphStore, Node, Relationship, release
 from data2neo_spark.operators import graph
 from data2neo_spark.operators import web as W
-from data2neo_spark.pipeline.webtext import detect_mentions
+from data2neo_spark.pipeline.webtext import detect_mentions, mention_detector
+from data2neo_spark.sources.pages import entity_dictionary
 
 
 def executed_plans(spark, make_df):
@@ -78,14 +80,19 @@ def test_blocklist_past_row_cap_plans_anti_join(spark):
 def test_graph_and_store_joins_follow_the_session_threshold(spark, shuffle_joins):
     """With autoBroadcastJoinThreshold=-1 nothing broadcasts: no operator
     hint overrides the session, not even on a labelled relationship match
-    whose node side is the whole label."""
+    whose node side is the whole label, nor on the metadata join of an
+    inlined dictionary."""
     edges, seeds = small_graph(spark)
+    docs = spark.createDataFrame(pd.DataFrame({"url": ["u1"], "text": ["ent3 x"]}))
     a, b = Node("A", id=1), Node("B", id=2)
     store = GraphStore(spark)
     store.create(a | b | Relationship(a, "to", b, id=1) | Relationship(b, "to", a, id=2))
     runs = {
         "khop": lambda: graph.khop_reachability(edges, seeds, k=3),
         "sample": lambda: graph.sample_neighbors(edges, seeds, [2, 2]),
+        "pagerank": lambda: graph.pagerank(edges, iters=2),
+        "lpa": lambda: graph.label_propagation(edges, iters=2),
+        "mentions": lambda: detect_mentions(docs, entity_dictionary(spark, 20)),
         "match": lambda: store.match_relationships(
             "to", from_node_labels=["A"], to_node_labels=["B"]),
     }
@@ -107,6 +114,39 @@ def test_khop_small_graph_joins_broadcast_at_default_threshold(spark):
     assert "BroadcastHashJoin LeftAnti" in plans
     assert "BroadcastHashJoin Inner" in plans
     assert "SortMergeJoin" not in plans
+
+
+def test_pagerank_and_lpa_small_graph_joins_broadcast_at_default_threshold(spark):
+    """Without a node-count gate, Spark still broadcasts the small filled
+    rank and label caches: no round joins by sort-merge."""
+    edges, _ = small_graph(spark)
+    for make_df in (lambda: graph.pagerank(edges, iters=2),
+                    lambda: graph.label_propagation(edges, iters=2)):
+        plans = executed_plans(spark, make_df)
+        assert "BroadcastHashJoin" in plans
+        assert "SortMergeJoin" not in plans
+
+
+def test_mention_detector_decides_once(spark):
+    """The bounded collect runs when the detector is made; detecting
+    mentions on each new batch runs no job, inline or join path."""
+    sc = spark.sparkContext
+    docs = spark.createDataFrame(pd.DataFrame({"url": ["u1"], "text": ["ent3 x"]}))
+    for entity_dict in (entity_dictionary(spark, 20),
+                        entity_dictionary(spark, 60_000)):
+        sc.setJobGroup("mention_detector", "decide once")
+        try:
+            before = set(sc.statusTracker().getJobIdsForGroup("mention_detector"))
+            detect = mention_detector(entity_dict)
+            made = set(sc.statusTracker().getJobIdsForGroup("mention_detector"))
+            for _ in range(3):
+                detect(docs)
+            after = set(sc.statusTracker().getJobIdsForGroup("mention_detector"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert made - before
+        assert after == made
+        assert [r["canonical"] for r in detect(docs).collect()] == ["ENT_3"]
 
 
 def test_inline_values_counts_rows(spark):
