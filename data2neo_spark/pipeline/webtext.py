@@ -5,10 +5,16 @@ Stages (all DataFrame-native):
     → extract     html → text (deterministic, byte-identical per url)
     → mention     tokenize + dictionary lookup (inlined up to
                   ARRAY_STRATEGY_MAX_DICT rows, else an equi join Spark
-                  sizes itself)
-    → link        score + canonicalize mentions to entity ids
+                  sizes itself); each surface links to the candidate the
+                  dictionary alone decides (smallest entity_id), chosen
+                  once per surface, not per mention
+    → link        score each mention (hit count × surface length)
     → materialize nodes / edges / (subj, pred, obj) triples via the same
                   merge machinery as the schema engine
+
+Batches and streams share every step: the stream functions in
+``streaming.ingest`` call the same detector, link projection, triple
+projection and :data:`PAGE_GRAPH_SCHEMA`.
 
 The small ``mention_triples`` slice runs the same shape over the driver's
 ``documents`` table with a static term dictionary so the DuckDB oracle can
@@ -91,6 +97,13 @@ def mention_detector(entity_dict: DataFrame) -> Callable[..., DataFrame]:
     aggregation, so no state store). A URL crawled twice gives one row per
     crawl.
 
+    Each surface links to one entity, its candidate with the smallest
+    ``entity_id``. Every candidate of a surface has the same hit count and
+    length in a row, so no mention can tell them apart: the winner is a
+    property of the dictionary and is picked here, on the dictionary.
+    A dictionary with no repeated surface is used as is; otherwise one
+    dictionary-sized ``groupBy("surface")`` keeps each winner.
+
     The dictionary's row count decides the lookup (one bounded collect of
     at most ``ARRAY_STRATEGY_MAX_DICT + 1`` surfaces, here and not per
     call of ``detect``, so a stream's micro-batches pay it once):
@@ -100,7 +113,8 @@ def mention_detector(entity_dict: DataFrame) -> Callable[..., DataFrame]:
       the scan stage with higher-order functions, then a join attaches
       entity metadata. Only those surfaces reach the join.
     * larger — each row's distinct words explode and equi-join the
-      dictionary with no plan bloat.
+      dictionary with no plan bloat (and the winners are always picked,
+      since no surface list was collected to show they are unique).
 
     Spark sizes the metadata join either way: it broadcasts the
     dictionary under ``spark.sql.autoBroadcastJoinThreshold`` (zero
@@ -112,7 +126,11 @@ def mention_detector(entity_dict: DataFrame) -> Callable[..., DataFrame]:
     """
     surfaces = inline_values(entity_dict, "surface", ARRAY_STRATEGY_MAX_DICT)
     surf_arr = (None if surfaces is None
-                else F.array(*[F.lit(s) for s in sorted(surfaces)]))
+                else F.array(*[F.lit(s) for s in sorted(set(surfaces))]))
+    if surfaces is None or len(set(surfaces)) < len(surfaces):
+        entity_dict = entity_dict.groupBy("surface").agg(F.min_by(
+            F.struct("entity_id", "canonical", "kind"), F.col("entity_id")
+        ).alias("_w")).select("surface", "_w.*")
 
     def detect(
         docs: DataFrame,
@@ -164,33 +182,12 @@ def detect_mentions(
     return mention_detector(entity_dict)(docs, text_col, count_hits, keep)
 
 
-def link_entities(mentions: DataFrame, assume_unambiguous: bool = False) -> DataFrame:
-    """Score + canonicalize: deterministic link score (hit count weighted by
-    surface length); best canonical per (url, surface) kept. With a 1:1
-    dictionary this is a pass-through ranking; with ambiguous surfaces the
-    window picks the max-score candidate deterministically."""
-    scored = mentions.withColumn(
+def link_entities(mentions: DataFrame) -> DataFrame:
+    """Deterministic link score of each detected mention: hit count
+    weighted by surface length. The entity was already chosen per surface
+    by :func:`mention_detector`, so this is a projection (no shuffle)."""
+    return mentions.withColumn(
         "score", F.col("n_hits") * F.length(F.col("surface"))
-    )
-    if assume_unambiguous:
-        # 1:1 surface→entity dictionary: the pick-best aggregation is an
-        # identity — skip its shuffle entirely
-        return scored
-    # max_by aggregation instead of a row_number window: no per-partition
-    # sort (a hash agg, not a sort-based window)
-    order = F.struct(F.col("score"), -F.col("entity_id"))
-    picked = scored.groupBy("url", "surface").agg(
-        F.max_by(
-            F.struct("entity_id", "canonical", "kind", "n_hits", "score"), order
-        ).alias("_best")
-    )
-    return picked.select(
-        "url", "surface",
-        F.col("_best.entity_id").alias("entity_id"),
-        F.col("_best.canonical").alias("canonical"),
-        F.col("_best.kind").alias("kind"),
-        F.col("_best.n_hits").alias("n_hits"),
-        F.col("_best.score").alias("score"),
     )
 
 
@@ -222,11 +219,12 @@ def link_entities_contextual(
 
     Shape: the dictionary (surfaces + desc vocabulary) folds into the scan
     as literal arrays — mention detection AND context extraction are
-    zero-shuffle higher-order expressions; candidates broadcast-join on
-    surface; one (doc, surface) max_by hash aggregation picks winners (no
-    sort-based window). At 100 TB the only corpus-wide movement is that
-    single partial-agg shuffle of ~1 row per mention; dictionaries too big
-    to inline take detect_mentions' dictionary join instead.
+    zero-shuffle higher-order expressions; candidates join on surface
+    (Spark sizes that join); one (doc, surface) max_by hash aggregation
+    picks winners (no sort-based window). At 100 TB the only corpus-wide
+    movement is that single partial-agg shuffle of ~1 row per mention;
+    dictionaries too big to inline take detect_mentions' dictionary join
+    instead.
     """
     rows = candidates.select("surface", "desc").collect()
     surfaces = sorted({r["surface"] for r in rows})
@@ -246,7 +244,7 @@ def link_entities_contextual(
     )
     cand = candidates.withColumn("_desc_arr", F.split(F.col("desc"), " "))
     scored = mentions.join(
-        F.broadcast(cand.select("surface", "entity_id", "canonical", "prior", "_desc_arr")),
+        cand.select("surface", "entity_id", "canonical", "prior", "_desc_arr"),
         "surface",
     ).withColumn(
         "score",
@@ -270,35 +268,25 @@ def link_entities_contextual(
 
 
 def pages_to_triples(pages: DataFrame, entity_dict: DataFrame) -> DataFrame:
-    """Full pipeline: extract → detect → link → (subj, pred, obj) triples."""
-    docs = extract_pages(pages)
-    # one tiny driver-side job: an unambiguous dictionary lets the link
-    # stage skip its pick-best shuffle
-    unambiguous = (
-        entity_dict.groupBy("surface").count().where(F.col("count") > 1).isEmpty()
-    )
-    linked = link_entities(
-        detect_mentions(docs, entity_dict), assume_unambiguous=unambiguous
-    )
-    return linked.select(
+    """Full pipeline: extract → detect → (subj, pred, obj) triples, one per
+    linked surface per page row. Works unchanged on a streaming ``pages``
+    (:func:`~data2neo_spark.streaming.stream_pages_to_triples`)."""
+    mentions = detect_mentions(extract_pages(pages), entity_dict, count_hits=False)
+    return mentions.select(
         F.concat(F.lit("Page:"), F.col("url")).alias("subj"),
         F.lit("MENTIONS").alias("pred"),
         F.concat(F.lit("Entity:"), F.col("canonical")).alias("obj"),
     )
 
 
-def pages_to_graph(pages: DataFrame, entity_dict: DataFrame, store):
-    """Materialize the full node/edge graph through the schema engine: Page
-    nodes, Entity nodes (merged on canonical — the IDStore-as-keyed-DataFrame
-    path), MENTIONS edges with n_hits/score props."""
-    from ..core.converter import Converter
-
-    docs = extract_pages(pages)
-    # the Converter auto-persists shuffle-derived sources feeding rel rules
-    # (freezes row ids across passes and saves the recompute), so no manual
-    # persist is needed here
-    linked = link_entities(detect_mentions(docs, entity_dict))
-    schema = """
+# Page nodes, Entity nodes (merged on canonical — the IDStore-as-keyed-
+# DataFrame path) and MENTIONS edges with n_hits/score props; the default
+# of streaming.stream_pages_to_graph(schema=) too.
+# The '+ surface' primary key makes the edge identity content-based
+# (src, type, dst, surface): a URL crawled twice merges into one edge per
+# surface whose properties come from the later row, as Page.lang does, and
+# re-runs and replayed micro-batches are idempotent.
+PAGE_GRAPH_SCHEMA = """
 ENTITY("pages"):
     NODE("Page") page:
         + url = pages.url
@@ -313,9 +301,24 @@ ENTITY("mentions"):
         - n_hits = INT(mentions.n_hits)
         - score = INT(mentions.score)
 """
-    # NOTE: the '+ surface' primary key makes the edge identity content-based
-    # (src, type, dst, surface) — required because `mentions` is a derived
-    # (shuffled) DataFrame whose row order is not execution-stable, so
-    # CREATE-mode surrogate ids would not be idempotent across resumes.
-    conv = Converter(schema, [("pages", docs), ("mentions", linked)], store=store)
-    return conv(pages.sparkSession)
+
+
+def _convert_pages(docs: DataFrame, detect: Callable[..., DataFrame], store,
+                   schema: str = PAGE_GRAPH_SCHEMA, run_id: int = 0):
+    """Run the Converter over extracted ``docs`` and their linked mentions
+    (``link_entities(detect(docs))``) into ``store`` — the one graph step
+    of :func:`pages_to_graph` and each micro-batch of
+    :func:`~data2neo_spark.streaming.stream_pages_to_graph`."""
+    from ..core.converter import Converter
+
+    # no persist needed: the Converter persists a source itself when a
+    # shuffle feeds it (an ambiguous dictionary's winner pick, a shuffled
+    # dictionary join), which freezes its row ids across the two passes
+    sources = [("pages", docs), ("mentions", link_entities(detect(docs)))]
+    return Converter(schema, sources, store=store, run_id=run_id)(docs.sparkSession)
+
+
+def pages_to_graph(pages: DataFrame, entity_dict: DataFrame, store):
+    """Materialize the full node/edge graph (:data:`PAGE_GRAPH_SCHEMA`)
+    through the schema engine."""
+    return _convert_pages(extract_pages(pages), mention_detector(entity_dict), store)

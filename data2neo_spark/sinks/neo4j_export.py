@@ -130,47 +130,41 @@ def write_admin_import_csvs(store, out_dir: str) -> dict:
 
     Returns {file: row_count}. Partitioned parquet→csv writes; one directory
     per label/type (Spark writes part files — neo4j-admin accepts globs).
+    One aggregate per table finds the labels/types and their row counts,
+    then one write per file.
     """
     os.makedirs(out_dir, exist_ok=True)
     written = {}
     meta = set(L.NODE_META)
     nodes = store.nodes
-    plabels = [r[0] for r in nodes.select(L.PLABEL).distinct().collect()]
     prop_fields = [f.name for f in nodes.schema.fields if f.name not in meta]
-    for lbl in plabels:
-        sub = nodes.where(F.col(L.PLABEL) == lbl)
-        # node table is wide across all labels — drop properties this label
-        # never uses so the CSV doesn't import empty-string properties
-        nonnull = sub.select(
-            *[F.count(F.col(p)).alias(p) for p in prop_fields]
-        ).collect()[0].asDict() if prop_fields else {}
-        cols = [F.col(L.UID).cast("string").alias(":ID")]
-        cols.append(
-            F.concat_ws(";", F.col(L.LABELS)).alias(":LABEL")
-        )
-        for p in prop_fields:
-            if nonnull.get(p, 0) > 0:
-                cols.append(F.col(p).alias(p))
+    # node table is wide across all labels — each label's row also counts
+    # the properties it sets, so its CSV drops the ones it never uses (no
+    # empty-string properties on import)
+    per_label = nodes.groupBy(L.PLABEL).agg(
+        F.count(F.lit(1)), *[F.count(F.col(p)) for p in prop_fields]
+    ).collect()
+    for lbl, n, *used in per_label:
+        cols = [
+            F.col(L.UID).cast("string").alias(":ID"),
+            F.concat_ws(";", F.col(L.LABELS)).alias(":LABEL"),
+        ] + [F.col(p) for p, k in zip(prop_fields, used) if k > 0]
         path = os.path.join(out_dir, f"nodes_{lbl}")
-        sub.select(*cols).write.mode("overwrite").option("header", True).csv(path)
-        written[f"nodes_{lbl}"] = sub.count()
+        nodes.where(F.col(L.PLABEL) == lbl).select(*cols) \
+            .write.mode("overwrite").option("header", True).csv(path)
+        written[f"nodes_{lbl}"] = n
     if store.edges is not None:
         emeta = set(L.EDGE_META)
         edges = store.edges
-        types = [r[0] for r in edges.select(L.RELTYPE).distinct().collect()]
-        for t in types:
-            sub = edges.where(F.col(L.RELTYPE) == t)
-            cols = [
-                F.col(L.SRC_UID).cast("string").alias(":START_ID"),
-                F.col(L.DST_UID).cast("string").alias(":END_ID"),
-                F.col(L.RELTYPE).alias(":TYPE"),
-            ]
-            for field in edges.schema.fields:
-                if field.name in emeta:
-                    continue
-                cols.append(F.col(field.name).alias(field.name))
+        cols = [
+            F.col(L.SRC_UID).cast("string").alias(":START_ID"),
+            F.col(L.DST_UID).cast("string").alias(":END_ID"),
+            F.col(L.RELTYPE).alias(":TYPE"),
+        ] + [F.col(f.name) for f in edges.schema.fields if f.name not in emeta]
+        for t, n in edges.groupBy(L.RELTYPE).count().collect():
             safe = re.sub(r"\W+", "_", t)
             path = os.path.join(out_dir, f"rels_{safe}")
-            sub.select(*cols).write.mode("overwrite").option("header", True).csv(path)
-            written[f"rels_{safe}"] = sub.count()
+            edges.where(F.col(L.RELTYPE) == t).select(*cols) \
+                .write.mode("overwrite").option("header", True).csv(path)
+            written[f"rels_{safe}"] = n
     return written

@@ -20,24 +20,20 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..pipeline.webtext import (
-    extract_pages, detect_mentions, link_entities, mention_detector)
+    PAGE_GRAPH_SCHEMA, _convert_pages, detect_mentions, extract_pages,
+    mention_detector, pages_to_triples)
 
 
 def stream_pages_to_triples(pages_stream: DataFrame, entity_dict: DataFrame) -> DataFrame:
     """Streaming pages → (subj, pred, obj) triples.
 
     Stateless (no state store): every micro-batch is a pure map + a
-    stream-static dict lookup, the batch path's
-    :func:`~data2neo_spark.pipeline.webtext.detect_mentions`. The caller
-    picks the sink (``writeStream.format("parquet"|"memory")...``).
+    stream-static dict lookup — the batch
+    :func:`~data2neo_spark.pipeline.webtext.pages_to_triples` itself, so
+    both link each surface the same way. The caller picks the sink
+    (``writeStream.format("parquet"|"memory")...``).
     """
-    docs = extract_pages(pages_stream)
-    mentions = detect_mentions(docs, entity_dict, count_hits=False)
-    return mentions.select(
-        F.concat(F.lit("Page:"), F.col("url")).alias("subj"),
-        F.lit("MENTIONS").alias("pred"),
-        F.concat(F.lit("Entity:"), F.col("canonical")).alias("obj"),
-    )
+    return pages_to_triples(pages_stream, entity_dict)
 
 
 def stream_windowed_mention_counts(
@@ -49,7 +45,7 @@ def stream_windowed_mention_counts(
     """Tumbling-window per-entity mention counts with a watermark on the
     crawl timestamp — late pages beyond the watermark are dropped, state is
     bounded (the 100 TB requirement: state size ∝ entities × open windows,
-    not corpus size)."""
+    not corpus size). Each mention counts once, for its linked entity."""
     docs = pages_stream.select("url", "warc_ts", "text").withWatermark(
         "warc_ts", watermark
     )
@@ -77,49 +73,26 @@ def stream_pages_to_graph(
     pages_stream: DataFrame,
     entity_dict: DataFrame,
     store,
-    schema: str = None,
+    schema: str = PAGE_GRAPH_SCHEMA,
 ):
-    """Incremental graph materialization: every micro-batch runs the SAME
-    batch Converter against the shared GraphStore with ``run_id = batch_id``
-    — merge-on-key nodes upsert, batch replays after failure are idempotent
-    (the streaming variant of the checkpoint/resume contract). The
-    dictionary lookup is decided once, when the stream starts
-    (:func:`~data2neo_spark.pipeline.webtext.mention_detector`), not per
-    micro-batch.
+    """Incremental graph materialization: every micro-batch runs the batch
+    :func:`~data2neo_spark.pipeline.webtext.pages_to_graph` step (same
+    detection, linking and schema) against the shared GraphStore with
+    ``run_id = batch_id`` — merge-on-key nodes upsert, batch replays after
+    failure are idempotent (the streaming variant of the checkpoint/resume
+    contract). The dictionary lookup is decided once, when the stream
+    starts (:func:`~data2neo_spark.pipeline.webtext.mention_detector`),
+    not per micro-batch.
 
     Returns the StreamingQuery; stop it to end ingestion.
     """
-    from ..core.converter import Converter
-
     detect = mention_detector(entity_dict)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        docs = extract_pages(batch_df)
-        linked = link_entities(
-            detect(docs), assume_unambiguous=True
-        )
-        conv_schema = schema or """
-ENTITY("pages"):
-    NODE("Page") page:
-        + url = pages.url
-        - lang = pages.lang
-
-ENTITY("mentions"):
-    NODE("Entity") ent:
-        + canonical = mentions.canonical
-        - kind = mentions.kind
-    RELATIONSHIP(MATCH("Page", url = mentions.url), "MENTIONS", ent):
-        + surface = mentions.surface
-        - n_hits = INT(mentions.n_hits)
-"""
-        Converter(
-            conv_schema,
-            [("pages", docs), ("mentions", linked)],
-            store=store,
-            run_id=int(batch_id),
-        )(batch_df.sparkSession)
+        _convert_pages(extract_pages(batch_df), detect, store, schema,
+                       run_id=int(batch_id))
 
     return (
         pages_stream.writeStream.foreachBatch(_process)

@@ -64,6 +64,15 @@ def test_admin_import_csvs(spark, store, tmp_path):
     csv = glob.glob(os.path.join(out, "nodes_Person", "*.csv"))[0]
     header = open(csv).readline().strip()
     assert ":ID" in header and ":LABEL" in header and "name" in header
+    # a label's file carries only the properties that label sets
+    assert "city" not in header.split(",")
+    city = glob.glob(os.path.join(out, "nodes_City", "*.csv"))[0]
+    assert open(city).readline().strip() == ":ID,:LABEL,city"
+    for name, n in written.items():
+        rows = sum(not line.startswith(":")  # each part file's header
+                   for f in glob.glob(os.path.join(out, name, "*.csv"))
+                   for line in open(f))
+        assert rows == n, name
 
 
 def test_push_pull(spark, store):

@@ -160,6 +160,88 @@ def test_stream_pages_to_graph(spark, pages_dir, tmp_path):
     pages_to_graph(spark.read.parquet(pages_dir), edict, batch_store)
     assert store.nodes.count() == batch_store.nodes.count()
     assert store.edges.count() == batch_store.edges.count()
+    assert store.edges.columns == batch_store.edges.columns
+    assert _edge_set(store, "_src_uid", "_dst_uid") == \
+        _edge_set(batch_store, "_src_uid", "_dst_uid")
+
+
+def _edge_set(store, *cols):
+    return {tuple(r) for r in store.edges.select(*cols, "surface").collect()}
+
+
+# "spark" names two entities; each surface links to its smallest entity_id
+AMBIGUOUS_DICT = pd.DataFrame({
+    "surface": ["spark", "spark", "join"], "entity_id": [2, 1, 3],
+    "canonical": ["SPARK_B", "SPARK_A", "JOIN"], "kind": ["t", "t", "t"],
+})
+
+
+@pytest.fixture(scope="module")
+def ambiguous_dir(spark, tmp_path_factory):
+    """Three single-file page batches with unique URLs."""
+    d = str(tmp_path_factory.mktemp("ambiguous_pages"))
+    texts = ["spark spark join", "spark", "join", "spark join spark spark",
+             "other words", "join join"]
+    pdf = pd.DataFrame({
+        "url": [f"https://p{i}" for i in range(len(texts))],
+        "warc_ts": pd.to_datetime("2024-01-01") + pd.to_timedelta(range(len(texts)), "s"),
+        "html": [f"<html><body>{t}</body></html>".encode() for t in texts],
+        "text": texts,
+        "lang": ["en"] * len(texts),
+    })
+    for i in (0, 2, 4):  # one file per micro-batch
+        spark.createDataFrame(pdf.iloc[i:i + 2]).coalesce(1) \
+            .write.mode("append").parquet(d)
+    return d
+
+
+def test_ambiguous_dictionary_triples_parity(spark, ambiguous_dir):
+    """Batch and stream triples agree on an ambiguous dictionary, and
+    every surface links to its smallest entity_id."""
+    from data2neo_spark.pipeline.webtext import pages_to_triples
+
+    edict = spark.createDataFrame(AMBIGUOUS_DICT)
+    pages = spark.read.parquet(ambiguous_dir)
+    stream = spark.readStream.schema(pages.schema).parquet(ambiguous_dir)
+    q = (stream_pages_to_triples(stream, edict).writeStream.format("memory")
+         .queryName("ambiguous_triples").outputMode("append").start())
+    try:
+        q.processAllAvailable()
+        got = {tuple(r) for r in spark.sql("SELECT * FROM ambiguous_triples").collect()}
+    finally:
+        q.stop()
+    want = {(f"Page:{r['url']}", "MENTIONS", f"Entity:{e}")
+            for r in pages.collect() for w, e in (("spark", "SPARK_A"), ("join", "JOIN"))
+            if w in r["text"].split(" ")}
+    assert {tuple(r) for r in pages_to_triples(pages, edict).collect()} == got == want
+
+
+def test_ambiguous_dictionary_graph_parity(spark, ambiguous_dir, tmp_path):
+    """Batch and stream graphs agree on an ambiguous dictionary: the same
+    (entity, surface) edges with the same properties, score included."""
+    from data2neo_spark import GraphStore
+    from data2neo_spark.pipeline.webtext import pages_to_graph
+    from data2neo_spark.streaming import stream_pages_to_graph
+
+    edict = spark.createDataFrame(AMBIGUOUS_DICT)
+    pages = spark.read.parquet(ambiguous_dir)
+    stream = (spark.readStream.schema(pages.schema)
+              .option("maxFilesPerTrigger", 1).parquet(ambiguous_dir))
+    store = GraphStore(spark, path=str(tmp_path / "stream_store"))
+    q = stream_pages_to_graph(stream, edict, store)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    batch_store = pages_to_graph(pages, edict, GraphStore(spark))
+
+    props = [c for c in batch_store.edges.columns if not c.startswith("_")]
+    assert [c for c in store.edges.columns if not c.startswith("_")] == props
+    assert "score" in props
+    assert _edge_set(store, "_dst_key") == _edge_set(batch_store, "_dst_key") == {
+        ("SPARK_A", "spark"), ("JOIN", "join")}
+    assert _edge_set(store, "_src_key", "_dst_key", "n_hits", "score") == \
+        _edge_set(batch_store, "_src_key", "_dst_key", "n_hits", "score")
 
 
 def test_large_dict_uses_join_not_inline(spark):

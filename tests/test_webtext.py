@@ -131,3 +131,31 @@ def test_pages_to_graph(spark, pages, edict):
     pages_to_graph(pages, edict, store)
     assert store.match_nodes("Page").count() == N_PAGES
     assert store.match_relationships("MENTIONS").count() == edges.count()
+
+
+def test_recrawled_url_takes_later_row(spark):
+    """A URL crawled twice: the triples keep one row per crawl, and the
+    graph merges each surface's edge like Page.lang — the later row in
+    source order sets n_hits and score."""
+    texts = ["spark spark join", "spark"]
+    pages = spark.createDataFrame(pd.DataFrame({
+        "url": ["u1", "u1"],
+        "html": [f"<html><body>{t}</body></html>".encode() for t in texts],
+        "lang": ["en", "de"],
+        "warc_ts": pd.to_datetime(["2024-01-01", "2024-01-02"]),
+    })).coalesce(1)
+    d = spark.createDataFrame(pd.DataFrame({
+        "surface": ["spark", "join"], "entity_id": [1, 2],
+        "canonical": ["SPARK", "JOIN"], "kind": ["t", "t"],
+    }))
+    assert sorted(tuple(r) for r in pages_to_triples(pages, d).collect()) == [
+        ("Page:u1", "MENTIONS", "Entity:JOIN"),
+        ("Page:u1", "MENTIONS", "Entity:SPARK"),
+        ("Page:u1", "MENTIONS", "Entity:SPARK"),
+    ]
+    store = pages_to_graph(pages, d, GraphStore(spark))
+    assert [r["lang"] for r in store.match_nodes("Page").collect()] == ["de"]
+    edges = store.match_relationships("MENTIONS").select("surface", "n_hits", "score")
+    assert sorted(tuple(r) for r in edges.collect()) == [
+        ("join", 1, 4), ("spark", 1, 5),
+    ]
