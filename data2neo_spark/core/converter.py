@@ -350,7 +350,6 @@ class Converter:
         dyn_edge_parts: List[DataFrame] = []
         enriched: List[Tuple[str, DataFrame]] = []
         null_pk_obs: List[Tuple[str, object]] = []
-        _KEEP = "_sg_keep"
         for etype, df in sources:
             rules = self.schema.entities.get(etype)
             if rules is None:
@@ -359,6 +358,12 @@ class Converter:
             current = df
             if etype in self.schema.node_mask and not skip_nodes:
                 for rule in rules.node_rules:
+                    # preprocessor mutations persist for later rules + pass 2;
+                    # the identifier (supplies) columns are derived HERE, from
+                    # the row state this rule saw — a later rule mutating its
+                    # pk input must not skew the supply uid, and rows whose
+                    # node was never created carry a NULL uid (no edge in
+                    # pass 2)
                     if dyn.needs_dynamic(rule):
                         long_df = dyn.lower_node_rule_dynamic(current, rule).persist()
                         self._persisted.append(long_df)
@@ -368,27 +373,22 @@ class Converter:
                         node_merge_flags.append(True)
                         if extra_edges is not None:
                             dyn_edge_parts.append(extra_edges)
+                        current = L.propagate_sg_pre_mutations(current, rule.wrappers)
+                        if rule.identifier is not None:
+                            # the supply is the node the wrapper built,
+                            # joined back on the row sequence
+                            current = current.join(dyn.supplies(long_df, rule),
+                                                   [L.SEQ_SRC, L.SEQ_ROW], "left")
                     else:
                         node_parts.append(
                             L.lower_node_rule(current, rule, observations=null_pk_obs)
                         )
                         node_merge_flags.append(rule.primary_key is not None)
-                    # preprocessor mutations persist for later rules + pass 2;
-                    # the identifier (supplies) columns are derived HERE, from
-                    # the same row state lower_node_rule saw — a later rule
-                    # mutating this rule's pk input must not skew the supply
-                    # uid, and rows this rule's preprocessor dropped carry a
-                    # NULL uid (no node was created → no edge in pass 2)
-                    if rule.identifier is not None and L.has_sg_pre(rule.wrappers):
+                        keep = L.SG_KEEP if rule.identifier is not None else None
                         current = L.propagate_sg_pre_mutations(
-                            current, rule.wrappers, keep_col=_KEEP
+                            current, rule.wrappers, keep_col=keep
                         )
-                        current = L.attach_identifier_columns(
-                            current, rule, keep_col=_KEEP
-                        ).drop(_KEEP)
-                    else:
-                        current = L.propagate_sg_pre_mutations(current, rule.wrappers)
-                        current = L.attach_identifier_columns(current, rule)
+                        current = L.attach_identifier_columns(current, rule, keep_col=keep)
                 enriched.append((etype, current))
             else:
                 # nodes skipped this phase (skip_nodes / masked): supplies

@@ -387,10 +387,8 @@ class GraphStore:
             })
         ndf = self._rows_frame(node_rows, "_local long, _labels_l array<string>, "
                                "_plabel_l string, _pk_prop_l string, _pk_val_l string")
-        uid = F.when(
-            F.col("_pk_val_l").isNotNull(),
-            F.xxhash64(F.col("_plabel_l"), F.col("_pk_prop_l"), F.col("_pk_val_l")),
-        ).otherwise(F.xxhash64(F.lit(nonce), F.col("_local")))
+        uid = L.node_uid(F.col("_plabel_l"), F.col("_pk_prop_l"), F.col("_pk_val_l"),
+                         [F.lit(nonce), F.col("_local")])
         prop_cols = [c for c in ndf.columns
                      if c not in ("_local", "_labels_l", "_plabel_l",
                                   "_pk_prop_l", "_pk_val_l")]
@@ -434,14 +432,9 @@ class GraphStore:
         edf = self._rows_frame(edge_rows, "_j long, _su long, _type string, _du long, "
                                "_sl string, _sk string, _dl string, _dk string, "
                                "_pk string, _ghost boolean, _pkval string")
-        eid = (
-            F.when(F.col("_pk").isNotNull(),
-                   F.xxhash64(F.col("_su"), F.col("_type"), F.col("_du"),
-                              F.col("_pk"), F.col("_pkval")))
-            .when(F.col("_ghost"),
-                  F.xxhash64(F.col("_su"), F.col("_type"), F.col("_du")))
-            .otherwise(F.xxhash64(F.lit(nonce + "e"), F.col("_j")))
-        )
+        eid = L.edge_id(F.col("_su"), F.col("_type"), F.col("_du"), F.col("_pk"),
+                        F.col("_pkval"), F.col("_ghost"),
+                        [F.lit(nonce + "e"), F.col("_j")])
         eprops = [c for c in edf.columns
                   if c not in ("_j", "_su", "_type", "_du", "_sl", "_sk",
                                "_dl", "_dk", "_pk", "_ghost", "_pkval")]

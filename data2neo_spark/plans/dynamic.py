@@ -210,12 +210,25 @@ def _typed_props(df: DataFrame, json_col: str) -> Tuple[DataFrame, List[str]]:
 
 
 def _node_uid(rule_id: str):
-    return F.when(
-        F.col("pkval").isNotNull(),
-        F.xxhash64(F.col("plabel"), F.col("pkprop"), F.col("pkval")),
-    ).otherwise(
-        F.xxhash64(F.lit(rule_id + "#dyn"), F.col(L.SEQ_SRC), F.col(L.SEQ_ROW),
-                   F.col("local_idx"))
+    return L.node_uid(
+        F.col("plabel"), F.col("pkprop"), F.col("pkval"),
+        [F.lit(rule_id + "#dyn"), F.col(L.SEQ_SRC), F.col(L.SEQ_ROW),
+         F.col("local_idx")],
+    )
+
+
+def supplies(long_df: DataFrame, rule: NodeRule) -> DataFrame:
+    """The supply of a dynamic rule: per source row (SEQ_SRC, SEQ_ROW), the
+    first node its wrapper built — uid, primary label and key under the
+    identifier's columns, for the converter to left-join back onto the row
+    stream. A row whose subgraph holds no node has no supply (NULL after
+    the join), so pass 2 emits no edge for it."""
+    return long_df.filter((F.col("kind") == "n") & (F.col("local_idx") == 0)).select(
+        F.col(L.SEQ_SRC),
+        F.col(L.SEQ_ROW),
+        _node_uid(rule.rule_id).alias(L._nid(rule.identifier)),
+        F.col("plabel").alias(L._nlabel(rule.identifier)),
+        F.col("pkval").alias(L._nkey(rule.identifier)),
     )
 
 
@@ -283,17 +296,11 @@ def dynamic_to_canonical(
             pkprop_col == F.lit(p),
             python_str_column(F.col(p), joined.schema[p].dataType),
         ).otherwise(pkval_str)
-    eid = (
-        F.when(pkprop_col.isNotNull(),
-               F.xxhash64(F.col("_src_u"), F.col("rel_type"), F.col("_dst_u"),
-                          pkprop_col, pkval_str))
-        .when(F.col("ghost"),
-              F.xxhash64(F.col("_src_u"), F.col("rel_type"), F.col("_dst_u")))
-        .otherwise(
-            F.xxhash64(F.lit(rule.rule_id + "#dynrel"), F.col(L.SEQ_SRC),
-                       F.col(L.SEQ_ROW), F.col("src_local"), F.col("dst_local"),
-                       F.col("rel_type"))
-        )
+    eid = L.edge_id(
+        F.col("_src_u"), F.col("rel_type"), F.col("_dst_u"), pkprop_col,
+        pkval_str, F.col("ghost"),
+        [F.lit(rule.rule_id + "#dynrel"), F.col(L.SEQ_SRC), F.col(L.SEQ_ROW),
+         F.col("src_local"), F.col("dst_local"), F.col("rel_type")],
     )
     edges = joined.select(
         eid.alias(L.EID),

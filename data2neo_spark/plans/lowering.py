@@ -58,6 +58,9 @@ NODE_META = [UID, LABELS, PLABEL, PKPROP, PKVAL, SEQ_SRC, SEQ_ROW]
 EDGE_META = [EID, SRC_UID, RELTYPE, DST_UID, SRC_LABEL, SRC_KEY, DST_LABEL,
              DST_KEY, PKPROP, SEQ_SRC, SEQ_ROW]
 
+# per-rule "a subgraph preprocessor kept this row" flag
+SG_KEEP = "_sg_keep"
+
 
 def _nid(identifier: str) -> str:
     return f"_nid__{identifier}"
@@ -69,6 +72,35 @@ def _nlabel(identifier: str) -> str:
 
 def _nkey(identifier: str) -> str:
     return f"_nkey__{identifier}"
+
+
+def node_uid(
+    plabel: Column, pk_prop: Column, pk_val: Column,
+    create_key: Optional[List[Column]] = None,
+) -> Column:
+    """The one node-id formula: a node with a key value hashes (primary
+    label, pk property, pk value), so every writer of that node — either
+    converter path, ``GraphStore.merge`` — lands on the same uid. With no
+    key value the id is NULL, or the hash of ``create_key`` (the caller's
+    per-row namespace) for a CREATE-mode node."""
+    keyed = F.when(pk_val.isNotNull(), F.xxhash64(plabel, pk_prop, pk_val))
+    return keyed if create_key is None else keyed.otherwise(F.xxhash64(*create_key))
+
+
+def edge_id(
+    src: Column, rel_type: Column, dst: Column, pk_prop: Column,
+    pk_val: Column, ghost: Column, create_key: List[Column],
+) -> Column:
+    """The one edge-id formula: merge edges get a content hash (idempotent
+    across runs, the ``groupBy(_eid)`` dedup key) — over the pk when
+    ``pk_prop`` is set, over (src, type, dst) for a ghost pk
+    (MERGE_RELATIONSHIPS); CREATE edges hash ``create_key``, so parallel
+    relationships survive (reference A5, converter.py:183-186)."""
+    return (
+        F.when(pk_prop.isNotNull(), F.xxhash64(src, rel_type, dst, pk_prop, pk_val))
+        .when(ghost, F.xxhash64(src, rel_type, dst))
+        .otherwise(F.xxhash64(*create_key))
+    )
 
 
 def dtype_of(df: DataFrame, col: Column) -> T.DataType:
@@ -157,8 +189,7 @@ def _attr_column_pair(
         wdef = registrar.get_wrapper(w.name)
         if wdef.kind == registrar.ATTR_PRE:
             pre_fns.append((wdef.fn, w.static_args))
-        elif wdef.kind in (registrar.ATTR_POST, registrar.ATTR_POST_VEC,
-                           registrar.FULL_WRAPPER):
+        elif wdef.kind in (registrar.ATTR_POST, registrar.ATTR_POST_VEC):
             post_chain.insert(0, (wdef, w))
         else:
             raise LoweringError(
@@ -286,9 +317,8 @@ def _attr_column_pair(
             run: List[Tuple] = []
             while i < len(post_chain):
                 wdef_i, w_i = post_chain[i]
-                if wdef_i.column_compiler is None and wdef_i.kind in (
-                    registrar.ATTR_POST, registrar.FULL_WRAPPER
-                ):
+                if (wdef_i.column_compiler is None
+                        and wdef_i.kind == registrar.ATTR_POST):
                     run.append((wdef_i.fn, tuple(w_i.static_args)))
                     i += 1
                 else:
@@ -379,51 +409,21 @@ def _label_columns(rule_labels: List[AttrSpec], df: DataFrame, entity_type: str)
 def apply_subgraph_preprocessors(
     df: DataFrame, wrappers: List[WrapperApplication]
 ) -> DataFrame:
-    """Lower subgraph preprocessors (conditional row filters / row rewrites,
-    reference factory_wrappers.py:99-101) to a mapInPandas stage.
-
-    The fn receives a dict-like resource; returning None drops the row for
-    this rule. Mutations of existing columns are honored; new keys are not
-    (columnar schemas are fixed per rule — documented divergence).
-    """
-    pres = []
-    rest = []
-    for w in wrappers:
-        wdef = registrar.get_wrapper(w.name)
-        if wdef.kind == registrar.SG_PRE:
-            pres.append((wdef.fn, tuple(w.static_args)))
-        else:
-            rest.append(w)
-    if not pres:
+    """Run a rule's subgraph preprocessors (conditional row filters / row
+    rewrites, reference factory_wrappers.py:99-101) over its input: rows a
+    preprocessor drops (returns None) leave, mutations of existing columns
+    stay; new keys do not (columnar schemas are fixed per rule — documented
+    divergence)."""
+    if not _sg_pre_fns(wrappers):
         return df
-
-    col_names = [f.name for f in df.schema.fields]
-    schema = df.schema
-    gstate = _snapshot_gstate()
-
-    def _apply(batches):
-        _install_gstate(gstate)
-        for pdf in batches:
-            keep_rows = []
-            for row in pdf.to_dict("records"):
-                resource = row
-                dropped = False
-                for fn, sargs in pres:
-                    resource = fn(resource, *sargs)
-                    if resource is None:
-                        dropped = True
-                        break
-                if not dropped:
-                    keep_rows.append({c: resource.get(c) for c in col_names})
-            yield pd.DataFrame(keep_rows, columns=col_names)
-
-    return df.mapInPandas(_apply, schema=schema)
+    return (propagate_sg_pre_mutations(df, wrappers, SG_KEEP)
+            .where(F.col(SG_KEEP)).drop(SG_KEEP))
 
 
-def has_sg_pre(wrappers: List[WrapperApplication]) -> bool:
-    return any(
-        registrar.get_wrapper(w.name).kind == registrar.SG_PRE for w in wrappers
-    )
+def _sg_pre_fns(wrappers: List[WrapperApplication]) -> List[Tuple]:
+    return [(registrar.get_wrapper(w.name).fn, tuple(w.static_args))
+            for w in wrappers
+            if registrar.get_wrapper(w.name).kind == registrar.SG_PRE]
 
 
 def propagate_sg_pre_mutations(
@@ -446,11 +446,7 @@ def propagate_sg_pre_mutations(
     False for rows a preprocessor dropped (returned None) for THIS rule.
     The converter uses it to null the rule's identifier (supplies) columns so
     pass 2 never emits edges to nodes that were never created."""
-    pres = []
-    for w in wrappers:
-        wdef = registrar.get_wrapper(w.name)
-        if wdef.kind == registrar.SG_PRE:
-            pres.append((wdef.fn, tuple(w.static_args)))
+    pres = _sg_pre_fns(wrappers)
     if not pres:
         if keep_col is not None:
             return df.withColumn(keep_col, F.lit(True))
@@ -521,15 +517,7 @@ def lower_node_rule(
             f"(NODE rule in entity '{rule.entity_type}')"
         )
 
-    if pk is not None:
-        pk_col = prop_cols[pk]
-        pk_dtype = dtype_of(base, pk_col)
-        pkval = python_str_column(pk_col, pk_dtype)
-        uid = F.xxhash64(plabel, F.lit(pk), pkval)
-    else:
-        pkval = F.lit(None).cast("string")
-        uid = F.xxhash64(F.lit(rule.rule_id), F.col(SEQ_SRC), F.col(SEQ_ROW))
-
+    uid, pkval = _rule_uid(rule, base, plabel, prop_cols.get(pk))
     out = base.select(
         uid.alias(UID),
         labels_arr.alias(LABELS),
@@ -557,6 +545,20 @@ def lower_node_rule(
     return out
 
 
+def _rule_uid(
+    rule: NodeRule, df: DataFrame, plabel: Column, pk_col: Optional[Column]
+) -> Tuple[Column, Column]:
+    """(uid, pk value string) of the node a columnar NODE rule builds from
+    a row of df; a keyless rule's CREATE id is namespaced by its rule id."""
+    if rule.primary_key is None:
+        pkval = F.lit(None).cast("string")
+        create_key = [F.lit(rule.rule_id), F.col(SEQ_SRC), F.col(SEQ_ROW)]
+    else:
+        pkval = python_str_column(pk_col, dtype_of(df, pk_col))
+        create_key = None
+    return node_uid(plabel, F.lit(rule.primary_key), pkval, create_key), pkval
+
+
 def attach_identifier_columns(
     df: DataFrame, rule: NodeRule, keep_col: Optional[str] = None
 ) -> DataFrame:
@@ -572,29 +574,24 @@ def attach_identifier_columns(
     resource.py:23-27) — when the node was never created for this row:
     either the rule's subgraph preprocessor dropped the row (``keep_col`` is
     False) or a merge-mode rule saw a null primary-key value (those rows are
-    filtered out of the node table, lower_node_rule).
+    filtered out of the node table, lower_node_rule). ``keep_col`` is
+    consumed: the result no longer carries it.
+
+    Dynamic (full-wrapper) rules take their supplies from the nodes the
+    wrapper built instead (``dynamic.supplies``).
     """
     if rule.identifier is None:
         return df
-    base = df
-    label_cols = _label_columns(rule.labels, base, rule.entity_type)
-    plabel = label_cols[0]
-    pk = rule.primary_key
-    if pk is not None:
-        spec = next(s for s in rule.attributes if s.key == pk)
-        pk_col = attr_column(spec, base, rule.entity_type)
-        pkval = python_str_column(pk_col, dtype_of(base, pk_col))
-        uid = F.when(pkval.isNotNull(), F.xxhash64(plabel, F.lit(pk), pkval))
-    else:
-        pkval = F.lit(None).cast("string")
-        uid = F.xxhash64(F.lit(rule.rule_id), F.col(SEQ_SRC), F.col(SEQ_ROW))
+    plabel = _label_columns(rule.labels, df, rule.entity_type)[0]
+    pk_col = next((attr_column(s, df, rule.entity_type) for s in rule.attributes
+                   if s.key == rule.primary_key), None)
+    uid, pkval = _rule_uid(rule, df, plabel, pk_col)
     if keep_col is not None:
         uid = F.when(F.col(keep_col), uid)
-    return (
-        base.withColumn(_nid(rule.identifier), uid)
-        .withColumn(_nlabel(rule.identifier), plabel)
-        .withColumn(_nkey(rule.identifier), pkval)
-    )
+    out = df.select("*", uid.alias(_nid(rule.identifier)),
+                    plabel.alias(_nlabel(rule.identifier)),
+                    pkval.alias(_nkey(rule.identifier)))
+    return out if keep_col is None else out.drop(keep_col)
 
 
 def lower_match(
@@ -835,19 +832,14 @@ def lower_rel_rule(
             f"(RELATIONSHIP rule in entity '{rule.entity_type}')"
         )
 
-    # edge identity: merge rules get a content hash (idempotent across runs,
-    # the groupBy(_eid) dedup key); create rules get a unique per-row hash so
-    # parallel relationships survive (reference A5, converter.py:183-186)
-    if pk is not None:
-        pk_col = prop_cols[pk]
-        pkstr = python_str_column(pk_col, dtype_of(rows, pk_col))
-        eid = F.xxhash64(F.col("_from_uid"), type_col, F.col("_to_uid"),
-                         F.lit(pk), pkstr)
-    elif rule.ghost_primary_key:
-        eid = F.xxhash64(F.col("_from_uid"), type_col, F.col("_to_uid"))
-    else:
-        eid = F.xxhash64(F.lit(rule.rule_id), F.col(SEQ_SRC), F.col(SEQ_ROW),
-                         F.col("_from_uid"), F.col("_to_uid"), type_col)
+    pk_col = prop_cols.get(pk)
+    eid = edge_id(
+        F.col("_from_uid"), type_col, F.col("_to_uid"), F.lit(pk),
+        F.lit(None) if pk is None else python_str_column(pk_col, dtype_of(rows, pk_col)),
+        F.lit(rule.ghost_primary_key),
+        [F.lit(rule.rule_id), F.col(SEQ_SRC), F.col(SEQ_ROW),
+         F.col("_from_uid"), F.col("_to_uid"), type_col],
+    )
 
     return rows.select(
         eid.alias(EID),

@@ -13,7 +13,18 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from data2neo_spark import Converter, register_subgraph_preprocessor
+from data2neo_spark import (
+    Attribute,
+    AttributeFactoryWrapper,
+    Converter,
+    GraphStore,
+    Node,
+    Relationship,
+    SubgraphFactoryWrapper,
+    register_subgraph_preprocessor,
+    register_wrapper,
+)
+from data2neo_spark.plans.lowering import LoweringError
 
 
 @register_subgraph_preprocessor
@@ -191,3 +202,110 @@ ENTITY("t"):
     # same answers either way
     r1 = {(r["_src_key"], r["_dst_key"]) for r in s1.edges.collect()}
     assert r1 == r2 and len(r1) == 3
+
+
+# ---- dynamic (full-wrapper) rules: the supply is the node the wrapper built
+
+
+@register_wrapper
+class SupTag(SubgraphFactoryWrapper):
+    def construct(self, resource):
+        subgraph = super().construct(resource)
+        for node in subgraph.nodes:
+            node["tag"] = "t"
+        return subgraph
+
+
+@register_wrapper
+class SupRekey(SubgraphFactoryWrapper):
+    def construct(self, resource):
+        subgraph = super().construct(resource)
+        for node in subgraph.nodes:
+            node["name"] = node["name"].upper()
+        return subgraph
+
+
+@register_wrapper
+class SupUp(AttributeFactoryWrapper):
+    def construct(self, resource):
+        attribute = super().construct(resource)
+        return Attribute(attribute.key, attribute.value.upper())
+
+
+@pytest.mark.parametrize("node_a, keys", [
+    ('SupTag(NODE("A")) a:\n    - name = e.name', {None}),
+    ('SupRekey(NODE("A")) a:\n    + name = e.name', {"X", "Y"}),
+    ('NODE("A") a:\n    + name = SupUp(e.name)', {"X", "Y"}),
+], ids=["create_mode", "rekeying_wrapper", "attribute_full_wrapper"])
+def test_dynamic_rule_supply_is_the_built_node(spark, node_a, keys):
+    """A NODE rule on the dynamic (full-wrapper) path supplies the node its
+    wrapper built: every edge points at a stored node, and a rewritten pk
+    value is the edge's key."""
+    schema = f"""
+ENTITY("e"):
+  {node_a}
+  NODE("B") b:
+    + other = e.other
+  RELATIONSHIP(a, "R", b):
+"""
+    rows = pd.DataFrame({"name": ["x", "y"], "other": ["p", "q"]})
+    store = Converter(schema, [("e", spark.createDataFrame(rows))])(spark)
+    uids = {r["_uid"] for r in store.nodes.select("_uid").collect()}
+    edges = store.edges.collect()
+    assert len(edges) == 2
+    for e in edges:
+        assert e["_src_uid"] in uids and e["_dst_uid"] in uids
+    assert {e["_src_key"] for e in edges} == keys
+
+
+def test_skip_nodes_attribute_full_wrapper_fails_at_lowering(spark):
+    """A ``skip_nodes`` run derives supplies from the row with the columnar
+    formula, which cannot run a full attribute wrapper: lowering rejects
+    it, before any Spark job."""
+    schema = """
+ENTITY("e"):
+  NODE("A") a:
+    + name = SupUp(e.name)
+"""
+    rows = spark.createDataFrame(pd.DataFrame({"name": ["x"]}))
+    with pytest.raises(LoweringError, match="SupUp"):
+        Converter(schema, [("e", rows)])(spark, skip_nodes=True)
+
+
+# ---- one identity formula for every writer
+
+
+@register_wrapper
+class SupKeep(SubgraphFactoryWrapper):
+    pass
+
+
+def _keyed(label, pk, **props):
+    node = Node(label, **props)
+    node.set_primary_key(pk)
+    return node
+
+
+def test_every_writer_shares_the_node_and_edge_ids(spark):
+    """A columnar rule, a full-wrapper rule and ``GraphStore.merge`` that
+    each write ``Item`` with ``id=1`` leave one node; a merge-mode edge
+    written by the converter and again by ``merge`` leaves one edge."""
+    schema = """
+ENTITY("t"):
+  NODE("Item") i:
+    + id = INT(t.id)
+  SupKeep(NODE("Item")) w:
+    + id = INT(t.id)
+  NODE("Cat") c:
+    + cat = t.cat
+  MERGE_RELATIONSHIPS(RELATIONSHIP(i, "IN", c)):
+"""
+    rows = pd.DataFrame({"id": [1], "cat": ["c0"]})
+    store = GraphStore(spark)
+    Converter(schema, [("t", spark.createDataFrame(rows))], store=store)(spark)
+    assert store.match_nodes("Item").count() == 1
+    item, cat = _keyed("Item", "id", id=1), _keyed("Cat", "cat", cat="c0")
+    store.merge(item | cat | Relationship(item, "IN", cat))
+    assert store.match_nodes("Item").count() == 1
+    assert store.match_nodes("Cat").count() == 1
+    assert store.match_relationships("IN").count() == 1
